@@ -544,8 +544,14 @@ def _decode_entity_fast(buf: bytes) -> tuple:
                                     if k3 >> 3 == 1:
                                         vehicle_id = v2[p : p + l3].decode()
                                     p += l3
-                                else:
+                                elif k3 & 7 == 0:
                                     _, p = _dec_varint_at(v2, p)
+                                elif k3 & 7 == 1:
+                                    p += 8
+                                elif k3 & 7 == 5:
+                                    p += 4
+                                else:
+                                    raise ValueError("unsupported wire type")
                     elif w2 == 0:
                         val, j = _dec_varint_at(v, j)
                         if f2 == 5:
@@ -658,10 +664,24 @@ def _decode_entity_fast(buf: bytes) -> tuple:
                                                         r : r + l4
                                                     ].decode()
                                                 r += l4
-                                            else:
+                                            elif k4 & 7 == 0:
                                                 _, r = _dec_varint_at(v3, r)
-                                else:
+                                            elif k4 & 7 == 1:
+                                                r += 8
+                                            elif k4 & 7 == 5:
+                                                r += 4
+                                            else:
+                                                raise ValueError(
+                                                    "unsupported wire type"
+                                                )
+                                elif k3 & 7 == 0:
                                     _, p = _dec_varint_at(v2, p)
+                                elif k3 & 7 == 1:
+                                    p += 8
+                                elif k3 & 7 == 5:
+                                    p += 4
+                                else:
+                                    raise ValueError("unsupported wire type")
                     elif w2 == 1:
                         j += 8
                     elif w2 == 5:

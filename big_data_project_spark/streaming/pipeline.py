@@ -828,8 +828,28 @@ def materialize_hourly(
 
     foreachBatch gives exactly-once-per-batch semantics via the
     checkpoint; the upsert keys on (route_id, hour_ts) so re-processing
-    a batch converges instead of duplicating. Complete-mode output keeps
-    per-hour counts correct when one hour spans micro-batches.
+    a batch converges instead of duplicating.
+
+    Update-mode output emits only the (route, hour) groups the batch
+    changed, each carrying the group's FULL running aggregate, so the
+    keyed merge ends where a complete-mode rewrite would while touching
+    only the dates the delta names. There is no watermark: under update
+    mode one would evict state and drop events more than two hours late,
+    where the reference ingestor accepts a late row whenever it arrives.
+    State grows with the (route, hour) groups ever seen, as it did in
+    complete mode, and a checkpoint written by the complete-mode loop
+    resumes unchanged (the output mode is not part of the state schema).
+
+    Each micro-batch is persisted for the duration of its upsert:
+    ``batch_df`` is a LogicalRDD over the incremental plan, so every
+    action of the upsert (the touched-date collect, the staging write)
+    would otherwise re-run the state-store stage. The upsert runs with
+    AQE on, scoped to the call: Spark turns AQE off on the stream's
+    cloned session, which leaves the keyed merge as a full
+    shuffle-partition stage over a few rows, writing up to one small
+    file per partition and date. The persisted LogicalRDD is opaque to
+    AQE, so the state-store partitioning cannot change, and the conf is
+    restored before the next micro-batch is planned.
 
     The served table is hive-partitioned by hour_date (derived from the
     key hour_ts, so a key can never change partitions) and the upsert is
@@ -838,12 +858,11 @@ def materialize_hourly(
     ON CONFLICT upsert (ingestor.py:71-137), where a full-table rewrite
     would make the serving loop O(history) per hour at 100 TB."""
     from ..functions.portable import davg
-    from ..plans.sinks import upsert_parquet
+    from ..plans.sinks import _conf, upsert_parquet
 
     src = events_source(spark, events_dir)
     agg = (
-        src.withWatermark("ts", WATERMARK)
-        .groupBy(
+        src.groupBy(
             F.window("ts", "1 hour").alias("win"),
             F.col("event_type").alias("route_id"),
         )
@@ -860,21 +879,27 @@ def materialize_hourly(
     )
 
     def _upsert(batch_df, batch_id: int) -> None:
-        delta = batch_df.withColumn("version", F.lit(batch_id)).withColumn(
-            "hour_date", F.date_format("hour_ts", "yyyy-MM-dd")
-        )
-        upsert_parquet(
-            batch_df.sparkSession,
-            target_path,
-            delta,
-            keys=["route_id", "hour_ts"],
-            version_col="version",
-            partition_col="hour_date",
-        )
+        session = batch_df.sparkSession
+        batch_df.persist()
+        try:
+            delta = batch_df.withColumn(
+                "version", F.lit(batch_id)
+            ).withColumn("hour_date", F.date_format("hour_ts", "yyyy-MM-dd"))
+            with _conf(session, "spark.sql.adaptive.enabled", "true"):
+                upsert_parquet(
+                    session,
+                    target_path,
+                    delta,
+                    keys=["route_id", "hour_ts"],
+                    version_col="version",
+                    partition_col="hour_date",
+                )
+        finally:
+            batch_df.unpersist()
 
     q = (
         agg.writeStream.foreachBatch(_upsert)
-        .outputMode("complete")
+        .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -242,3 +242,44 @@ def test_fast_wire_matches_reference():
     ref["vehicle_ts"] = pd.to_datetime(ref["vehicle_ts"])
     got = _entities_frame([ref_payload])
     pd.testing.assert_frame_equal(got, ref)
+
+
+def test_foreign_fixed_width_fields_in_inner_messages(spark):
+    """A foreign FeedMessage carrying fixed32 and fixed64 fields inside
+    a VehicleDescriptor, an alert's TranslatedString and its Translation
+    decodes identically through decode_feed_messages and the per-row
+    reference decoder. Each fixed-width payload is laid out so that
+    reading it as a varint would resynchronize onto a bogus
+    length-delimited field 1 and overwrite the real value."""
+    from big_data_project_spark.sources.protofeed import (
+        _dec_fields,
+        _decode_entity,
+        decode_feed_messages,
+    )
+
+    fixed64 = _enc_tag(9, 1) + b"\x01\x0a\x03xyz\x00\x00"
+    fixed32 = _enc_tag(9, 5) + b"\x01\x0a\x01q"
+    vehicle = _enc_len(1, b"e0") + _enc_len(
+        4,
+        _enc_len(1, _enc_len(1, b"t0") + _enc_len(5, b"r0"))
+        + _enc_len(8, _enc_len(1, b"v0") + fixed64 + fixed32),
+    )
+    translation = _enc_len(1, b"storm") + fixed64 + fixed32 + _enc_len(2, b"en")
+    alert = _enc_len(1, b"e2") + _enc_len(
+        5,
+        _enc_int(6, 3)
+        + _enc_int(7, 4)
+        + _enc_len(10, fixed32 + _enc_len(1, translation) + fixed64),
+    )
+    payload = (
+        _enc_len(1, _enc_len(1, b"2.0"))
+        + _enc_len(2, vehicle)
+        + _enc_len(2, alert)
+    )
+
+    ref = [_decode_entity(v) for f, _w, v in _dec_fields(payload) if f == 2]
+    assert ref[0]["vehicle_id"] == "v0"
+    assert ref[1]["description"] == "storm"
+    feed = spark.createDataFrame([(payload,)], "payload binary")
+    got = [r.asDict() for r in decode_feed_messages(feed).collect()]
+    assert got == ref

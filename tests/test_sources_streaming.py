@@ -516,6 +516,126 @@ def test_materialize_hourly_converges_to_batch(spark, tmp_path):
     assert served == batch
 
 
+def test_materialize_hourly_multi_batch_matches_batch_rollups(spark, tmp_path):
+    """One availableNow run over three files, one per micro-batch, where
+    the last file holds rows hours older than the event time already
+    seen: every batch after the first is planned after the previous
+    upsert restored its scoped AQE setting. The served table must equal
+    the batch events_hourly / delay_hourly rollups, the caller's conf
+    must be unchanged, and no micro-batch may stay persisted."""
+    from big_data_project_spark.caching import release_caches
+    from big_data_project_spark.operators.hourly import (
+        delay_hourly,
+        events_hourly,
+    )
+
+    src = str(tmp_path / "mb_src")
+    target = str(tmp_path / "mb_target")
+    ckpt = str(tmp_path / "mb_ckpt")
+    events = load_table(spark, SF_DIR, "events")
+    lo, hi = events.agg(
+        F.min(F.unix_timestamp("ts")), F.max(F.unix_timestamp("ts"))
+    ).first()
+    t1, t2 = lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3
+    secs = F.unix_timestamp("ts")
+    for cond in (secs < t1, secs >= t2, (secs >= t1) & (secs < t2)):
+        events.filter(cond).coalesce(1).write.mode("append").parquet(src)
+
+    release_caches()
+    spark.catalog.clearCache()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    stream = (
+        spark.readStream.schema(pipeline.EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    pipeline.materialize_hourly(spark, stream, target, ckpt)
+
+    assert len(list((tmp_path / "mb_ckpt" / "commits").glob("[0-9]*"))) == 3
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert set(jsc.getPersistentRDDs().keySet()) == persisted
+
+    served = {
+        (r["route_id"], r["hour_ts"]): (
+            r["vehicle_events"],
+            r["avg_delay_seconds"],
+        )
+        for r in spark.read.parquet(target).collect()
+    }
+    counts = {
+        (r["route_id"], r["hour_ts"]): r["vehicle_events"]
+        for r in events_hourly(spark, SF_DIR).collect()
+    }
+    delays = {
+        (r["route_id"], r["hour_ts"]): (
+            r["trip_update_events"],
+            r["avg_delay_seconds"],
+        )
+        for r in delay_hourly(spark, SF_DIR).collect()
+    }
+    assert {k: v[0] for k, v in served.items()} == counts
+    assert {k: v for k, v in served.items() if k[0] is not None} == delays
+
+
+def test_materialize_hourly_rewrites_only_touched_dates(spark, tmp_path):
+    """A poll whose events all fall on a later date leaves every file of
+    the earlier date's partition byte-identical: only the groups the
+    poll changed are emitted and merged."""
+    import hashlib
+
+    src = str(tmp_path / "od_src")
+    target = tmp_path / "od_target"
+    ckpt = str(tmp_path / "od_ckpt")
+    schema = (
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double, props string"
+    )
+
+    def poll(rows):
+        spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.to_timestamp("ts")
+        ).coalesce(1).write.mode("append").parquet(src)
+        pipeline.materialize_hourly(spark, src, str(target), ckpt)
+
+    def snapshot(date):
+        return {
+            f.name: (f.stat().st_size, hashlib.sha256(f.read_bytes()).hexdigest())
+            for f in (target / f"hour_date={date}").iterdir()
+        }
+
+    poll(
+        [
+            (1, "2026-01-01 10:05:00", 7, "r1", 1.0, "{}"),
+            (2, "2026-01-01 23:10:00", 7, "r2", 2.0, "{}"),
+            (3, "2026-01-02 09:00:00", 8, "r1", 4.0, "{}"),
+        ]
+    )
+    before = snapshot("2026-01-01")
+    assert before
+    poll(
+        [
+            (4, "2026-01-02 09:30:00", 8, "r1", 6.0, "{}"),
+            (5, "2026-01-02 14:00:00", 9, "r2", 8.0, "{}"),
+        ]
+    )
+    assert snapshot("2026-01-01") == before
+    served = {
+        (str(r["hour_ts"]), r["route_id"]): (
+            r["vehicle_events"],
+            r["avg_delay_seconds"],
+        )
+        for r in spark.read.parquet(str(target)).collect()
+    }
+    assert served == {
+        ("2026-01-01 10:00:00", "r1"): (1, 1.0),
+        ("2026-01-01 23:00:00", "r2"): (1, 2.0),
+        ("2026-01-02 09:00:00", "r1"): (2, 5.0),
+        ("2026-01-02 14:00:00", "r2"): (1, 8.0),
+    }
+
+
 # -------------------------------------------------------------------- ML
 
 
