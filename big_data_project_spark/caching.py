@@ -1,50 +1,97 @@
-"""Tracked persist() for relations a plan consumes more than once.
+"""The session memo tier: the one owner of state memoized across queries.
 
-Spark re-executes shared subplans per consumer (no automatic CTE
-materialization), so multi-consumer relations — the LSH pair list, the
-exploded bigram/shingle streams — are persisted MEMORY_AND_DISK at the
-point of reuse. Spark's CacheManager dedupes by analyzed plan, so
-re-invoking the same query in one session re-uses (not re-adds) the
-cache entry; what DOES accumulate over a long session is the set of
-*distinct* cached relations across different queries / sf_dirs
-(round-3 advice item 1).
+Two kinds of entry live here, both built on first use and then reused by
+every later query of the same application:
 
-``release_caches()`` unpersists everything tracked here. The driver and
-bench run fine without calling it (caches spill to disk past memory);
-a long-lived embedding session running many registry queries should
-call it between queries to bound the cache footprint.
+- **Scan definitions** (``catalog.load_table`` / ``load_table_spread``):
+  the unexecuted scan DataFrame of a table — its resolved file listing
+  and schema, the metastore role. Nothing is computed or persisted; every
+  query still reads the parquet bytes. It saves the 70-115 ms of
+  Spark-driver time a fresh scan definition costs at sf0.1. The memo assumes the data
+  under ``sf_dir`` does not change during the session.
+- **Persisted rollups** (``rollups.shared_rollup``): relations with many
+  consumers across queries — the (route, hour) KPI tier, the LSH
+  candidate list, the k-means fit — built once, persisted
+  MEMORY_AND_DISK, and memoized so every consumer gets the same handle.
+
+Separately, ``persisted(df)`` persists a relation one plan consumes more
+than once. Spark re-executes a shared subplan per consumer (no automatic
+CTE materialization), so such relations are persisted at the point of
+reuse. Every persisted frame, memoized or not, is tracked.
+
+``release_caches()`` unpersists every tracked frame and drops the memo
+entries whose value is one of them, so a released rollup is rebuilt (and
+re-persisted) by its next consumer. Scan-definition entries are kept:
+they hold no data, and dropping them would make the next query pay every
+file listing again. ``__spark_entry__`` and ``bench.py`` run fine
+without calling it (caches spill to disk past memory); a long-lived
+session running many registry queries should call it between queries to
+bound the cache footprint.
+
+The memo key is ``(applicationId, sf_dir, name)``. ``applicationId``
+changes when the SparkContext restarts, so a memo entry can never hand
+out a DataFrame bound to a dead JVM context.
+
+One ``RLock`` guards the tier, held across a build, so two threads asking
+for the same cold entry build it once. It must be re-entrant because
+builds nest: ``kpi_hourly`` builds ``demand_hourly``, which builds
+``vehicle_hour_base``, which calls ``load_table``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+from collections.abc import Callable
 
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 _TRACKED: list[DataFrame] = []
+_LOCK = threading.RLock()
+
+
+def memoized(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The memo entry for ``name`` under ``sf_dir``, built by ``build()``
+    on the first call of this application."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    with _LOCK:
+        df = _MEMO.get(key)
+        if df is None:
+            df = _MEMO[key] = build()
+        return df
 
 
 def persisted(df: DataFrame) -> DataFrame:
     """MEMORY_AND_DISK-persist ``df`` and track it for later release.
     At cluster scale this is the step you'd persist or checkpoint to
     the shuffle store anyway."""
-    from pyspark import StorageLevel
-
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED.append(df)
+    with _LOCK:
+        _TRACKED.append(df)
     return df
 
 
 def release_caches() -> int:
-    """Unpersist every tracked relation (idempotent — unpersisting an
-    already-released or never-materialized frame is a no-op) AND drop
-    the session rollup/plan memo tier (rollups.shared_rollup persists
-    its entries itself, outside this tracker; round-9 moved the LSH
-    candidate list there, so a release that left the memo behind would
-    leak its persisted pair relation). Returns the TOTAL number of
-    entries released: tracked handles plus dropped memo-tier entries
-    (round-9 advice: the count must mean "everything released")."""
-    n = len(_TRACKED)
-    while _TRACKED:
-        _TRACKED.pop().unpersist()
-    from .rollups import clear_rollup_cache
-
-    return n + clear_rollup_cache()
+    """Unpersist every tracked relation and drop the memo entries that
+    hold one. Idempotent: unpersisting an already-released or
+    never-materialized frame is a no-op. Returns the number of distinct
+    relations released."""
+    with _LOCK:
+        # newest first: a frame built on an older one goes before it, so
+        # uncaching never makes Spark re-plan a dependent still cached
+        released = {id(df): df for df in reversed(_TRACKED)}
+        _TRACKED.clear()
+        for key in [k for k, df in _MEMO.items() if id(df) in released]:
+            del _MEMO[key]
+    for df in released.values():
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # context already stopped; nothing to release
+    return len(released)

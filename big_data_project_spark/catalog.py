@@ -4,6 +4,10 @@ One parquet file (or directory) per table under an ``sf_dir``. At 100 TB
 each table would be a partitioned parquet/Delta directory; the reader code
 is identical — ``spark.read.parquet`` prunes partitions and pushes filters
 either way.
+
+``load_table`` and ``load_table_spread`` memoize their scan definitions
+in the session memo tier (``caching``), which assumes the data under
+``sf_dir`` does not change during the session.
 """
 
 from __future__ import annotations
@@ -13,6 +17,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .caching import memoized
+from .session import scoped_conf
 
 TABLES = (
     "region",
@@ -34,31 +41,17 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Scan-definition cache, keyed by (application, sf_dir, name) like
-# rollups.shared_rollup (an applicationId key can never serve a
-# DataFrame bound to a dead JVM context). This is the metastore role:
-# a registered table's file listing + schema are resolved once per
-# session, not re-inferred by every query construction (guide §6 file
-# listing / §7.3 driver-side planning cost — measured 70-115 ms of
-# pure driver time PER load_table call at sf0.1, paid 1-4x by every
-# query invocation). NOTHING is persisted or precomputed: the cache
-# holds the unexecuted scan DataFrame (an immutable plan object);
-# every query still reads the parquet bytes and computes from scratch.
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's scan definition, memoized in the session tier
+    (``caching``)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # Engine semantics are defined in UTC (matches the DuckDB oracle's naive
     # timestamps); pin it even when the caller's session was built elsewhere.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _SCAN_CACHE.get(key)
-    if df is None:
-        df = _read_table(spark, sf_dir, name)
-        _SCAN_CACHE[key] = df
-    return df
+    return memoized(
+        spark, sf_dir, f"table:{name}", lambda: _read_table(spark, sf_dir, name)
+    )
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -67,19 +60,11 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the legacy long path, so surface it as a microsecond timestamp.
         # Floor division, NOT `div`: `div` truncates toward zero, which
         # would disagree with DuckDB's epoch_us flooring on pre-1970
-        # nanos. The conf is restored after the read (it is captured at
+        # nanos. The conf is scoped to the read (it is captured at
         # analysis time — verified: execution still succeeds) so other
         # nanos-parquet reads in the session keep default typing.
-        _CONF = "spark.sql.legacy.parquet.nanosAsLong"
-        prior = spark.conf.get(_CONF, None)
-        spark.conf.set(_CONF, "true")
-        try:
+        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
             df = spark.read.parquet(table_path(sf_dir, name))
-        finally:
-            if prior is None:
-                spark.conf.unset(_CONF)
-            else:
-                spark.conf.set(_CONF, prior)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn(
                 "ts",
@@ -141,15 +126,11 @@ def load_table_spread(
     ``df.rdd.getNumPartitions()`` costs ~1.3 s of plan-to-RDD
     conversion per call.)
 
-    Round-10: the result rides the same scan-definition cache as
-    load_table (keyed additionally by the spread keys) — like the base
-    scan, it is an unexecuted immutable plan object.
+    The result is memoized like the base scan (an unexecuted plan
+    object), keyed also by the spread keys and by both inputs of the
+    split decision, so a changed parallelism or maxPartitionBytes gets
+    a fresh decision.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, f"{name}|{keys}")
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = load_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
     try:
         max_bytes = int(
@@ -159,11 +140,17 @@ def load_table_spread(
         )
     except ValueError:
         max_bytes = 128 * 1024 * 1024
-    splits = max(1, _input_bytes(table_path(sf_dir, name)) // max_bytes)
-    if splits < target:
-        df = df.repartition(target, *[F.col(k) for k in keys])
-    _SCAN_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        df = load_table(spark, sf_dir, name)
+        splits = max(1, _input_bytes(table_path(sf_dir, name)) // max_bytes)
+        if splits < target:
+            df = df.repartition(target, *[F.col(k) for k in keys])
+        return df
+
+    return memoized(
+        spark, sf_dir, f"spread:{name}|{keys}|{target}|{max_bytes}", build
+    )
 
 
 def assert_baseline_scale(

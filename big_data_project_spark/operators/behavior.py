@@ -1534,7 +1534,7 @@ def event_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integer hop counts, min-fold, total output order."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     edges = _persisted(
         ev.select(

@@ -28,9 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caching import persisted as _persisted
 from ..catalog import load_table, load_table_spread
 from ..functions.portable import davg, pround, sql_davg, sql_pround
-from .dedup import _SQL_NORM, _SQL_SHINGLES, _norm, _persisted, _shingle_arr
+from ..session import scoped_conf
+from .dedup import _SQL_NORM, _SQL_SHINGLES, _norm, _shingle_arr
 from . import dedup as _dedup
 from . import textops as _textops
 
@@ -1228,7 +1230,12 @@ def nmf_topic_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal addition is exact + order-independent, so all output
     values are bit-identical — re-proven against the unchanged
     chained-CTE oracle and by a committed same-session A/B (values
-    compared row-for-row)."""
+    compared row-for-row).
+
+    The AQE-off scope (``session.scoped_conf``) is session-wide while
+    the rounds are built: a query running concurrently on the same
+    SparkSession would see AQE off. Construction assumes one query at a
+    time per session."""
     from ..functions.portable import dsum_exact
 
     v = _nmf_v(spark, sf_dir)
@@ -1244,10 +1251,7 @@ def nmf_topic_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HashPartitioning and the joins plan exchange-free). The toggle
     # covers only this operator's construction; the final action and
     # every other query keep the session AQE settings.
-    coalesce_conf = "spark.sql.adaptive.enabled"
-    prior = spark.conf.get(coalesce_conf, "true")
-    spark.conf.set(coalesce_conf, "false")
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
         # inits: distinct on the matching pinned copy keeps hash(key, p);
         # persisted like the long form's _nmf_init factors (round-9)
         w = _persisted(
@@ -1327,8 +1331,6 @@ def nmf_topic_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             wtv, wtw = w_grams(w)
             rows.append(objective_row(len(rows), wtv, wtw, hht, h, w))
-    finally:
-        spark.conf.set(coalesce_conf, prior)
     out = rows[0]
     for r in rows[1:]:
         out = out.unionByName(r)

@@ -869,7 +869,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc score join — a BROADCAST of the 256-row ratio table, so
     scoring is map-side + one doc-grain aggregate. Two linear passes
     total, nothing vocabulary- or corpus-squared."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     toks = _persisted(
@@ -1091,7 +1091,7 @@ def token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE corpus-scale aggregate (map-side token counting into a
     languages-sized relation, PERSISTED so the one-row totals branch
     never re-scans the corpus); the totals are a one-row broadcast."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
     from .textops import _toks
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import persisted as _persisted
 from ..catalog import load_table, load_table_spread
 from ..functions.portable import pround, sql_pround
 
@@ -108,18 +109,6 @@ _SQL_SHINGLES = f"""
           FROM documents) d
     WHERE len(toks) >= 3
 """
-
-
-def _persisted(df: DataFrame) -> DataFrame:
-    """MEMORY_AND_DISK-persist a relation the plan consumes several
-    times. Spark re-executes shared subplans per use (no automatic CTE
-    materialization), so the pair ops below would otherwise tokenize the
-    corpus 3-4x. Tracked centrally (caching.py) so long-lived sessions
-    can release the accumulated cache footprint via
-    ``caching.release_caches()``."""
-    from ..caching import persisted
-
-    return persisted(df)
 
 
 def _jaccard_pairs(shingles: DataFrame) -> DataFrame:

@@ -18,12 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caching import persisted as _persisted
 from ..functions.portable import pround, sql_pround, sql_uniform01
 from .dedup import (
     TAU,
     _SQL_JACCARD_PAIRS,
     _jaccard_pairs,
-    _persisted,
     _shingles,
 )
 from .dedup import _SQL_NORM as _SQL_NORM_IMPORT

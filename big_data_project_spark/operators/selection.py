@@ -249,7 +249,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-side scoring join — two linear shuffles + one hash equi-join
     on the shingle, the exact shape of the dedup pipeline. No
     test x train doc join ever forms."""
-    from .dedup import _persisted, _shingle_arr
+    from ..caching import persisted as _persisted
+    from .dedup import _shingle_arr
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     split = F.when(
@@ -349,7 +350,7 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source relation is domains-sized (tiny) and every step after it
     is arithmetic over ~20 rows."""
     from .corpus import _bigram_arr
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     bg = _persisted(
@@ -617,7 +618,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: BM25 ranks are the oracle-checked ranks; the cosine is
     6dp-rounded before the flag comparison."""
     from .corpus import bm25_retrieval_topk
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
     from .similarity import _dot, _norm as _l2, _vectors
 
     # persisted: pos (rank==1) and neg (rank>1) both consume it — an
@@ -731,7 +732,7 @@ def rho_loss_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: both avg logprobs are decimal folds rounded 6dp, the
     reducible margin is derived from the ROUNDED pair, and the top-K
     orders by (reducible desc, doc_id)."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     from .corpus import _bigram_arr

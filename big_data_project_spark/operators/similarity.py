@@ -153,7 +153,7 @@ def _buckets(v: DataFrame) -> DataFrame:
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket with the query
     (equi-join on bucket id), then exact cosine + rank on candidates."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     v = _vectors(spark, sf_dir)
     b = _persisted(_buckets(v))  # consumed by both join sides
@@ -222,7 +222,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact cosine filter runs on candidates only. The oracle applies
     the identical bucketing, so the contract is checkable end to end;
     pair cost scales with bucket occupancy, never corpus^2."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     v = _vectors(spark, sf_dir)
     b = _persisted(_buckets(v))
@@ -254,7 +254,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     v = _vectors(spark, sf_dir)
 
@@ -901,7 +901,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join and per-query aggregate are output-sized regardless of
     corpus size — the expensive parts are the retrievers themselves,
     which are the things under test."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     # the exact top-k feeds BOTH the semi-join and the per-query k
     # counts; persist the (queries x k)-sized relation so the exact
@@ -999,7 +999,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed and scanned once, not re-derived per consumer). Nothing
     quadratic outside bucket occupancy — which
     ``minhash_band_analysis``'s hyperplane twin would flag first."""
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     v = _vectors(spark, sf_dir)
     b = _persisted(_buckets(v))
@@ -1526,7 +1526,7 @@ def hybrid_prf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion join and re-rank are output-sized."""
     from ..catalog import load_table as _lt
     from .corpus import bm25_retrieval_topk
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     seed = _persisted(bm25_retrieval_topk(spark, sf_dir))
     v = _vectors(spark, sf_dir)
@@ -1780,7 +1780,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..catalog import assert_baseline_scale
-    from .dedup import _persisted
+    from ..caching import persisted as _persisted
 
     assert_baseline_scale(
         sf_dir,

@@ -22,11 +22,11 @@ rows. On a data lake the same contracts are:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..session import scoped_conf
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -44,25 +44,6 @@ def _rm_recursive(spark: SparkSession, path: str) -> None:
     fs, hpath = _hadoop_path(spark, path)
     if fs.exists(hpath):
         fs.delete(hpath, True)
-
-
-@contextmanager
-def _conf(spark: SparkSession, key: str, value: str):
-    """Set a SQL conf for the duration of one write, restoring the prior
-    value (the session is shared — a sticky dynamic-overwrite mode would
-    change the semantics of unrelated overwrite writes)."""
-    try:
-        prior = spark.conf.get(key)
-    except Exception:
-        prior = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
 
 
 # Staging-completeness markers (zero-byte files written AFTER a staging
@@ -143,7 +124,7 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
         # complete stage (idempotent: the stage holds the fully-merged
         # touched partitions). Partition-type inference off — same
         # round-trip contract as compact_parquet.
-        with _conf(
+        with scoped_conf(
             spark,
             "spark.sql.sources.partitionColumnTypeInference.enabled",
             "false",
@@ -158,7 +139,7 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
         if not part_cols:
             _rm_recursive(spark, tmp)
             return "dropped_empty_partition_stage"
-        with _conf(
+        with scoped_conf(
             spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
         ):
             staged.write.mode("overwrite").partitionBy(
@@ -438,7 +419,7 @@ def upsert_parquet(
         partition_col,
         F.col(partition_col).cast(delta.schema[partition_col].dataType),
     )
-    with _conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         staged.write.mode("overwrite").partitionBy(
             partition_col
         ).parquet(target_path)
@@ -524,7 +505,7 @@ def write_sorted(
     w = out.sortWithinPartitions(*sort_cols).write.mode("overwrite")
     if small_row_groups:
         w = w.option("parquet.block.size", 1024)
-    with _conf(
+    with scoped_conf(
         df.sparkSession,
         "spark.sql.parquet.outputTimestampType",
         "TIMESTAMP_MICROS",
@@ -589,7 +570,7 @@ def compact_parquet(
     # DOWNSTREAM reader (inferring or not) sees the same table it saw
     # before compaction. Data-file column types are untouched either
     # way (they come from the parquet footers).
-    with _conf(
+    with scoped_conf(
         spark,
         "spark.sql.sources.partitionColumnTypeInference.enabled",
         "false",
@@ -883,7 +864,7 @@ def write_zordered(
     )
     if small_row_groups:
         w = w.option("parquet.block.size", 1024)
-    with _conf(
+    with scoped_conf(
         df.sparkSession,
         "spark.sql.parquet.outputTimestampType",
         "TIMESTAMP_MICROS",

@@ -1,14 +1,12 @@
-"""Shared materialized (route, hour) rollup tier for the composite family.
+"""Shared materialized rollup tier for the composite family.
 
 The reference materializes its KPI layer once per pipeline run as views
 (/root/reference/src/optimization/kpi_views.sql) and every export reads
-those views. Round 1 re-derived each rollup from the raw events feed in
-every composite query — ``needs_data`` alone re-scanned the fact table
-~4x (20 shuffles). This module is the Spark analog of that view tier:
-each base rollup and the joined kpi frame is computed ONCE per
-(application, sf_dir), persisted MEMORY_AND_DISK, and every downstream
-query (kpi_hourly -> suggestions -> latest/top/summary/needs_data ->
-peak_hours_summary) reads the materialized frame.
+those views. This module is the Spark analog of that view tier: each base
+rollup and the joined kpi frame is computed ONCE per (application,
+sf_dir), persisted, and every downstream query (kpi_hourly ->
+suggestions -> latest/top/summary/needs_data -> peak_hours_summary) reads
+the materialized frame. The memo and its release live in ``caching``.
 
 Scale: the cached relations are (route, hour)-grained — many orders of
 magnitude smaller than the 100 TB feed — so the persistence cost is
@@ -22,9 +20,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+from .caching import memoized, persisted
 
 
 def shared_rollup(
@@ -33,28 +30,5 @@ def shared_rollup(
     name: str,
     build: Callable[[SparkSession, str], DataFrame],
 ) -> DataFrame:
-    """Memoized, persisted rollup keyed by (application, sf_dir, name).
-
-    The key includes ``applicationId`` so a restarted SparkContext never
-    serves DataFrames bound to a dead JVM context.
-    """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
-        df = build(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-        _CACHE[key] = df
-    return df
-
-
-def clear_rollup_cache() -> int:
-    """Unpersist and drop every cached rollup (test isolation hook).
-    Returns the number of entries dropped so release_caches() can count
-    the memo tier alongside its tracked handles."""
-    n = len(_CACHE)
-    for df in _CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # context already stopped; nothing to release
-    _CACHE.clear()
-    return n
+    """Memoized, persisted rollup keyed by (application, sf_dir, name)."""
+    return memoized(spark, sf_dir, name, lambda: persisted(build(spark, sf_dir)))

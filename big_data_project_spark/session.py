@@ -9,6 +9,7 @@ semantics identical to the oracle engine.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -61,3 +62,23 @@ def get_spark(app_name: str = "big_data_project_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set a SQL conf for the duration of the block, then restore the
+    prior value, or unset the key if it was not set, even when the block
+    raises. This is the one way the package changes a session conf.
+
+    The scope is session-wide: a query running concurrently on the same
+    SparkSession sees the value while the block runs. Callers assume one
+    query at a time per session."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..session import scoped_conf
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -858,7 +859,7 @@ def materialize_hourly(
     ON CONFLICT upsert (ingestor.py:71-137), where a full-table rewrite
     would make the serving loop O(history) per hour at 100 TB."""
     from ..functions.portable import davg
-    from ..plans.sinks import _conf, upsert_parquet
+    from ..plans.sinks import upsert_parquet
 
     src = events_source(spark, events_dir)
     agg = (
@@ -885,7 +886,7 @@ def materialize_hourly(
             delta = batch_df.withColumn(
                 "version", F.lit(batch_id)
             ).withColumn("hour_date", F.date_format("hour_ts", "yyyy-MM-dd"))
-            with _conf(session, "spark.sql.adaptive.enabled", "true"):
+            with scoped_conf(session, "spark.sql.adaptive.enabled", "true"):
                 upsert_parquet(
                     session,
                     target_path,

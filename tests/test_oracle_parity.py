@@ -38,9 +38,12 @@ def _normalize(rows, colnames):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
+    conf_before = spark.conf.getAll
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = [c.lower() for c in sdf.columns]
     spark_rows = [tuple(r) for r in sdf.collect()]
+    # no query construction or execution may leave the session conf changed
+    assert spark.conf.getAll == conf_before, f"{name}: session conf changed"
 
     res = duck.execute(ORACLES[name])
     duck_cols = [d[0].lower() for d in res.description]

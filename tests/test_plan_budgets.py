@@ -270,16 +270,16 @@ def _cold_plans(spark):
     perturb them otherwise: (a) relations persisted by earlier modules
     substitute InMemoryTableScan into these plans and their statistics
     can flip broadcast joins to shuffle joins; (b) clearing the Spark
-    cache WITHOUT resetting the rollup memo leaves shared_rollup
+    cache WITHOUT dropping the memoized rollups leaves shared_rollup
     handing out unregistered handles, which inlines the rollup builds'
     exchanges into every composite plan (kpi_hourly: 8 -> 12). So:
-    drop every cache AND the rollup memo — the next composite query
-    re-persists the tier exactly like a fresh session does."""
+    release the session memo tier (which unpersists every tracked frame
+    and drops the memoized rollups) and clear the Spark cache — the next
+    composite query re-persists the tier exactly like a fresh session
+    does."""
     from big_data_project_spark.caching import release_caches
-    from big_data_project_spark.rollups import clear_rollup_cache
 
     release_caches()
-    clear_rollup_cache()
     spark.catalog.clearCache()
 
 

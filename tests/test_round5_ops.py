@@ -96,15 +96,13 @@ def test_injected_source_must_be_streaming(spark):
 
 def test_release_caches_empties_session(spark):
     """Round-4 verdict item 5's done-condition: run three corpus-family
-    queries (each persists shared relations through the tracked
-    helper), release, and assert the JVM's persistent-RDD map is
-    empty."""
+    queries (each persists shared relations, memoized or not, through
+    the one session memo tier), release, and assert the JVM's
+    persistent-RDD map is empty."""
     from big_data_project_spark.caching import release_caches
     from big_data_project_spark.operators import corpus, corpus_stats, dedup
-    from big_data_project_spark.rollups import clear_rollup_cache
 
     release_caches()
-    clear_rollup_cache()
     spark.catalog.clearCache()
     # Baseline-relative: earlier suite tests can leave UNTRACKED
     # persistent RDDs (pyspark.ml fit() internals) that clearCache()
