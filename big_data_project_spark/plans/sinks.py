@@ -139,12 +139,9 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
         if not part_cols:
             _rm_recursive(spark, tmp)
             return "dropped_empty_partition_stage"
-        with scoped_conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            staged.write.mode("overwrite").partitionBy(
-                part_cols[0]
-            ).parquet(target_path)
+        staged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(part_cols[0]).parquet(target_path)
         _rm_recursive(spark, tmp)
         return "replayed_partition_overwrite"
     repaired = None
@@ -403,7 +400,9 @@ def upsert_parquet(
     )
     # Stage only the touched partitions (O(delta) bytes), then swap them
     # in atomically-per-partition with dynamic overwrite: partitions not
-    # present in the staged frame are left untouched on disk.
+    # present in the staged frame are left untouched on disk. Dynamic is
+    # the writer's option, which wins over the session conf and leaves
+    # it alone.
     tmp = target_path.rstrip("/") + ".staging"
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
     # Completeness marker: from here recovery can REPLAY the dynamic
@@ -419,10 +418,9 @@ def upsert_parquet(
         partition_col,
         F.col(partition_col).cast(delta.schema[partition_col].dataType),
     )
-    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        staged.write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(target_path)
+    staged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(target_path)
     _rm_recursive(spark, tmp)
     if allow_schema_evolution:
         return read_upsert_table(spark, target_path)

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..functions.portable import pround
+from ..plans.sinks import _read_or_none, read_upsert_table, stage_swap_parquet
 from ..session import scoped_conf
 
 EVENTS_SCHEMA = (
@@ -1216,11 +1218,73 @@ def stream_path_trigrams_from_dir(
     return stream_path_trigrams(events_source(spark, events_dir))
 
 
-# --- streaming weighted-sample maintenance (A-ES merge property) -----------
+# --- mergeable-state serving sinks ------------------------------------------
+# Each sketch below is a (partial, combine) pair: ``partial`` summarizes
+# one micro-batch, ``combine`` folds a union of summaries into one — the
+# monoid that makes it mergeable. Its state is a served parquet table,
+# O(sketch size) forever; estimates are read off it at serving time by
+# the ``read_*`` functions, tiny batch queries callable between or
+# during streams.
 
-DOCS_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
+
+def _drain(src: DataFrame, merge, checkpoint_dir: str) -> None:
+    """Run ``merge(batch_df, batch_id)`` on every micro-batch ``src``
+    holds now, then return — the one foreachBatch loop of the serving
+    sinks. The checkpoint makes delivery at-least-once and resumable."""
+    (
+        src.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _merge_guarded(
+    batch_df: DataFrame, batch_id: int, state_path: str, partial, combine
+) -> bool:
+    """Merge one micro-batch into the sketch state at ``state_path``:
+    rewrite it as ``combine(partial(batch_df) ∪ state)``, stamped with
+    ``last_batch`` = batch_id (constant across rows), through
+    stage_swap_parquet's crash-safe read-merge-swap. Returns True.
+
+    Replay guard — the one statement of it for every guarded sketch:
+    foreachBatch redelivers at least once, and the additive sketches
+    (histogram, count-min, AMS) are not keyed by content, so a replayed
+    batch would double-count. A batch with batch_id ≤ the state's
+    last_batch is therefore a no-op: returns False, state untouched.
+    The monotonic guard suffices because Structured Streaming only ever
+    replays the newest uncommitted batch. The content-idempotent
+    sketches (KMV, linear counting) keep it too, so a replay is a cheap
+    no-op instead of a full re-merge and swap.
+
+    The staging write is the only action on the batch, so its source
+    rows execute once per micro-batch."""
+    sess = batch_df.sparkSession
+    current = _read_or_none(sess, state_path)
+    part = partial(batch_df)
+    if current is not None:
+        last = current.agg(F.max("last_batch")).first()[0]
+        if last is not None and batch_id <= last:
+            return False
+        part = part.unionByName(current.select(*part.columns))
+    stage_swap_parquet(
+        sess,
+        combine(part).withColumn("last_batch", F.lit(batch_id).cast("long")),
+        state_path,
+    )
+    return True
+
+
+def _add(value: str):
+    """Combine of the additive sketches: sum ``value`` per key (every
+    other column)."""
+    return lambda df: df.groupBy(
+        *[c for c in df.columns if c != value]
+    ).agg(F.sum(value).alias(value))
+
+
+# --- streaming histogram quantiles (fixed-edge additive bins) ---------------
 
 
 def merge_quantile_bins_batch(
@@ -1230,51 +1294,29 @@ def merge_quantile_bins_batch(
     lo: float,
     hi: float,
 ) -> bool:
-    """One histogram merge step (module-level so the replay guard is
-    directly testable): bins the batch map-side, ADDS counts into the
-    served state, stamps `last_batch`. Returns False — without
-    touching the state — when batch_id ≤ the state's last applied id
-    (checkpoint replay of an already-merged batch; the double-count
-    the round-8 review caught)."""
+    """Histogram merge step (see :func:`_merge_guarded`): bin the batch
+    map-side into per-(route, bin) counts over FIXED edges [lo, hi) and
+    ADD them into the state. Fixed because a streaming sketch cannot
+    re-bin when the observed range grows: the batch operator derives
+    edges from the data, the streaming twin takes them as configuration
+    (the contract t-digest avoids by splitting centroids, at the cost of
+    determinism)."""
     from ..operators.sketches import QBINS
-    from ..plans.sinks import _read_or_none, stage_swap_parquet
 
-    sess = batch_df.sparkSession
     width = (hi - lo) / float(QBINS) if hi > lo else 1.0
-    current = _read_or_none(sess, state_path)
-    if current is not None:
-        last = current.agg(F.max("last_batch")).first()[0]
-        if last is not None and batch_id <= last:
-            return False
-    binned = (
-        batch_df.filter(
-            F.col("event_type").isNotNull() & F.col("value").isNotNull()
+    raw = F.floor((F.col("value") - F.lit(lo)) / F.lit(width))
+    bin_ = F.least(F.lit(QBINS - 1), F.greatest(F.lit(0), raw)).cast("int")
+
+    def partial(df: DataFrame) -> DataFrame:
+        return (
+            df.filter(
+                F.col("event_type").isNotNull() & F.col("value").isNotNull()
+            )
+            .groupBy(F.col("event_type").alias("route_id"), bin_.alias("bin"))
+            .agg(F.count(F.lit(1)).alias("c"))
         )
-        .select(
-            F.col("event_type").alias("route_id"),
-            F.least(
-                F.lit(QBINS - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor((F.col("value") - F.lit(lo)) / F.lit(width)),
-                ),
-            ).cast("int").alias("bin"),
-        )
-        .groupBy("route_id", "bin")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    if current is not None:
-        binned = (
-            binned.unionByName(current.select("route_id", "bin", "c"))
-            .groupBy("route_id", "bin")
-            .agg(F.sum("c").alias("c"))
-        )
-    stage_swap_parquet(
-        sess,
-        binned.withColumn("last_batch", F.lit(batch_id).cast("long")),
-        state_path,
-    )
-    return True
+
+    return _merge_guarded(batch_df, batch_id, state_path, partial, _add("c"))
 
 
 def serve_quantile_bins_foreach_batch(
@@ -1287,61 +1329,30 @@ def serve_quantile_bins_foreach_batch(
 ) -> None:
     """Streaming maintenance of the mergeable histogram-quantile state
     (the streaming form of operators/sketches.py::
-    mergeable_quantile_bins): per-(route, bin) counts over FIXED bin
-    edges [lo, hi) — fixed because a streaming sketch cannot re-bin
-    when the observed range grows; the batch operator derives edges
-    from the data, the streaming twin takes them as configuration (the
-    same contract t-digest avoids by splitting centroids, at the cost
-    of determinism). Each micro-batch bins its own rows map-side and
-    ADDS counts into the served table — the mergeability that makes
-    the histogram a sketch: state is O(routes × QBINS) forever,
-    quantile read-off happens at serving time from the tiny table.
-
-    Counts are additive, NOT keyed, so foreachBatch's at-least-once
-    redelivery would double-count a replayed batch; the state carries
-    the last applied batch_id (`last_batch`, constant across rows) and
-    :func:`merge_quantile_bins_batch` makes a replay with batch_id ≤
-    last_batch a no-op — monotonic-guard idempotence, sufficient
-    because Structured Streaming only ever replays the newest
-    uncommitted batch. The crash-safe read-merge-swap is
-    stage_swap_parquet's."""
-    if isinstance(events_dir, DataFrame):
-        src = events_dir
-    else:
-        src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-
-    def _merge(batch_df, batch_id: int) -> None:
-        merge_quantile_bins_batch(batch_df, batch_id, state_path, lo, hi)
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    mergeable_quantile_bins); state is O(routes × QBINS), read off by
+    :func:`read_quantile_bins`."""
+    _drain(
+        events_source(spark, events_dir),
+        lambda df, bid: merge_quantile_bins_batch(df, bid, state_path, lo, hi),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def read_quantile_bins(
     spark: SparkSession, state_path: str, lo: float, hi: float
 ) -> DataFrame:
     """Quantile read-off from the served histogram state: p50/p90/p99
-    per route at the bin midpoints — the serving-time half of the
-    streaming sketch (state is routes × QBINS rows; this is a tiny
-    batch query, callable between or during streams)."""
-    from ..functions.portable import pround
+    per route at the bin midpoints."""
     from ..operators.sketches import QBINS
-    from ..plans.sinks import read_upsert_table
-    from pyspark.sql.window import Window as W
 
     width = (hi - lo) / float(QBINS) if hi > lo else 1.0
     hist = read_upsert_table(spark, state_path)
     w = (
-        W.partitionBy("route_id")
+        Window.partitionBy("route_id")
         .orderBy("bin")
-        .rowsBetween(W.unboundedPreceding, 0)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    wn = W.partitionBy("route_id")
+    wn = Window.partitionBy("route_id")
     cum = hist.withColumn("cum_c", F.sum("c").over(w)).withColumn(
         "n", F.sum("c").over(wn)
     )
@@ -1364,6 +1375,9 @@ def read_quantile_bins(
     )
 
 
+# --- streaming weighted-sample maintenance (A-ES merge property) -----------
+
+
 def serve_weighted_sample_foreach_batch(
     spark: SparkSession,
     docs_dir: "str | DataFrame",
@@ -1381,39 +1395,26 @@ def serve_weighted_sample_foreach_batch(
     re-ranks. State is the k-row table itself — O(k) regardless of how
     much history has streamed past.
 
-    Idempotent on redelivery: keys are content-derived (md5 of doc_id,
-    operators/sampling.py::wrs_keyed — the SHARED keying rule), so a
-    replayed doc yields its same key and the doc_id-keyed merge absorbs
-    it; batch-sequence ≡ single-shot convergence is test-asserted.
-
-    foreachBatch + stage_swap_parquet gives the crash-safe read-merge-
-    swap; the checkpoint makes each batch exactly-once."""
+    Unguarded, because idempotent on redelivery: keys are
+    content-derived (md5 of doc_id, operators/sampling.py::wrs_keyed —
+    the SHARED keying rule), so a replayed doc yields its same key and
+    the doc_id-keyed merge absorbs it; batch-sequence ≡ single-shot
+    convergence is test-asserted. The state therefore carries no
+    ``last_batch`` column."""
     from ..operators.sampling import WRS_K, wrs_keyed, wrs_top_k
-    from ..plans.sinks import _read_or_none, stage_swap_parquet
 
     k = WRS_K if k is None else k
-    if isinstance(docs_dir, DataFrame):
-        src = docs_dir
-    else:
-        src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_dir)
 
-    def _merge(batch_df, _batch_id: int) -> None:
+    def merge(batch_df: DataFrame, _batch_id: int) -> None:
         sess = batch_df.sparkSession
         cand = wrs_keyed(batch_df).select("doc_id", "weight", "skey")
         current = _read_or_none(sess, state_path)
         if current is not None:
-            cand = cand.unionByName(
-                current.select("doc_id", "weight", "skey")
-            ).dropDuplicates(["doc_id"])
+            cand = cand.unionByName(current.select(*cand.columns))
+            cand = cand.dropDuplicates(["doc_id"])
         stage_swap_parquet(sess, wrs_top_k(cand, k), state_path)
 
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(docs_source(spark, docs_dir), merge, checkpoint_dir)
 
 
 # --- streaming KMV theta-sketch maintenance (union-recut mergeability) -----
@@ -1422,58 +1423,35 @@ def serve_weighted_sample_foreach_batch(
 def merge_kmv_batch(
     batch_df: DataFrame, batch_id: int, state_path: str
 ) -> bool:
-    """One KMV union-recut step (module-level so the replay guard is
-    directly testable, like merge_quantile_bins_batch): hash the
-    batch's distinct (route, user) pairs with the SHARED md5-uniform
+    """KMV union-recut step (see :func:`_merge_guarded`): hash the
+    batch's (route, user) pairs with the SHARED md5-uniform
     construction (operators/sketches.py::kmv_set_intersection uses the
     identical 'kmv:'-prefixed hash), union with the served kept-sets,
-    dedupe on (route_id, user_id), and re-cut to the KMV_K smallest
-    per route — the theta-family merge (Beyer et al. 2007): top-k of
-    a union == top-k of per-part top-ks, so state is O(routes × K)
-    forever.
-
-    Doubly idempotent on redelivery: the hash is content-derived, so a
-    replayed row dedupes away on (route_id, user_id) even WITHOUT the
-    guard — but the `last_batch` monotonic guard is kept anyway (the
-    family convention of the histogram twin) so a replay is a cheap
-    no-op rather than a full re-rank + swap. Returns False without
-    touching state when batch_id ≤ the last applied id."""
+    dedupe on (route_id, user_id), and re-cut to the KMV_K smallest per
+    route — the θ-family merge (Beyer et al. 2007): top-k of a union ==
+    top-k of per-part top-ks, so state is O(routes × K) forever."""
     from ..operators.sketches import KMV_K, kmv_hash
-    from ..plans.sinks import _read_or_none, stage_swap_parquet
-    from pyspark.sql.window import Window as W
 
-    sess = batch_df.sparkSession
-    current = _read_or_none(sess, state_path)
-    if current is not None:
-        last = current.agg(F.max("last_batch")).first()[0]
-        if last is not None and batch_id <= last:
-            return False
-    cand = (
-        batch_df.filter(F.col("event_type").isNotNull())
-        .select(F.col("event_type").alias("route_id"), "user_id")
-        .distinct()
-        .select(
-            "route_id",
-            "user_id",
-            kmv_hash(F.col("user_id")).alias("u"),
+    def partial(df: DataFrame) -> DataFrame:
+        return (
+            df.filter(F.col("event_type").isNotNull())
+            .select(
+                F.col("event_type").alias("route_id"),
+                "user_id",
+                kmv_hash(F.col("user_id")).alias("u"),
+            )
         )
-    )
-    if current is not None:
-        cand = cand.unionByName(
-            current.select("route_id", "user_id", "u")
-        ).dropDuplicates(["route_id", "user_id"])
-    w = W.partitionBy("route_id").orderBy("u", "user_id")
-    kept = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= KMV_K)
-        .drop("rk")
-    )
-    stage_swap_parquet(
-        sess,
-        kept.withColumn("last_batch", F.lit(batch_id).cast("long")),
-        state_path,
-    )
-    return True
+
+    def combine(cand: DataFrame) -> DataFrame:
+        w = Window.partitionBy("route_id").orderBy("u", "user_id")
+        return (
+            cand.dropDuplicates(["route_id", "user_id"])
+            .withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= KMV_K)
+            .drop("rk")
+        )
+
+    return _merge_guarded(batch_df, batch_id, state_path, partial, combine)
 
 
 def serve_kmv_foreach_batch(
@@ -1484,29 +1462,13 @@ def serve_kmv_foreach_batch(
 ) -> None:
     """Streaming maintenance of the per-route KMV theta sketches — the
     streaming form of operators/sketches.py::kmv_set_intersection's
-    sketch half (round-8 verdict item 5: the one sketch tier that had
-    no streaming maintenance path). Each micro-batch unions its own
-    distinct (route, user) hashes into the served kept-set table and
-    re-cuts to K; set-INTERSECTION estimates are read off the tiny
-    state at serving time (read_kmv_intersection), the same
-    counts-in-stream / algebra-in-serving split as the histogram twin.
-    The crash-safe read-merge-swap is stage_swap_parquet's; the
-    checkpoint + replay guard make each batch exactly-once."""
-    if isinstance(events_dir, DataFrame):
-        src = events_dir
-    else:
-        src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-
-    def _merge(batch_df, batch_id: int) -> None:
-        merge_kmv_batch(batch_df, batch_id, state_path)
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    sketch half; set-INTERSECTION estimates are read off by
+    :func:`read_kmv_intersection`."""
+    _drain(
+        events_source(spark, events_dir),
+        lambda df, bid: merge_kmv_batch(df, bid, state_path),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def read_kmv_intersection(
@@ -1516,11 +1478,8 @@ def read_kmv_intersection(
     state: |common sample below θ_min| / θ_min per route pair, via the
     SAME kmv_pair_estimates the batch operator uses — so a fully
     streamed state reproduces the batch sketch columns exactly (the
-    mergeability property, test-asserted). Sketch-sized: state is
-    routes × K rows; this is a tiny batch query."""
-    from ..functions.portable import pround
+    mergeability property, test-asserted)."""
     from ..operators.sketches import kmv_pair_estimates
-    from ..plans.sinks import read_upsert_table
 
     kept = read_upsert_table(spark, state_path).select(
         "route_id", "user_id", "u"
@@ -1541,30 +1500,16 @@ def read_kmv_intersection(
 # --- streaming count-min maintenance (additive cell counts) ----------------
 
 
-def merge_countmin_batch(
-    batch_df: DataFrame, batch_id: int, state_path: str
-) -> bool:
-    """One count-min merge step: tokenize the batch's documents with
-    the SHARED normalization (operators/dedup.py::_norm — the same
-    split every corpus operator uses), bin each token into its
-    CM_DEPTH (row, bucket) cells via the SHARED md5 hashing
-    (operators/sketches.py::cm_bucket_rows), and ADD the cell counts
-    into the served DEPTH×WIDTH table. Cell counts are additive like
-    the histogram twin's — the mergeability that makes CM a sketch —
-    and like them NOT keyed by content, so the `last_batch` monotonic
-    guard makes a checkpoint replay a no-op instead of a
-    double-count. Returns False without touching state on replay."""
+def _countmin_partial(batch_df: DataFrame) -> DataFrame:
+    """Count-min cells of one batch: tokenize with the SHARED
+    normalization (operators/dedup.py::_norm) and bin each token into
+    its CM_DEPTH (row, bucket) cells via the SHARED md5 hashing
+    (operators/sketches.py::cm_bucket_rows). Cell counts ADD across
+    batches — the mergeability that makes CM a sketch."""
     from ..operators.dedup import _norm
     from ..operators.sketches import cm_bucket_rows
-    from ..plans.sinks import _read_or_none, stage_swap_parquet
 
-    sess = batch_df.sparkSession
-    current = _read_or_none(sess, state_path)
-    if current is not None:
-        last = current.agg(F.max("last_batch")).first()[0]
-        if last is not None and batch_id <= last:
-            return False
-    binned = (
+    return (
         batch_df.select(
             F.explode(F.split(_norm(F.col("text")), " ")).alias("tok")
         )
@@ -1575,18 +1520,6 @@ def merge_countmin_batch(
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if current is not None:
-        binned = (
-            binned.unionByName(current.select("d", "bucket", "c"))
-            .groupBy("d", "bucket")
-            .agg(F.sum("c").alias("c"))
-        )
-    stage_swap_parquet(
-        sess,
-        binned.withColumn("last_batch", F.lit(batch_id).cast("long")),
-        state_path,
-    )
-    return True
 
 
 def serve_countmin_foreach_batch(
@@ -1597,29 +1530,16 @@ def serve_countmin_foreach_batch(
 ) -> None:
     """Streaming maintenance of the count-min token-frequency sketch —
     the streaming form of operators/sketches.py::countmin_heavy_hitters'
-    sketch half, completing the sketch tier's streaming story
-    (histogram → quantiles, KMV → set intersection, CM → point
-    frequencies). State is the DEPTH×WIDTH cell table forever,
-    regardless of how much corpus has streamed past; point-frequency
-    estimates are read off at serving time (read_countmin_estimates),
-    the same counts-in-stream / read-off-in-serving split as the other
-    twins. Crash-safe swap + checkpoint + replay guard = exactly-once
-    per batch."""
-    if isinstance(docs_dir, DataFrame):
-        src = docs_dir
-    else:
-        src = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_dir)
-
-    def _merge(batch_df, batch_id: int) -> None:
-        merge_countmin_batch(batch_df, batch_id, state_path)
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    sketch half. State is the DEPTH×WIDTH cell table forever;
+    point-frequency estimates are read off by
+    :func:`read_countmin_estimates`."""
+    _drain(
+        docs_source(spark, docs_dir),
+        lambda df, bid: _merge_guarded(
+            df, bid, state_path, _countmin_partial, _add("c")
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def read_countmin_estimates(
@@ -1631,7 +1551,6 @@ def read_countmin_estimates(
     caller-sized, the sketch is DEPTH×WIDTH — both tiny; the probe
     join broadcasts the sketch exactly like the batch audit does."""
     from ..operators.sketches import cm_bucket_rows
-    from ..plans.sinks import read_upsert_table
 
     cm = read_upsert_table(spark, state_path).select("d", "bucket", "c")
     probes = (
@@ -1659,54 +1578,29 @@ def read_countmin_estimates(
 # --- streaming AMS F2 maintenance (signed register sums are linear) --------
 
 
-def merge_ams_batch(
-    batch_df: DataFrame, batch_id: int, state_path: str
-) -> bool:
-    """One AMS merge step: the tug-of-war registers are LINEAR in the
-    frequency vector (Z_r = Σ_u s_r(u)·f_u), so a micro-batch's own
-    signed count contributions simply ADD into the served
-    (route, r, z) table — the F2 sketch's mergeability. Signs come
-    from the SHARED md5 construction (operators/sketches.py::
-    ams_f2_sketch), so a fully streamed state equals the batch
-    registers exactly. Additive ⇒ NOT content-idempotent — the
-    `last_batch` monotonic guard absorbs checkpoint replays (the
-    histogram/CM convention). Returns False without touching state on
-    replay."""
+def _ams_partial(batch_df: DataFrame) -> DataFrame:
+    """AMS registers of one batch. The tug-of-war registers are LINEAR
+    in the frequency vector (Z_r = Σ_u s_r(u)·f_u), so a batch's own
+    signed count contributions simply ADD into the (route, r, z) state.
+    Signs come from the SHARED md5 construction (operators/sketches.py::
+    ams_f2_sketch), so a fully streamed state equals the batch registers
+    exactly."""
     from ..operators.sketches import AMS_R, ams_sign
-    from ..plans.sinks import _read_or_none, stage_swap_parquet
 
-    sess = batch_df.sparkSession
-    current = _read_or_none(sess, state_path)
-    if current is not None:
-        last = current.agg(F.max("last_batch")).first()[0]
-        if last is not None and batch_id <= last:
-            return False
     f = (
         batch_df.filter(F.col("event_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("route_id"), "user_id"
-        )
+        .groupBy(F.col("event_type").alias("route_id"), "user_id")
         .agg(F.count(F.lit(1)).alias("fu"))
     )
-    regs = sess.range(AMS_R).select(F.col("id").cast("int").alias("r"))
+    regs = batch_df.sparkSession.range(AMS_R).select(
+        F.col("id").cast("int").alias("r")
+    )
     sign = ams_sign(F.col("r"), F.col("user_id"))
-    z = (
+    return (
         f.join(F.broadcast(regs))
         .groupBy("route_id", "r")
         .agg(F.sum((sign * F.col("fu")).cast("bigint")).alias("z"))
     )
-    if current is not None:
-        z = (
-            z.unionByName(current.select("route_id", "r", "z"))
-            .groupBy("route_id", "r")
-            .agg(F.sum("z").alias("z"))
-        )
-    stage_swap_parquet(
-        sess,
-        z.withColumn("last_batch", F.lit(batch_id).cast("long")),
-        state_path,
-    )
-    return True
 
 
 def serve_ams_foreach_batch(
@@ -1715,27 +1609,16 @@ def serve_ams_foreach_batch(
     state_path: str,
     checkpoint_dir: str,
 ) -> None:
-    """Streaming maintenance of the AMS F2 registers — with this the
-    ENTIRE deterministic sketch tier has a streaming path (histogram →
-    quantiles, KMV → set intersection, CM → frequencies, linear
-    counting → cardinality, AMS → second moment). State is
-    routes × AMS_R rows forever; the median-of-means estimate reads
-    off the tiny state at serving time (read_ams_f2)."""
-    if isinstance(events_dir, DataFrame):
-        src = events_dir
-    else:
-        src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-
-    def _merge(batch_df, batch_id: int) -> None:
-        merge_ams_batch(batch_df, batch_id, state_path)
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming maintenance of the AMS F2 registers. State is
+    routes × AMS_R rows forever; the median-of-means estimate is read
+    off by :func:`read_ams_f2`."""
+    _drain(
+        events_source(spark, events_dir),
+        lambda df, bid: _merge_guarded(
+            df, bid, state_path, _ams_partial, _add("z")
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def read_ams_f2(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1744,9 +1627,7 @@ def read_ams_f2(spark: SparkSession, state_path: str) -> DataFrame:
     exact BIGINT z², dyadic group-mean division, exact percentile) —
     so a fully streamed state reproduces the batch est_f2 column
     exactly, test-asserted."""
-    from ..functions.portable import pround
     from ..operators.sketches import AMS_G, AMS_R
-    from ..plans.sinks import read_upsert_table
 
     z = read_upsert_table(spark, state_path).select("route_id", "r", "z")
     means = (
@@ -1776,40 +1657,21 @@ def read_ams_f2(spark: SparkSession, state_path: str) -> DataFrame:
 def merge_linear_counting_batch(
     batch_df: DataFrame, batch_id: int, state_path: str
 ) -> bool:
-    """One linear-counting merge step: the sketch state is the set of
-    OCCUPIED (route, bucket) cells — bitmap OR across batches is just
-    a distinct union (Whang et al. 1990's mergeability), and the
-    bucket hash is content-derived (shared 'lc:' md5), so the merge is
-    doubly idempotent like the KMV twin: replays dedupe away on
-    (route_id, bucket) even without the `last_batch` guard, which is
-    kept as the family convention."""
+    """Linear-counting merge step (see :func:`_merge_guarded`): the
+    state is the set of OCCUPIED (route, bucket) cells, so bitmap OR
+    across batches is just a distinct union (Whang et al. 1990's
+    mergeability); the bucket hash is the shared 'lc:' md5."""
     from ..operators.sketches import lc_bucket
-    from ..plans.sinks import _read_or_none, stage_swap_parquet
 
-    sess = batch_df.sparkSession
-    current = _read_or_none(sess, state_path)
-    if current is not None:
-        last = current.agg(F.max("last_batch")).first()[0]
-        if last is not None and batch_id <= last:
-            return False
-    occ = (
-        batch_df.filter(F.col("event_type").isNotNull())
-        .select(
+    def partial(df: DataFrame) -> DataFrame:
+        return df.filter(F.col("event_type").isNotNull()).select(
             F.col("event_type").alias("route_id"),
             lc_bucket(F.col("user_id")).alias("bucket"),
         )
-        .distinct()
+
+    return _merge_guarded(
+        batch_df, batch_id, state_path, partial, DataFrame.distinct
     )
-    if current is not None:
-        occ = occ.unionByName(
-            current.select("route_id", "bucket")
-        ).distinct()
-    stage_swap_parquet(
-        sess,
-        occ.withColumn("last_batch", F.lit(batch_id).cast("long")),
-        state_path,
-    )
-    return True
 
 
 def serve_linear_counting_foreach_batch(
@@ -1821,23 +1683,13 @@ def serve_linear_counting_foreach_batch(
     """Streaming maintenance of the linear-counting occupied-cell
     state (streaming form of operators/sketches.py::
     linear_counting_audit's sketch half). State ≤ routes × LC_M rows
-    forever; the −m·ln(V) estimate reads off at serving time
-    (read_linear_counting)."""
-    if isinstance(events_dir, DataFrame):
-        src = events_dir
-    else:
-        src = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-
-    def _merge(batch_df, batch_id: int) -> None:
-        merge_linear_counting_batch(batch_df, batch_id, state_path)
-
-    q = (
-        src.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    forever; the −m·ln(V) estimate is read off by
+    :func:`read_linear_counting`."""
+    _drain(
+        events_source(spark, events_dir),
+        lambda df, bid: merge_linear_counting_batch(df, bid, state_path),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def read_linear_counting(
@@ -1846,9 +1698,7 @@ def read_linear_counting(
     """Serving-time cardinality read-off: −m·ln(V) over the streamed
     occupied-cell counts, NULL on saturation — the same estimator the
     batch audit applies, so streamed ≡ batch est, test-asserted."""
-    from ..functions.portable import pround
     from ..operators.sketches import LC_M
-    from ..plans.sinks import read_upsert_table
 
     occ = (
         read_upsert_table(spark, state_path)

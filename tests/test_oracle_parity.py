@@ -60,3 +60,11 @@ def test_query_matches_oracle(spark, duck, name):
     want = _normalize(duck_rows, duck_cols)
     mismatches = [(g, w) for g, w in zip(got, want) if g != w]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+
+
+@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
+def test_query_without_oracle_leaves_conf_unchanged(spark, name):
+    """The conf half of the gate above, for the keys with no oracle."""
+    conf_before = spark.conf.getAll
+    QUERIES[name](spark, SF_DIR).collect()
+    assert spark.conf.getAll == conf_before, f"{name}: session conf changed"

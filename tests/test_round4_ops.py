@@ -33,7 +33,26 @@ def _file_state(root: str) -> dict[str, bytes]:
 def test_upsert_partition_scoped_leaves_untouched_partitions(
     spark, tmp_path
 ):
-    target = str(tmp_path / "part_target")
+    _check_leaves_untouched_partitions(spark, str(tmp_path / "part_target"))
+
+
+def test_upsert_partition_scoped_overrides_static_session_mode(
+    spark, tmp_path
+):
+    """Same contract with the session's partitionOverwriteMode set to
+    STATIC: the upsert's per-write dynamic option wins, and the session
+    conf is left as it was."""
+    from big_data_project_spark.session import scoped_conf
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    with scoped_conf(spark, key, "STATIC"):
+        _check_leaves_untouched_partitions(
+            spark, str(tmp_path / "part_target")
+        )
+        assert spark.conf.get(key) == "STATIC"
+
+
+def _check_leaves_untouched_partitions(spark, target: str) -> None:
     base = spark.createDataFrame(
         [
             (1, "a", 10, "d1"),
