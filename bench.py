@@ -853,22 +853,10 @@ def main() -> None:
             "regressed_vs_prior": regressed,
             # Keys whose STEADY numbers read a persisted/memoized tier
             # the cold pass built (full-pipeline cost is queries_cold):
-            # the (route, hour) rollup tier (kpi_hourly -> suggestions),
-            # the round-9 session-memoized LSH candidate list (the
-            # dedup consumers), and the round-10 pinned V layouts +
-            # factor inits of nmf_topic_rounds. Every _persisted
-            # relation shares this property (CacheManager dedupes by
-            # analyzed plan across trials); `amortized_built_by` below
-            # is the mechanical evidence — per-key count of cache
-            # registrations during the cold pass.
-            "amortized": [
-                "kpi_hourly",
-                "suggestions",
-                "dedup_minhash_lsh",
-                "dedup_incremental",
-                "dedup_editdist_verify",
-                "nmf_topic_rounds",
-            ],
+            # every key that registered a cached relation during the
+            # cold pass (`amortized_built_by`: per-key count of
+            # CacheManager registrations).
+            "amortized": sorted(cache_regs),
             "amortized_built_by": cache_regs,
             "ambient_load_frac": round(
                 ambient["load_1m"] / ambient["cpus"], 3

@@ -19,6 +19,15 @@ than once. Spark re-executes a shared subplan per consumer (no automatic
 CTE materialization), so such relations are persisted at the point of
 reuse. Every persisted frame, memoized or not, is tracked.
 
+AQE chooses a persisted relation's partition count
+(``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on in
+``session.get_spark``): a KB-sized tier is coalesced to a few partitions
+instead of keeping every shuffle partition. A consumer that needs a
+fixed layout pins it with ``repartition(n, key)``, which AQE never
+coalesces, cached or not: ``nmf_topic_rounds`` persists its pinned
+``v_doc``/``v_tok`` copies, and ``catalog.load_table_spread`` pins the
+scans it spreads.
+
 ``release_caches()`` unpersists every tracked frame and drops the memo
 entries whose value is one of them, so a released rollup is rebuilt (and
 re-persisted) by its next consumer. Scan-definition entries are kept:
@@ -70,7 +79,12 @@ def memoized(
 def persisted(df: DataFrame) -> DataFrame:
     """MEMORY_AND_DISK-persist ``df`` and track it for later release.
     At cluster scale this is the step you'd persist or checkpoint to
-    the shuffle store anyway."""
+    the shuffle store anyway.
+
+    AQE picks the cached relation's partition count. Pass
+    ``df.repartition(n, key)`` to keep exactly ``n`` hash partitions on
+    ``key``, so consumers grouping or joining on ``key`` plan no
+    exchange above the cached scan."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
         _TRACKED.append(df)

@@ -30,6 +30,18 @@ def get_spark(app_name: str = "big_data_project_spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce a persisted relation's output like any other
+        # shuffle. The default (false) builds every persist()ed plan with
+        # final-stage coalescing off, so each (route, hour)-sized tier
+        # kept all shuffle partitions: built in 32 tasks, scanned in 32
+        # tasks by each consumer, written as 32 part files. Partitions
+        # only merge below the 1 MB minPartitionSize, so large relations
+        # keep their parallelism; a consumer that needs a fixed layout
+        # pins it with repartition(n, key) (see caching.persisted).
+        # Hourly DAG at size 0.01 on local[4] (4-core host): median run
+        # 24.7 -> 19.8 s over 10 alternating pairs; traced seed 7: 983
+        # -> 81 tasks, executor run time 23.6 -> 14.3 s; outputs equal.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Join-strategy knobs (guide §3.1/§9), env-parameterised.
         # PREFER_SMJ=false lets the planner pick shuffled-hash joins
         # (no sort) when its size conditions hold, and the AQE

@@ -8,7 +8,7 @@ import time
 
 import pytest
 
-from big_data_project_spark.caching import release_caches
+from big_data_project_spark.caching import persisted, release_caches
 from big_data_project_spark.catalog import load_table_spread
 from big_data_project_spark.rollups import shared_rollup
 from big_data_project_spark.session import scoped_conf
@@ -81,3 +81,55 @@ def test_shared_rollup_builds_a_cold_key_once(spark):
     t.join(120)
     assert built, "cold kpi_hourly construction did not complete"
     release_caches()
+
+
+def test_persisted_tier_is_right_sized_by_aqe(spark, tmp_path):
+    """AQE coalesces a persisted relation's output: the KB-sized
+    (route, hour) tier neither keeps every shuffle partition nor writes
+    one part file per partition."""
+    from big_data_project_spark.operators.kpi import kpi_hourly
+    from big_data_project_spark.registry import QUERIES
+
+    release_caches()
+    slots = spark.sparkContext.defaultParallelism
+    out = tmp_path / "kpi_hourly"
+    # the way plans.dag._write_query materializes a registry key
+    QUERIES["kpi_hourly"](spark, SF_DIR).write.mode("overwrite").parquet(str(out))
+    assert kpi_hourly(spark, SF_DIR).rdd.getNumPartitions() <= slots
+    assert len(list(out.glob("part-*.parquet"))) <= slots
+
+
+def _shuffles_above_cache(node) -> int:
+    """Shuffle exchanges in a physical plan, not descending into cached
+    relations."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _shuffles_above_cache(node.initialPlan())
+    if name == "InMemoryTableScan":
+        return 0
+    children = node.children()
+    return (name == "Exchange") + sum(
+        _shuffles_above_cache(children.apply(i)) for i in range(children.size())
+    )
+
+
+def test_pinned_layout_survives_persist(spark):
+    """repartition(n, key) before persisted() keeps n hash partitions,
+    so grouping or self-joining on key plans no shuffle exchange above
+    the cached scan (the layout nmf_topic_rounds and load_table_spread
+    rely on)."""
+    n = 32
+    df = persisted(
+        spark.range(1000).selectExpr("id % 97 AS k", "id AS v").repartition(n, "k")
+    )
+    try:
+        df.count()
+        assert df.rdd.getNumPartitions() == n
+        # no broadcast: the self-join must be a co-partitioned join
+        with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+            for q in (df.groupBy("k").count(), df.alias("a").join(df.alias("b"), "k")):
+                plan = q._jdf.queryExecution().executedPlan()
+                assert "InMemoryTableScan" in plan.toString()
+                assert _shuffles_above_cache(plan) == 0, plan.toString()
+    finally:
+        release_caches()
