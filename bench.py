@@ -89,9 +89,9 @@ R5_HEADLINE = [
     "semdedup_prune",
 ]
 R6_HEADLINE = [
-    # round-6: the schema-faithful GTFS-RT FeedMessage decode (two
-    # chained Arrow mapInPandas stages, zero shuffles — the Python
-    # crossing cost is the thing measured)
+    # round-6: the schema-faithful GTFS-RT FeedMessage decode (one
+    # fused encode→decode mapInArrow stage behind the small-input
+    # spread guard — the Python crossing cost is the thing measured)
     "proto_feed_entities",
     # round-6 second batch (appended per frozen-order protocol): the
     # distributed Lloyd fit (2 unrolled iterations) and the

@@ -3,7 +3,7 @@ code lines and docstring/comment lines."""
 
 from __future__ import annotations
 
-from tools.line_delta import delta, line_kinds
+from tools.line_delta import _source, delta, line_kinds
 
 OLD = '''"""Module doc."""
 
@@ -41,3 +41,14 @@ def test_delta_splits_code_from_docs():
     assert delta("a\n", "b\n\n", python=False) == {
         "code+": 1, "code-": 1, "doc+": 0, "doc-": 0,
     }
+
+
+def test_binary_file_has_no_lines(tmp_path):
+    """A file that is not UTF-8 text (a golden payload) is reported as
+    binary instead of failing the whole report."""
+    binary, text = tmp_path / "golden.bin", tmp_path / "a.py"
+    binary.write_bytes(b"\x12\xd0\x01")
+    text.write_text("x = 1\n")
+    assert _source(None, str(binary)) is None
+    assert _source(None, str(text)) == "x = 1\n"
+    assert _source(None, str(tmp_path / "missing.py")) == ""

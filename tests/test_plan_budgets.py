@@ -214,7 +214,7 @@ SHUFFLE_BUDGETS = {
     # cross-joins (nodes/edges/wedges/triangles), not data joins
     "neardup_triangle_count": 14,
     # round-6 additions
-    # encode->decode are chained mapInPandas stages; the ONE exchange
+    # encode->decode is one fused mapInArrow stage; the ONE exchange
     # is load_table_spread's small-input parallelism guard (a no-op at
     # real scale), without which the whole per-entity Python pipeline
     # serializes on one core (5.0 s -> 1.4 s steady at sf0.1)

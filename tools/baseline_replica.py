@@ -371,16 +371,17 @@ def open_orders_monthly() -> pd.DataFrame:
 def proto_feed_entities() -> pd.DataFrame:
     """Round-6 key: per-entity encode + parse loop, single process —
     the reference poller's exact idiom (ONE pb2 FeedMessage walked
-    entity-by-entity in Python, poller.py:75-188). Reuses the repo's
-    wire-format functions so both engines pay identical per-row Python
+    entity-by-entity in Python, poller.py:75-188). Calls the repo's one
+    wire codec per entity so both engines pay identical per-row Python
     cost; the Spark column is the same work Arrow-batched and run in
     parallel across partitions."""
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     from big_data_project_spark.sources.protofeed import (
-        _decode_entity,
-        _encode_entity_from_event,
+        _ENTITY_COLS,
+        _encode_entity,
+        _entity_row,
     )
 
     ev = _read("events")
@@ -389,15 +390,15 @@ def proto_feed_entities() -> pd.DataFrame:
         ev["event_id"], ev["user_id"], ev["event_type"], ev["value"],
         ev["ts"],
     ):
-        buf = _encode_entity_from_event(
+        buf = _encode_entity(
             int(eid),
             int(uid),
             None if pd.isna(etype) else str(etype),
             None if pd.isna(val) else float(val),
             int(pd.Timestamp(ts).value // 1_000_000_000),
         )
-        out.append(_decode_entity(buf))
-    return pd.DataFrame(out)
+        out.append(_entity_row(buf))
+    return pd.DataFrame(out, columns=_ENTITY_COLS)
 
 
 def ivf_kmeans_cells() -> pd.DataFrame:

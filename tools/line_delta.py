@@ -6,7 +6,7 @@ Usage: python tools/line_delta.py --base REF [--head REF] [paths...]
 Without ``--head`` the working tree, untracked files included, is
 compared. For every file that differs under ``paths`` it prints the
 added and removed code lines and docstring/comment lines, then the
-totals. A Python line is a
+totals; a binary file is listed without counts. A Python line is a
 docstring/comment line when every token on it belongs to a comment or a
 string statement (a docstring); blank lines count as neither. Lines of
 other files count as code. Lines are matched with ``difflib``, so the
@@ -92,16 +92,25 @@ def _git(*args: str) -> str:
     ).stdout
 
 
-def _source(ref: str | None, path: str) -> str:
+def _source(ref: str | None, path: str) -> str | None:
+    """Text of ``path`` at ``ref`` (the working tree when None): "" when
+    the file is absent there, None when it is not UTF-8 text."""
     if ref is None:
         if not os.path.exists(path):
             return ""
-        with open(path, encoding="utf-8") as fh:
-            return fh.read()
+        with open(path, "rb") as fh:
+            raw = fh.read()
+    else:
+        proc = subprocess.run(
+            ["git", "show", f"{ref}:{path}"], capture_output=True
+        )
+        if proc.returncode:
+            return ""  # absent at that ref: added or deleted by the change
+        raw = proc.stdout
     try:
-        return _git("show", f"{ref}:{path}")
-    except subprocess.CalledProcessError:
-        return ""  # absent at that ref: added or deleted by the change
+        return raw.decode("utf-8")
+    except UnicodeDecodeError:
+        return None
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -121,11 +130,11 @@ def main(argv: list[str] | None = None) -> int:
     total = {"code+": 0, "code-": 0, "doc+": 0, "doc-": 0}
     print(f"{'file':<56} {'code +/-':>13} {'doc +/-':>13}")
     for path in files:
-        d = delta(
-            _source(args.base, path),
-            _source(args.head, path),
-            python=path.endswith(".py"),
-        )
+        old, new = _source(args.base, path), _source(args.head, path)
+        if old is None or new is None:  # binary: no lines to count
+            print(f"{path:<56} {'binary':>13}")
+            continue
+        d = delta(old, new, python=path.endswith(".py"))
         for k, v in d.items():
             total[k] += v
         print(
