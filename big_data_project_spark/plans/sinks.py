@@ -336,29 +336,54 @@ def upsert_parquet(
     Without it, the whole table is merged and rewritten — fine for
     small serving tables, O(table) per batch otherwise.
     """
-
-    def _check_columns(current: DataFrame | None) -> None:
-        if current is None or allow_schema_evolution:
-            return
-        cur, new = set(current.columns), set(delta.columns)
-        if cur != new:
-            raise ValueError(
-                "delta schema differs from table "
-                f"(added={sorted(new - cur)}, removed={sorted(cur - new)});"
-                " pass allow_schema_evolution=True to take the union"
-            )
-
     if partition_col is None:
         current = _read_or_none(
             spark, target_path, merge_schema=allow_schema_evolution
         )
-        _check_columns(current)
+        _check_columns(current, delta, allow_schema_evolution)
         merged = _merge(
             current, delta, keys, version_col,
             allow_missing=allow_schema_evolution,
         )
         return stage_swap_parquet(spark, merged, target_path)
+    _upsert_partitioned(
+        spark, target_path, delta, keys, version_col, partition_col,
+        allow_schema_evolution,
+    )
+    merged = _read_or_none(
+        spark, target_path, merge_schema=allow_schema_evolution
+    )
+    # An empty delta into a table that does not exist yet wrote nothing.
+    return merged if merged is not None else delta
 
+
+def _check_columns(
+    current: DataFrame | None, delta: DataFrame, allow_schema_evolution: bool
+) -> None:
+    if current is None or allow_schema_evolution:
+        return
+    cur, new = set(current.columns), set(delta.columns)
+    if cur != new:
+        raise ValueError(
+            "delta schema differs from table "
+            f"(added={sorted(new - cur)}, removed={sorted(cur - new)});"
+            " pass allow_schema_evolution=True to take the union"
+        )
+
+
+def _upsert_partitioned(
+    spark: SparkSession,
+    target_path: str,
+    delta: DataFrame,
+    keys: list[str],
+    version_col: str,
+    partition_col: str,
+    allow_schema_evolution: bool = False,
+) -> None:
+    """The partition-scoped merge of :func:`upsert_parquet`, without its
+    read-back of the merged table: listing every partition of the table
+    is O(history), and the serving loop (``materialize_hourly``) never
+    reads the result."""
     if partition_col not in delta.columns:
         raise ValueError(
             f"partition_col {partition_col!r} not in delta columns"
@@ -371,14 +396,11 @@ def upsert_parquet(
         # an EMPTY frame writes no schema-bearing file — the staging
         # read-back would fail with UNABLE_TO_INFER_SCHEMA. A quiet
         # batch in the serving loop is normal, not an error.
-        existing = _read_or_none(
-            spark, target_path, merge_schema=allow_schema_evolution
-        )
-        return existing if existing is not None else delta
+        return
     current = _read_or_none(
         spark, target_path, merge_schema=allow_schema_evolution
     )
-    _check_columns(current)
+    _check_columns(current, delta, allow_schema_evolution)
     if current is not None:
         # isin() is three-valued: a NULL partition value (Hive's
         # __HIVE_DEFAULT_PARTITION__) never matches it, so a delta row
@@ -422,9 +444,6 @@ def upsert_parquet(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy(partition_col).parquet(target_path)
     _rm_recursive(spark, tmp)
-    if allow_schema_evolution:
-        return read_upsert_table(spark, target_path)
-    return spark.read.parquet(target_path)
 
 
 def write_partitioned(

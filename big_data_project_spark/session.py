@@ -84,7 +84,11 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
 
     The scope is session-wide: a query running concurrently on the same
     SparkSession sees the value while the block runs. Callers assume one
-    query at a time per session."""
+    query at a time per session. Every stream start
+    (``streaming.pipeline._await_available_now``) is such a toggle: it
+    caps ``spark.sql.shuffle.partitions`` at the cores while
+    ``start()`` runs, so a query planned on the session meanwhile takes
+    the capped count."""
     prior = spark.conf.get(key, None)
     spark.conf.set(key, value)
     try:

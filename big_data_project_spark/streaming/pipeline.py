@@ -153,19 +153,54 @@ def stream_events_sliding(
     )
 
 
+def _state_partitions(spark: SparkSession) -> int:
+    """State shards for a new checkpoint: the session's shuffle
+    partitions, capped at one wave of the cluster's cores."""
+    return min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+
+
+def _await_available_now(spark: SparkSession, writer) -> None:
+    """Start ``writer`` with the availableNow trigger, then wait until
+    it has drained what its source holds now — the one stream start of
+    this module.
+
+    Shard rule: the query starts with ``spark.sql.shuffle.partitions``
+    scoped to :func:`_state_partitions`. Every stateful stream shards
+    its state store by that count, and each shard pays a checkpoint
+    commit (a delta file per micro-batch, a snapshot every few) whether
+    it holds rows or not: on ``local[4]`` a 32-shard stage runs 8 waves
+    of such commits for a few dozen state rows. Spark clones the session
+    and records the count in the checkpoint's offset log when the query
+    starts, so scoping ``start()`` is enough, and a checkpoint keeps the
+    count it was created with — an existing checkpoint resumes at its
+    recorded count, whatever the session sets. To re-shard, start over
+    with a new checkpoint. Where the cluster has at least as many cores
+    as shuffle partitions, the count is the session's."""
+    with scoped_conf(
+        spark, "spark.sql.shuffle.partitions", str(_state_partitions(spark))
+    ):
+        q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+
+
 def run_available_now(
     sdf: DataFrame, query_name: str, output_mode: str = "complete"
 ) -> DataFrame:
     """Drain the stream with the availableNow trigger into a memory sink
-    and return the materialized result (batch-equivalence harness)."""
-    q = (
+    and return the materialized result (batch-equivalence harness).
+
+    The stream's state takes min(shuffle partitions, cores) shards,
+    fixed when its (temporary) checkpoint is created; see
+    :func:`_await_available_now`."""
+    _await_available_now(
+        sdf.sparkSession,
         sdf.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
     )
-    q.awaitTermination()
     return sdf.sparkSession.table(query_name)
 
 
@@ -859,9 +894,16 @@ def materialize_hourly(
     PARTITION-SCOPED: each batch rewrites only the dates its delta
     touches — O(delta) per batch like the reference ingestor's per-row
     ON CONFLICT upsert (ingestor.py:71-137), where a full-table rewrite
-    would make the serving loop O(history) per hour at 100 TB."""
+    would make the serving loop O(history) per hour at 100 TB. The
+    served table is not read back after a batch's merge.
+
+    The state store takes min(shuffle partitions, cores) shards when
+    ``checkpoint_dir`` is created and keeps that count for the life of
+    the checkpoint: a run over an existing checkpoint resumes at the
+    count it recorded. To re-shard, start over with a new checkpoint
+    (see :func:`_await_available_now`)."""
     from ..functions.portable import davg
-    from ..plans.sinks import upsert_parquet
+    from ..plans.sinks import _upsert_partitioned
 
     src = events_source(spark, events_dir)
     agg = (
@@ -871,7 +913,11 @@ def materialize_hourly(
         )
         .agg(
             F.count(F.lit(1)).alias("vehicle_events"),
-            davg("value", 4).alias("avg_delay_seconds"),
+            # delay_hourly (the reference's view) leaves out rows with no
+            # route, so the NULL route is served with no average delay.
+            davg(
+                F.when(F.col("event_type").isNotNull(), F.col("value")), 4
+            ).alias("avg_delay_seconds"),
         )
         .select(
             F.col("win.start").alias("hour_ts"),
@@ -889,7 +935,7 @@ def materialize_hourly(
                 "version", F.lit(batch_id)
             ).withColumn("hour_date", F.date_format("hour_ts", "yyyy-MM-dd"))
             with scoped_conf(session, "spark.sql.adaptive.enabled", "true"):
-                upsert_parquet(
+                _upsert_partitioned(
                     session,
                     target_path,
                     delta,
@@ -900,14 +946,12 @@ def materialize_hourly(
         finally:
             batch_df.unpersist()
 
-    q = (
+    _await_available_now(
+        agg.sparkSession,
         agg.writeStream.foreachBatch(_upsert)
         .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
     )
-    q.awaitTermination()
 
 
 _ATTRIB_OUT = StructType(
@@ -1231,12 +1275,11 @@ def _drain(src: DataFrame, merge, checkpoint_dir: str) -> None:
     """Run ``merge(batch_df, batch_id)`` on every micro-batch ``src``
     holds now, then return — the one foreachBatch loop of the serving
     sinks. The checkpoint makes delivery at-least-once and resumable."""
-    (
-        src.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _await_available_now(
+        src.sparkSession,
+        src.writeStream.foreachBatch(merge).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
 
 

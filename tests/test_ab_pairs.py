@@ -5,7 +5,7 @@ spread, in the metric's better direction."""
 
 from __future__ import annotations
 
-from tools.ab_pairs import compare
+from tools.ab_pairs import compare, selected_metrics
 
 
 def test_clear_gain_holds_both_directions():
@@ -36,3 +36,26 @@ def test_win_inside_parent_spread_does_not_hold():
     change = [p - 0.1 for p in parent]
     res = compare(list(zip(parent, change)), "lower")
     assert res["wins"] == 10 and not res["holds"]
+
+
+def test_trace_adds_every_per_layer_metric_with_its_direction():
+    bench = {
+        "end_to_end": [
+            {"name": "op_p50_s", "better": "lower"},
+            {"name": "ops_per_s", "better": "higher"},
+        ],
+        "per_layer": [
+            {"name": "exec.tasks", "better": "lower"},
+            {"name": "protofeed.entities_per_s", "better": "higher"},
+        ],
+    }
+    assert selected_metrics(bench, trace=False) == {
+        "op_p50_s": (False, "lower"),
+        "ops_per_s": (False, "higher"),
+    }
+    assert selected_metrics(bench, trace=True) == {
+        "op_p50_s": (False, "lower"),
+        "ops_per_s": (False, "higher"),
+        "exec.tasks": (True, "lower"),
+        "protofeed.entities_per_s": (True, "higher"),
+    }

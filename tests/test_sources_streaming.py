@@ -524,10 +524,6 @@ def test_materialize_hourly_multi_batch_matches_batch_rollups(spark, tmp_path):
     the batch events_hourly / delay_hourly rollups, the caller's conf
     must be unchanged, and no micro-batch may stay persisted."""
     from big_data_project_spark.caching import release_caches
-    from big_data_project_spark.operators.hourly import (
-        delay_hourly,
-        events_hourly,
-    )
 
     src = str(tmp_path / "mb_src")
     target = str(tmp_path / "mb_target")
@@ -556,6 +552,16 @@ def test_materialize_hourly_multi_batch_matches_batch_rollups(spark, tmp_path):
     assert len(list((tmp_path / "mb_ckpt" / "commits").glob("[0-9]*"))) == 3
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     assert set(jsc.getPersistentRDDs().keySet()) == persisted
+    _assert_served_matches_batch_rollups(spark, target)
+
+
+def _assert_served_matches_batch_rollups(spark, target: str) -> None:
+    """The served table equals the batch events_hourly / delay_hourly
+    rollups of the SF_DIR events."""
+    from big_data_project_spark.operators.hourly import (
+        delay_hourly,
+        events_hourly,
+    )
 
     served = {
         (r["route_id"], r["hour_ts"]): (
@@ -634,6 +640,171 @@ def test_materialize_hourly_rewrites_only_touched_dates(spark, tmp_path):
         ("2026-01-02 09:00:00", "r1"): (2, 5.0),
         ("2026-01-02 14:00:00", "r2"): (1, 8.0),
     }
+
+
+def _recorded_shards(ckpt) -> int:
+    """The shuffle-partition count the latest offset-log entry of a
+    checkpoint recorded (its second line is the batch metadata)."""
+    latest = max(
+        (f for f in (ckpt / "offsets").iterdir() if f.name.isdigit()),
+        key=lambda f: int(f.name),
+    )
+    meta = json.loads(latest.read_text().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+def _state_shard_dirs(ckpt) -> set[str]:
+    return {d.name for d in (ckpt / "state" / "0").iterdir() if d.name.isdigit()}
+
+
+def _one_wave(spark) -> int:
+    return min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+
+
+def test_fresh_checkpoint_takes_one_wave_of_state_shards(spark, tmp_path):
+    """A new materialize_hourly checkpoint records min(shuffle
+    partitions, defaultParallelism) in its offset log and creates that
+    many state-store shards; the session's conf is left as it was."""
+    src = str(tmp_path / "sh_src")
+    ckpt = tmp_path / "sh_ckpt"
+    load_table(spark, SF_DIR, "events").limit(300).write.parquet(src)
+    conf = spark.conf.getAll
+    pipeline.materialize_hourly(spark, src, str(tmp_path / "sh_t"), str(ckpt))
+    assert spark.conf.getAll == conf
+    n = _one_wave(spark)
+    assert _recorded_shards(ckpt) == n
+    assert _state_shard_dirs(ckpt) == {str(i) for i in range(n)}
+
+
+def test_every_stream_start_leaves_the_session_conf_alone(spark, tmp_path):
+    """The memory-sink harness, the serving loop and the sketch sinks'
+    drain loop all start through the one availableNow helper: the
+    caller's conf is identical before and after each, and the drain
+    loop's checkpoint records the same one-wave shard count."""
+    src = str(tmp_path / "cf_src")
+    load_table(spark, SF_DIR, "events").limit(200).write.parquet(src)
+    seen = []
+
+    def start_memory():
+        pipeline.run_available_now(
+            pipeline.events_source(spark, src).groupBy("event_type").count(),
+            "cf_memory",
+        ).collect()
+
+    def start_serving():
+        pipeline.materialize_hourly(
+            spark, src, str(tmp_path / "cf_t"), str(tmp_path / "cf_ckpt")
+        )
+
+    def start_drain():
+        pipeline._drain(
+            pipeline.events_source(spark, src),
+            lambda df, bid: seen.append(bid),
+            str(tmp_path / "cf_drain"),
+        )
+
+    for start in (start_memory, start_serving, start_drain):
+        conf = spark.conf.getAll
+        start()
+        assert spark.conf.getAll == conf, start.__name__
+    assert seen == [0]
+    assert _recorded_shards(tmp_path / "cf_drain") == _one_wave(spark)
+
+
+def test_checkpoint_keeps_its_shard_count_on_resume(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint first written with 32 state shards resumes at 32,
+    whatever the helper would pick for a new one, and the served table
+    still equals the batch rollups."""
+    src = str(tmp_path / "rs_src")
+    target = str(tmp_path / "rs_t")
+    ckpt = tmp_path / "rs_ckpt"
+    events = load_table(spark, SF_DIR, "events")
+    first, second = events.randomSplit([0.5, 0.5], seed=11)
+    real = pipeline._state_partitions
+    calls = []
+
+    def thirty_two_first(s):
+        calls.append(s)
+        return 32 if len(calls) == 1 else real(s)
+
+    monkeypatch.setattr(pipeline, "_state_partitions", thirty_two_first)
+    first.write.mode("append").parquet(src)
+    pipeline.materialize_hourly(spark, src, target, str(ckpt))
+    assert _recorded_shards(ckpt) == 32
+    second.write.mode("append").parquet(src)
+    pipeline.materialize_hourly(spark, src, target, str(ckpt))
+
+    assert len(calls) == 2
+    assert len(list((ckpt / "commits").glob("[0-9]*"))) == 2
+    assert _recorded_shards(ckpt) == 32
+    assert _state_shard_dirs(ckpt) == {str(i) for i in range(32)}
+    _assert_served_matches_batch_rollups(spark, target)
+
+
+def test_served_loop_null_branches_match_oracle(spark, tmp_path):
+    """Rows with a NULL value or a NULL event_type, delivered over two
+    micro-batches that both touch the NULL-route and the NULL-value
+    groups: the served table equals the events_hourly oracle LEFT JOIN
+    the delay_hourly oracle in DuckDB (the benchmark's served-table
+    gate), so the NULL route carries no average delay and a group whose
+    values are all NULL averages to NULL."""
+    import duckdb
+
+    from big_data_project_spark.registry import ORACLES
+
+    src = str(tmp_path / "nl_src")
+    target = tmp_path / "nl_t"
+    ckpt = tmp_path / "nl_ckpt"
+    schema = (
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double, props string"
+    )
+    polls = [
+        [
+            (1, "2026-01-01 10:05:00", 7, "r1", 1.5, "{}"),
+            (2, "2026-01-01 10:20:00", 7, "r1", None, "{}"),
+            (3, "2026-01-01 10:40:00", 8, None, 4.0, "{}"),
+            (4, "2026-01-01 11:00:00", 8, None, None, "{}"),
+            (5, "2026-01-01 12:00:00", 9, "r2", None, "{}"),
+        ],
+        [
+            (6, "2026-01-01 10:50:00", 8, None, 6.25, "{}"),
+            (7, "2026-01-01 12:30:00", 9, "r2", None, "{}"),
+            (8, "2026-01-01 11:15:00", 9, None, None, "{}"),
+            (9, "2026-01-02 09:00:00", 7, "r1", None, "{}"),
+            (10, "2026-01-01 10:10:00", 7, "r1", 2.25, "{}"),
+        ],
+    ]
+    for rows in polls:
+        spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.to_timestamp("ts")
+        ).coalesce(1).write.mode("append").parquet(src)
+        pipeline.materialize_hourly(spark, src, str(target), str(ckpt))
+    assert len(list((ckpt / "commits").glob("[0-9]*"))) == 2
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet('{src}/*.parquet')"
+        )
+        want = con.execute(
+            f"""SELECT v.route_id, v.hour_ts, v.vehicle_events, d.avg_delay_seconds
+                FROM ({ORACLES['events_hourly']}) v
+                LEFT JOIN ({ORACLES['delay_hourly']}) d USING (route_id, hour_ts)"""
+        ).fetchall()
+        got = con.execute(
+            f"""SELECT route_id, hour_ts, vehicle_events, avg_delay_seconds
+                FROM read_parquet('{target}/*/*.parquet', hive_partitioning = true)"""
+        ).fetchall()
+    finally:
+        con.close()
+    assert any(r[0] is None for r in want) and any(r[3] is None for r in want)
+    assert sorted(got, key=repr) == sorted(want, key=repr)
 
 
 # -------------------------------------------------------------------- ML
