@@ -170,11 +170,15 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
 def _read_or_none(
     spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame | None:
-    # Probe via the reader, not os.path — the target may live on any
-    # Hadoop-compatible filesystem (s3a://, hdfs://), where a local
-    # stat would silently report "absent" and turn the merge into an
-    # overwrite.
+    # Probe through the Hadoop FS API, not os.path — the target may live
+    # on any Hadoop-compatible filesystem (s3a://, hdfs://), where a
+    # local stat would silently report "absent" and turn the merge into
+    # an overwrite. Checking existence first keeps the reader from
+    # logging a stack trace for a target not written yet; the reader
+    # still raises for a directory that holds no parquet files.
     recover_staging(spark, path)
+    if not _fs_exists(spark, path):
+        return None
     try:
         reader = spark.read
         if merge_schema:

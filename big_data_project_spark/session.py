@@ -42,31 +42,18 @@ def get_spark(app_name: str = "big_data_project_spark") -> SparkSession:
         # 24.7 -> 19.8 s over 10 alternating pairs; traced seed 7: 983
         # -> 81 tasks, executor run time 23.6 -> 14.3 s; outputs equal.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        # Join-strategy knobs (guide §3.1/§9), env-parameterised.
-        # PREFER_SMJ=false lets the planner pick shuffled-hash joins
-        # (no sort) when its size conditions hold, and the AQE
-        # threshold converts sort-merge to shuffled-hash at runtime
-        # when every post-shuffle partition is under the limit —
-        # measured −20-25% on the SMJ-heavy corpus-factor joins
-        # (nmf_topic_rounds, semdedup_prune; OPTIMIZATION_r09.md).
-        # Safe beyond local mode: both paths are size-guarded (the
-        # planner's build-side condition / the 64m per-partition AQE
-        # bound), so a build side that could OOM falls back to SMJ;
-        # set SPARK_GRAFT_PREFER_SMJ=true to restore the old planner.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_AQE_SHJ_THRESHOLD", "64m"),
-        )
-        # Shuffle/spill codec (guide §2.3): default lz4; zstd trades
-        # CPU for markedly better ratio — measured per-host
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # Join strategy (guide §3.1/§9): preferSortMergeJoin=false lets
+        # the planner pick shuffled-hash joins (no sort) when its size
+        # conditions hold, and the AQE threshold converts sort-merge to
+        # shuffled-hash at runtime when every post-shuffle partition is
+        # under the limit — measured −20-25% on the SMJ-heavy
+        # corpus-factor joins (nmf_topic_rounds, semdedup_prune;
+        # OPTIMIZATION_r09.md). Safe beyond local mode: both paths are
+        # size-guarded (the planner's build-side condition / the 64m
+        # per-partition AQE bound), so a build side that could OOM
+        # falls back to SMJ.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -9,23 +9,39 @@ where the reference relied on Postgres upserts; a swap of
 ``.parquet(dir)`` for ``.format("kafka")`` changes the source without
 touching the plan.
 
-Sessionization comes in two forms with identical semantics:
+Sessionization comes in three forms with the same gap rule:
 - ``sessionize_batch`` (also the oracle-checked ``user_sessions`` query):
   gap-based sessions via lag + cumulative session ids — two window
   passes over one (user_id) shuffle.
-- ``sessionize_stream``: applyInPandasWithState keeps one open session
-  per user as state; closed sessions are emitted when the gap is
-  exceeded. State is bounded by the user-key cardinality, and at 100 TB
-  the state store shards on user_id across executors.
+- ``sessionize_stream`` / ``sessionize_stream_timeout``: stateful pandas
+  (applyInPandasWithState) keeps one open session per user as state;
+  a closed session is emitted when the gap is exceeded, and the timeout
+  form also closes it once the watermark passes its last event + gap.
+  State is bounded by the user-key cardinality, and at 100 TB the state
+  store shards on user_id across executors.
+- ``stream_sessions_native``: the JVM-native ``session_window``
+  aggregation, the preferred path at scale.
+
+Every applyInPandasWithState stream here (the two sessionizers, funnel,
+transitions, last-touch attribution, path trigrams) is one ``_Walk``:
+one driver owns the state read, the per-user sort, the state update,
+the output frame and the ``groupBy("user_id")`` call, and each stream
+keeps only its step function.
+
+Every streaming entry point takes the session and its source first:
+a directory or a streaming DataFrame (:func:`events_source`,
+:func:`docs_source`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections import Counter
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -50,6 +66,7 @@ DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
 SESSION_GAP_MINUTES = 30
+_SESSION_GAP_US = SESSION_GAP_MINUTES * 60 * 1_000_000
 WATERMARK = "2 hours"
 
 
@@ -83,6 +100,32 @@ def docs_source(spark: SparkSession, source: "str | DataFrame") -> DataFrame:
     return spark.readStream.schema(DOCS_SCHEMA).parquet(source)
 
 
+def _route_windows(src: DataFrame, win: Column, *bounds: Column) -> DataFrame:
+    """Per (window, route) event count and average delay of ``src``,
+    grouped by the window column ``win`` and selected as ``bounds``
+    (columns of ``win``) plus route_id, vehicle_events and
+    avg_delay_seconds — the one route-window aggregate of the streaming
+    twins of operators/hourly.py::events_hourly + delay_hourly.
+
+    delay_hourly (the reference's view) leaves out rows with no route,
+    so the NULL route is served with no average delay. The average is
+    the decimal accumulation of functions/portable.py: streaming state
+    merges in yet another order, so only an order-independent aggregate
+    can promise batch-equality."""
+    from ..functions.portable import davg
+
+    return (
+        src.groupBy(win.alias("win"), F.col("event_type").alias("route_id"))
+        .agg(
+            F.count(F.lit(1)).alias("vehicle_events"),
+            davg(
+                F.when(F.col("event_type").isNotNull(), F.col("value")), 4
+            ).alias("avg_delay_seconds"),
+        )
+        .select(*bounds, "route_id", "vehicle_events", "avg_delay_seconds")
+    )
+
+
 def stream_events_hourly(
     spark: SparkSession, events_dir: "str | DataFrame",
     watermark: str = WATERMARK
@@ -90,28 +133,10 @@ def stream_events_hourly(
     """File-streaming twin of operators/hourly.py::events_hourly +
     delay_hourly: tumbling 1-hour windows per route with a watermark for
     late data."""
-    from ..functions.portable import davg
-
-    src = events_source(spark, events_dir)
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", "1 hour").alias("win"),
-            F.col("event_type").alias("route_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("vehicle_events"),
-            # decimal accumulation (functions/portable.py): streaming
-            # state merges in yet another order, so only an
-            # order-independent aggregate can promise batch-equality
-            davg("value", 4).alias("avg_delay_seconds"),
-        )
-        .select(
-            F.col("win.start").alias("hour_ts"),
-            "route_id",
-            "vehicle_events",
-            "avg_delay_seconds",
-        )
+    return _route_windows(
+        events_source(spark, events_dir).withWatermark("ts", watermark),
+        F.window("ts", "1 hour"),
+        F.col("win.start").alias("hour_ts"),
     )
 
 
@@ -130,26 +155,11 @@ def stream_events_sliding(
     Batch equivalence: F.window is the same expression in batch mode,
     so the twin is tested by running the identical aggregation over the
     static frame."""
-    from ..functions.portable import davg
-
-    src = events_source(spark, events_dir)
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", "1 hour", slide).alias("win"),
-            F.col("event_type").alias("route_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("vehicle_events"),
-            davg("value", 4).alias("avg_delay_seconds"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "route_id",
-            "vehicle_events",
-            "avg_delay_seconds",
-        )
+    return _route_windows(
+        events_source(spark, events_dir).withWatermark("ts", watermark),
+        F.window("ts", "1 hour", slide),
+        F.col("win.start").alias("window_start"),
+        F.col("win.end").alias("window_end"),
     )
 
 
@@ -403,6 +413,80 @@ def stream_dedup_incremental_watermarked(
     )
 
 
+# --- per-user event-time walks (applyInPandasWithState) ---------------------
+
+
+class _Walk(NamedTuple):
+    """One per-user event-time walk — the one driver of every
+    applyInPandasWithState stream in this module. A walker is its
+    ``step(key, state, pdf) -> (state, rows)``: it folds one user's rows
+    of one micro-batch, sorted by ``sort_by``, into the state tuple and
+    returns the output rows as tuples, timestamps as epoch micros.
+
+    Called as ``(key, pdfs, state)``, the walk is the generator Spark
+    runs per user and micro-batch: it reads the state (``init`` for a
+    new user), concatenates the group's Arrow chunks and sorts them once
+    over the whole group — chunk order is arbitrary, so a per-chunk sort
+    would walk events out of time order — updates the state and yields
+    the rows as one frame, every TimestampType field of ``out``
+    converted from epoch micros.
+
+    With ``deadline_ms`` the walk keeps an event-time timeout: a user
+    whose timeout fired emits its state as one row (key + state) and is
+    removed, and every update sets the timeout to ``deadline_ms(state)``
+    (epoch millis). Only such a walk reads ``hasTimedOut``.
+
+    Every walker keeps O(1) state per user, so the state store holds
+    hundreds of millions of users sharded on user_id. Cross-batch
+    caveat (same class as stream_dedup_incremental's documented
+    divergence): an event arriving in a LATER batch with an EARLIER
+    timestamp than the consumed prefix is walked after it, so
+    batch-equivalence holds for feeds ordered across batches (tested) —
+    what a watermarked event-time source delivers."""
+
+    step: Callable[[tuple, tuple, pd.DataFrame], tuple[tuple, list[tuple]]]
+    out: StructType
+    state_schema: StructType
+    init: tuple
+    sort_by: str | list[str]
+    deadline_ms: Callable[[tuple], int] | None = None
+
+    def __call__(
+        self, key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if self.deadline_ms is not None and state.hasTimedOut:
+            rows = [key + state.get]
+            state.remove()
+        else:
+            pdf = pd.concat(list(pdfs), ignore_index=True)
+            if not pdf.empty:
+                pdf = pdf.sort_values(self.sort_by)
+            new, rows = self.step(
+                key, state.get if state.exists else self.init, pdf
+            )
+            state.update(new)
+            if self.deadline_ms is not None:
+                state.setTimeoutTimestamp(self.deadline_ms(new))
+        if rows:
+            out = pd.DataFrame(rows, columns=self.out.fieldNames())
+            for f in self.out.fields:
+                if isinstance(f.dataType, TimestampType):
+                    out[f.name] = pd.to_datetime(out[f.name], unit="us")
+            yield out
+
+    def apply(self, sdf: DataFrame) -> DataFrame:
+        """Run the walk per user over the streaming ``sdf``, append mode."""
+        return sdf.groupBy("user_id").applyInPandasWithState(
+            self.__call__,
+            outputStructType=self.out,
+            stateStructType=self.state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout
+            if self.deadline_ms is None
+            else GroupStateTimeout.EventTimeTimeout,
+        )
+
+
 _SESSION_OUT = StructType(
     [
         StructField("user_id", LongType()),
@@ -423,135 +507,55 @@ _SESSION_STATE = StructType(
 )
 
 
-def _sessionize_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    gap = SESSION_GAP_MINUTES * 60 * 1_000_000
-    (user_id,) = key
-    if state.exists:
-        start, last, n, total = state.get
-    else:
-        start = last = n = None
-        total = 0.0
-    closed: list[tuple] = []
-    # One global sort over the whole group: pdfs yields multiple Arrow
-    # chunks for large groups, and chunk order is arbitrary — sorting
-    # per-chunk would process events out of time order.
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if not pdf.empty:
-        pdf = pdf.sort_values("ts")
+def _session_step(key: tuple, st: tuple, pdf: pd.DataFrame):
+    """Gap sessionizer: the state is the user's open session (start,
+    last, n, total); an event more than the gap after ``last`` closes it
+    as an output row and opens the next."""
+    start, last, n, total = st
+    closed = []
     for ts, value in zip(pdf["ts"], pdf["value"]):
         t = int(ts.value // 1000)  # ns -> us
-        if start is None:
-            start, last, n, total = t, t, 1, float(value)
-        elif t - last > gap:
-            closed.append((user_id, start, last, n, total))
-            start, last, n, total = t, t, 1, float(value)
+        if start is not None and t - last <= _SESSION_GAP_US:
+            last, n, total = max(last, t), n + 1, total + float(value)
         else:
-            last = max(last, t)
-            n += 1
-            total += float(value)
-    state.update((start, last, n, total))
-    if closed:
-        out = pd.DataFrame(
-            closed,
-            columns=[
-                "user_id", "session_start", "session_end",
-                "n_events", "total_value",
-            ],
-        )
-        out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-        out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-        yield out
+            if start is not None:
+                closed.append(key + (start, last, n, total))
+            start, last, n, total = t, t, 1, float(value)
+    return (start, last, n, total), closed
 
 
-def sessionize_stream(sdf: DataFrame) -> DataFrame:
+def _session_close_ms(st: tuple) -> int:
+    """Event time, epoch millis, at which the open session closes when
+    no event of its user arrives: its last event + the gap."""
+    return (st[1] + _SESSION_GAP_US) // 1000
+
+
+_sessionize_fn = _Walk(
+    _session_step, _SESSION_OUT, _SESSION_STATE, (None, None, None, 0.0), "ts"
+)
+# The event-time-timeout form also closes a session once the watermark
+# passes its close time, so quiet users' sessions still close.
+_sessionize_timeout_fn = _sessionize_fn._replace(deadline_ms=_session_close_ms)
+
+
+def sessionize_stream(
+    spark: SparkSession, source: "str | DataFrame"
+) -> DataFrame:
     """Stateful gap-based sessionization; emits a session once a larger
     gap arrives for that user (the still-open session stays in state)."""
-    return sdf.groupBy("user_id").applyInPandasWithState(
-        _sessionize_fn,
-        outputStructType=_SESSION_OUT,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _sessionize_timeout_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Event-time-timeout variant: a session is emitted when the
-    watermark passes its last event + gap, not only when a newer event
-    arrives for the same user — so quiet users' sessions still close."""
-    gap = SESSION_GAP_MINUTES * 60 * 1_000_000
-    (user_id,) = key
-    if state.hasTimedOut:
-        start, last, n, total = state.get
-        state.remove()
-        out = pd.DataFrame(
-            [(user_id, start, last, n, total)],
-            columns=[
-                "user_id", "session_start", "session_end",
-                "n_events", "total_value",
-            ],
-        )
-        out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-        out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-        yield out
-        return
-    if state.exists:
-        start, last, n, total = state.get
-    else:
-        start = last = n = None
-        total = 0.0
-    closed: list[tuple] = []
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if not pdf.empty:
-        pdf = pdf.sort_values("ts")
-    for ts, value in zip(pdf["ts"], pdf["value"]):
-        t = int(ts.value // 1000)
-        if start is None:
-            start, last, n, total = t, t, 1, float(value)
-        elif t - last > gap:
-            closed.append((user_id, start, last, n, total))
-            start, last, n, total = t, t, 1, float(value)
-        else:
-            last = max(last, t)
-            n += 1
-            total += float(value)
-    state.update((start, last, n, total))
-    state.setTimeoutTimestamp((last + gap) // 1000)  # epoch millis
-    if closed:
-        out = pd.DataFrame(
-            closed,
-            columns=[
-                "user_id", "session_start", "session_end",
-                "n_events", "total_value",
-            ],
-        )
-        out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-        out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-        yield out
+    return _sessionize_fn.apply(events_source(spark, source))
 
 
 def sessionize_stream_timeout(
-    sdf: DataFrame, watermark: str = WATERMARK
+    spark: SparkSession, source: "str | DataFrame", watermark: str = WATERMARK
 ) -> DataFrame:
     """Stateful sessionization with event-time timeouts: sessions close
     either by a larger gap from the same user OR by the watermark
     passing last_event + gap. The watermark delay bounds how late a
     row may arrive before being dropped — 0 would silently discard any
     event older than the previous batch's max event time."""
-    return (
-        sdf.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_timeout_fn,
-            outputStructType=_SESSION_OUT,
-            stateStructType=_SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _sessionize_timeout_fn.apply(
+        events_source(spark, source).withWatermark("ts", watermark)
     )
 
 
@@ -573,7 +577,7 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # microsecond gap math: unix_timestamp() truncates to whole seconds
     # while the oracle's epoch() is fractional — same trap headway.py
     # dodges with epoch_us
-    gap = F.lit(SESSION_GAP_MINUTES * 60 * 1_000_000)
+    gap = F.lit(_SESSION_GAP_US)
     flagged = ev.select(
         "user_id",
         "ts",
@@ -621,71 +625,38 @@ _FUNNEL_STATE = StructType(
 )
 
 
-def _funnel_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user funnel state machine (view -> click-after -> purchase-
-    after), events applied in event-time order within each batch. State
-    is three timestamps — O(1) per user, the property that lets the
-    state store hold hundreds of millions of users sharded on user_id.
-
-    Cross-batch caveat (same class as stream_dedup_incremental's
-    documented divergence): a view arriving in a LATER batch with an
-    EARLIER timestamp than the consumed prefix cannot retroactively
-    re-qualify clicks already seen — batch-equivalence holds for feeds
-    ordered across batches (tested), which is what a watermarked
-    event-time source delivers."""
-    (user_id,) = key
-    fv, fc, fp = state.get if state.exists else (None, None, None)
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if not pdf.empty:
-        pdf = pdf.sort_values(["ts", "event_id"])
-    stage0 = 3 if fp is not None else 2 if fc is not None else (
-        1 if fv is not None else 0
-    )
+def _funnel_step(key: tuple, st: tuple, pdf: pd.DataFrame):
+    """Funnel state machine (view -> click-after -> purchase-after):
+    the state is the three stage-entry times; one (user, stage, fv, fc,
+    fp) row is emitted when the batch advances the stage."""
+    fv, fc, fp = st
     for ts, et in zip(pdf["ts"], pdf["event_type"]):
         t = int(ts.value // 1000)  # ns -> us
-        if et == "view":
-            if fv is None:
-                fv = t
-        elif et == "click":
-            if fc is None and fv is not None and t > fv:
-                fc = t
-        elif et == "purchase":
-            if fp is None and fc is not None and t > fc:
-                fp = t
-    state.update((fv, fc, fp))
-    stage = 3 if fp is not None else 2 if fc is not None else (
-        1 if fv is not None else 0
-    )
-    if stage > stage0:
-        out = pd.DataFrame(
-            [(user_id, stage, fv, fc, fp)],
-            columns=["user_id", "stage", "fv", "fc", "fp"],
-        )
-        for c in ("fv", "fc", "fp"):
-            out[c] = pd.to_datetime(out[c], unit="us")
-        yield out
+        if et == "view" and fv is None:
+            fv = t
+        elif et == "click" and fc is None and fv is not None and t > fv:
+            fc = t
+        elif et == "purchase" and fp is None and fc is not None and t > fc:
+            fp = t
+    # a stage is entered only after the one before it, so the stage is
+    # the number of entry times set
+    stage = sum(x is not None for x in (fv, fc, fp))
+    advanced = stage > sum(x is not None for x in st)
+    return (fv, fc, fp), [key + (stage, fv, fc, fp)] if advanced else []
 
 
-def stream_funnel(sdf: DataFrame) -> DataFrame:
+_funnel_fn = _Walk(
+    _funnel_step, _FUNNEL_OUT, _FUNNEL_STATE, (None,) * 3, ["ts", "event_id"]
+)
+
+
+def stream_funnel(spark: SparkSession, source: "str | DataFrame") -> DataFrame:
     """Streaming twin of operators/behavior.py::_user_funnel: emits a
     row whenever a user's funnel stage ADVANCES (append mode), carrying
     the three stage-entry timestamps. The latest row per user is the
     live funnel position; max-stage-per-user aggregated downstream
     reproduces funnel_conversion's cumulative counts."""
-    return sdf.groupBy("user_id").applyInPandasWithState(
-        _funnel_fn,
-        outputStructType=_FUNNEL_OUT,
-        stateStructType=_FUNNEL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_funnel_from_dir(spark: SparkSession, events_dir: str) -> DataFrame:
-    src = events_source(spark, events_dir)
-    return stream_funnel(src)
+    return _funnel_fn.apply(events_source(spark, source))
 
 
 _TRANSITION_OUT = StructType(
@@ -707,59 +678,39 @@ _TRANSITION_STATE = StructType(
 )
 
 
-def _transition_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user transition emitter: applies the batch's events in
-    event-time order (event_id tie-break), emitting one pre-aggregated
-    (from_type, to_type, n) row set per batch. The ONLY state is the
-    last event seen — transitions spanning a batch boundary are counted
-    because the state seeds the first pair of the next batch.
-
-    Cross-batch caveat (same class as stream_funnel): an event arriving
-    in a later batch with an earlier timestamp than the consumed prefix
-    is sequenced after it, so batch-equivalence holds for feeds ordered
-    across batches — what a watermarked event-time source delivers."""
-    del key  # transitions are keyed downstream by (from, to)
-    last = state.get if state.exists else (None, None, None)
-    _last_ts, _last_eid, last_type = last
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if not pdf.empty:
-        pdf = pdf.sort_values(["ts", "event_id"])
-    counts: dict[tuple[str, str], int] = {}
+def _transition_step(key: tuple, last: tuple, pdf: pd.DataFrame):
+    """Transition counter: the state is the last event seen, so it
+    seeds the first pair of the next batch and transitions spanning a
+    batch boundary are counted; the rows are the batch's pre-aggregated
+    (from_type, to_type, n) counts."""
+    last_ts, last_eid, last_type = last
+    counts: Counter = Counter()
     for ts, eid, et in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
         if last_type is not None:
-            pair = (last_type, et)
-            counts[pair] = counts.get(pair, 0) + 1
-        _last_ts, _last_eid, last_type = int(ts.value // 1000), int(eid), et
-    state.update((_last_ts, _last_eid, last_type))
-    if counts:
-        yield pd.DataFrame(
-            [(a, b, n) for (a, b), n in sorted(counts.items())],
-            columns=["from_type", "to_type", "n"],
-        )
+            counts[last_type, et] += 1
+        last_ts, last_eid, last_type = int(ts.value // 1000), int(eid), et
+    rows = [pair + (n,) for pair, n in sorted(counts.items())]
+    return (last_ts, last_eid, last_type), rows
 
 
-def stream_transitions(sdf: DataFrame) -> DataFrame:
+_transition_fn = _Walk(
+    _transition_step,
+    _TRANSITION_OUT,
+    _TRANSITION_STATE,
+    (None,) * 3,
+    ["ts", "event_id"],
+)
+
+
+def stream_transitions(
+    spark: SparkSession, source: "str | DataFrame"
+) -> DataFrame:
     """Streaming twin of operators/behavior.py::event_transition_matrix
     (counts only — probabilities are a trivial batch view over the
     served counts): emits per-batch pre-aggregated transition counts;
     summing n per (from_type, to_type) downstream reproduces the batch
     matrix. State is one (ts, event_id, type) triple per user."""
-    return sdf.groupBy("user_id").applyInPandasWithState(
-        _transition_fn,
-        outputStructType=_TRANSITION_OUT,
-        stateStructType=_TRANSITION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_transitions_from_dir(
-    spark: SparkSession, events_dir: str
-) -> DataFrame:
-    src = events_source(spark, events_dir)
-    return stream_transitions(src)
+    return _transition_fn.apply(events_source(spark, source))
 
 
 def stream_interval_join(
@@ -902,29 +853,12 @@ def materialize_hourly(
     the checkpoint: a run over an existing checkpoint resumes at the
     count it recorded. To re-shard, start over with a new checkpoint
     (see :func:`_await_available_now`)."""
-    from ..functions.portable import davg
     from ..plans.sinks import _upsert_partitioned
 
-    src = events_source(spark, events_dir)
-    agg = (
-        src.groupBy(
-            F.window("ts", "1 hour").alias("win"),
-            F.col("event_type").alias("route_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("vehicle_events"),
-            # delay_hourly (the reference's view) leaves out rows with no
-            # route, so the NULL route is served with no average delay.
-            davg(
-                F.when(F.col("event_type").isNotNull(), F.col("value")), 4
-            ).alias("avg_delay_seconds"),
-        )
-        .select(
-            F.col("win.start").alias("hour_ts"),
-            "route_id",
-            "vehicle_events",
-            "avg_delay_seconds",
-        )
+    agg = _route_windows(
+        events_source(spark, events_dir),
+        F.window("ts", "1 hour"),
+        F.col("win.start").alias("hour_ts"),
     )
 
     def _upsert(batch_df, batch_id: int) -> None:
@@ -974,73 +908,49 @@ _ATTRIB_OUT = StructType(
 _ATTRIB_STATE = StructType([StructField("last_touch", StringType())])
 
 
-def _attrib_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user last-touch attributor: replays the batch's events in
-    event-time order (event_id tie-break); every purchase is credited
-    to the last non-purchase event type seen so far ('direct' if none),
-    and only the (channel, count, value-sum) pre-aggregate leaves the
-    Python worker. State is one last-touch string per user — a
-    purchase does NOT reset the touch, matching the batch
-    IGNORE-NULLS last_value window (behavior.py::attribution_last_touch).
-
-    Cross-batch caveat (same class as stream_funnel): an event arriving
-    in a later batch with an earlier timestamp than the consumed prefix
-    is sequenced after it, so batch-equivalence holds for feeds ordered
-    across batches — what a watermarked event-time source delivers.
+def _attrib_step(key: tuple, st: tuple, pdf: pd.DataFrame):
+    """Last-touch attributor: every purchase is credited to the last
+    non-purchase event type seen so far ('direct' if none), and only
+    the (channel, count, value-sum) pre-aggregate leaves the Python
+    worker. The state is the last touch — a purchase does NOT reset it,
+    matching the batch IGNORE-NULLS last_value window
+    (behavior.py::attribution_last_touch).
 
     NULL purchase values count the purchase but add 0 to the sum,
     matching the batch twin's count(*) + null-skipping sum. A NULL
     event_type is neither a purchase nor a touch — skipped, exactly as
     the batch twin's IGNORE-NULLS window skips the NULL the
     non-purchase CASE maps it to."""
-    del key
-    (last_touch,) = state.get if state.exists else (None,)
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if not pdf.empty:
-        pdf = pdf.sort_values(["ts", "event_id"])
-    counts: dict[str, int] = {}
-    sums: dict[str, float] = {}
+    (last_touch,) = st
+    agg: dict[str, list] = {}
     for et, val in zip(pdf["event_type"], pdf["value"]):
-        if et is None or (isinstance(et, float) and pd.isna(et)):
+        if not isinstance(et, str):
             continue
-        if et == "purchase":
-            ch = last_touch if last_touch is not None else "direct"
-            counts[ch] = counts.get(ch, 0) + 1
-            if not pd.isna(val):
-                sums[ch] = sums.get(ch, 0.0) + float(val)
-        else:
+        if et != "purchase":
             last_touch = et
-    state.update((last_touch,))
-    if counts:
-        yield pd.DataFrame(
-            [
-                (ch, n, sums.get(ch, 0.0))
-                for ch, n in sorted(counts.items())
-            ],
-            columns=["attributed_type", "n_purchases", "value_sum"],
+            continue
+        acc = agg.setdefault(
+            "direct" if last_touch is None else last_touch, [0, 0.0]
         )
+        acc[0] += 1
+        if not pd.isna(val):
+            acc[1] += float(val)
+    return (last_touch,), [(c, n, s) for c, (n, s) in sorted(agg.items())]
 
 
-def stream_attribution(sdf: DataFrame) -> DataFrame:
+_attrib_fn = _Walk(
+    _attrib_step, _ATTRIB_OUT, _ATTRIB_STATE, (None,), ["ts", "event_id"]
+)
+
+
+def stream_attribution(
+    spark: SparkSession, source: "str | DataFrame"
+) -> DataFrame:
     """Streaming twin of behavior.py::attribution_last_touch (sums only
     — the rounded report is a trivial batch view over the served
     pre-aggregates): emits per-batch (channel, purchases, value) rows;
     summing downstream reproduces the batch attribution table."""
-    return sdf.groupBy("user_id").applyInPandasWithState(
-        _attrib_fn,
-        outputStructType=_ATTRIB_OUT,
-        stateStructType=_ATTRIB_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_attribution_from_dir(
-    spark: SparkSession, events_dir: "str | DataFrame"
-) -> DataFrame:
-    return stream_attribution(events_source(spark, events_dir))
+    return _attrib_fn.apply(events_source(spark, source))
 
 
 QUERIES = {"user_sessions": sessionize_batch}
@@ -1076,7 +986,8 @@ ORACLES = {
 
 
 def stream_sessions_native(
-    sdf: DataFrame,
+    spark: SparkSession,
+    source: "str | DataFrame",
     gap_minutes: int = SESSION_GAP_MINUTES,
     watermark: str = WATERMARK,
 ) -> DataFrame:
@@ -1108,7 +1019,8 @@ def stream_sessions_native(
     from ..functions.portable import dsum
 
     return (
-        sdf.withWatermark("ts", watermark)
+        events_source(spark, source)
+        .withWatermark("ts", watermark)
         .groupBy(
             F.session_window("ts", f"{gap_minutes} minutes").alias("w"),
             "user_id",
@@ -1127,12 +1039,6 @@ def stream_sessions_native(
             "total_value",
         )
     )
-
-
-def stream_sessions_native_from_dir(
-    spark: SparkSession, events_dir: "str | DataFrame"
-) -> DataFrame:
-    return stream_sessions_native(events_source(spark, events_dir))
 
 
 # ------------------------- trending top-k (windowed heavy hitters) --
@@ -1213,53 +1119,34 @@ _PATHS_STATE = StructType(
 )
 
 
-def _paths_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user 3-step path emitter: applies the batch's events in
-    event-time order (event_id tie-break), emitting pre-aggregated
-    (path, n) rows per batch; the state is the user's last TWO event
-    types so triples spanning a batch boundary are counted. Same
-    cross-batch ordering caveat as _transition_fn (event-time-ordered
-    feeds, which a watermarked source delivers)."""
-    del key
-    prev2, prev1 = state.get if state.exists else (None, None)
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if not pdf.empty:
-        pdf = pdf.sort_values(["ts", "event_id"])
-    counts: dict[str, int] = {}
+def _paths_step(key: tuple, st: tuple, pdf: pd.DataFrame):
+    """3-step path counter: the state is the user's last two event
+    types, so triples spanning a batch boundary are counted; the rows
+    are the batch's pre-aggregated (path, n) counts."""
+    prev2, prev1 = st
+    counts: Counter = Counter()
     for et in pdf["event_type"]:
         if prev2 is not None and prev1 is not None:
-            path = f"{prev2}>{prev1}>{et}"
-            counts[path] = counts.get(path, 0) + 1
+            counts[f"{prev2}>{prev1}>{et}"] += 1
         prev2, prev1 = prev1, et
-    state.update((prev2, prev1))
-    if counts:
-        yield pd.DataFrame(
-            sorted(counts.items()), columns=["path", "n"]
-        )
+    return (prev2, prev1), sorted(counts.items())
 
 
-def stream_path_trigrams(sdf: DataFrame) -> DataFrame:
+_paths_fn = _Walk(
+    _paths_step, _PATHS_OUT, _PATHS_STATE, (None, None), ["ts", "event_id"]
+)
+
+
+def stream_path_trigrams(
+    spark: SparkSession, source: "str | DataFrame"
+) -> DataFrame:
     """Streaming twin of operators/behavior.py::event_path_trigrams
     (counts only — rank/share are a trivial batch view over the served
     counts, the counts-in-stream / ORDER-BY-in-serving split every
     top-k twin here makes): emits per-batch pre-aggregated 3-step path
     counts; summing n per path downstream reproduces the batch triple
     counts. State is the last two event types per user — O(1)."""
-    return sdf.groupBy("user_id").applyInPandasWithState(
-        _paths_fn,
-        outputStructType=_PATHS_OUT,
-        stateStructType=_PATHS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_path_trigrams_from_dir(
-    spark: SparkSession, events_dir: str
-) -> DataFrame:
-    return stream_path_trigrams(events_source(spark, events_dir))
+    return _paths_fn.apply(events_source(spark, source))
 
 
 # --- mergeable-state serving sinks ------------------------------------------

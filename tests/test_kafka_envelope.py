@@ -149,14 +149,14 @@ def test_native_session_window_equals_batch(spark, tmp_path):
     per-session bounds, event counts, value sums)."""
     from big_data_project_spark.streaming.pipeline import (
         sessionize_batch,
-        stream_sessions_native_from_dir,
+        stream_sessions_native,
     )
 
     events = load_table(spark, SF_DIR, "events")
     src = str(tmp_path / "sess_native_src")
     events.write.parquet(src)
     streamed = pipeline.run_available_now(
-        stream_sessions_native_from_dir(spark, src),
+        stream_sessions_native(spark, src),
         "native_sessions",
         output_mode="complete",
     ).collect()
@@ -182,7 +182,7 @@ def test_native_session_checkpoint_recovery(spark, tmp_path):
     open session, and emit it as ONE session row once a later event
     pushes the watermark past its close."""
     from big_data_project_spark.streaming.pipeline import (
-        stream_sessions_native_from_dir,
+        stream_sessions_native,
     )
 
     src = str(tmp_path / "ns_src")
@@ -200,7 +200,7 @@ def test_native_session_checkpoint_recovery(spark, tmp_path):
 
     def run_once():
         q = (
-            stream_sessions_native_from_dir(spark, src)
+            stream_sessions_native(spark, src)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

@@ -178,7 +178,7 @@ def test_stream_transitions_equal_batch(spark, tmp_path):
         src
     )
     out = pipeline.run_available_now(
-        pipeline.stream_transitions_from_dir(spark, src),
+        pipeline.stream_transitions(spark, src),
         "trans_out",
         output_mode="append",
     ).collect()
@@ -582,7 +582,7 @@ def test_stream_transitions_checkpoint_recovery(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(src)
 
     def run_once():
-        sdf = pipeline.stream_transitions_from_dir(spark, src)
+        sdf = pipeline.stream_transitions(spark, src)
         q = (
             sdf.writeStream.format("parquet")
             .option("path", out)

@@ -152,7 +152,7 @@ def test_stream_attribution_equals_batch(spark, tmp_path):
     src = str(tmp_path / "attrib_src")
     load_table(spark, SF_DIR, "events").write.parquet(src)
     out = pipeline.run_available_now(
-        pipeline.stream_attribution_from_dir(spark, src),
+        pipeline.stream_attribution(spark, src),
         "attrib_out",
         output_mode="append",
     ).collect()

@@ -638,7 +638,7 @@ def test_stream_path_trigrams_equal_batch(spark, tmp_path):
     src = str(tmp_path / "paths_src")
     load_table(spark, sf, "events").write.parquet(src)
     out = pipeline.run_available_now(
-        pipeline.stream_path_trigrams_from_dir(spark, src),
+        pipeline.stream_path_trigrams(spark, src),
         "paths_out",
         output_mode="append",
     ).collect()

@@ -203,7 +203,7 @@ def test_sessionize_stream_closes_gapped_sessions(spark, tmp_path):
     df.write.parquet(src)
     sdf = spark.readStream.schema(pipeline.EVENTS_SCHEMA).parquet(src)
     out = pipeline.run_available_now(
-        pipeline.sessionize_stream(sdf), "sessions_out", output_mode="append"
+        pipeline.sessionize_stream(spark, sdf), "sessions_out", output_mode="append"
     )
     closed = [
         (r["user_id"], r["n_events"], r["total_value"])
@@ -229,7 +229,7 @@ def test_sessionize_timeout_flushes_quiet_users(spark, tmp_path):
     def run_once():
         sdf = spark.readStream.schema(pipeline.EVENTS_SCHEMA).parquet(src)
         q = (
-            pipeline.sessionize_stream_timeout(sdf)
+            pipeline.sessionize_stream_timeout(spark, sdf)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
@@ -898,7 +898,7 @@ def test_stream_funnel_equals_batch(spark, tmp_path):
     src = str(tmp_path / "funnel_src")
     load_table(spark, "/root/testdata/sf0.001", "events").write.parquet(src)
     out = pipeline.run_available_now(
-        pipeline.stream_funnel_from_dir(spark, src),
+        pipeline.stream_funnel(spark, src),
         "funnel_out",
         output_mode="append",
     ).collect()

@@ -1,12 +1,15 @@
 """Driver simulation: exercises __spark_entry__.py exactly like the
 harness (entry() smoke + per-query DuckDB-oracle compare).
 
-Usage: python tools/drive_contract.py [sf_dir]
+Usage: python tools/drive_contract.py [sf_dir] [key ...]
   default sf_dir /root/testdata/sf0.01; ALWAYS also run with
   /root/testdata/sf0.1 — float-accumulation bugs only show at larger SF.
+  With keys, only those registry keys are compared; a mismatching key
+  prints its Spark types and up to 5 rows of each side.
 """
 import hashlib
 import math
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -15,6 +18,12 @@ import duckdb
 
 import __spark_entry__ as e
 from big_data_project_spark.session import get_spark
+
+args = sys.argv[1:]
+# a path has a "/" or names a directory; a registry key has neither
+is_dir = bool(args) and ("/" in args[0] or os.path.isdir(args[0]))
+SF = args.pop(0) if is_dir else "/root/testdata/sf0.01"
+KEYS = args
 
 spark = get_spark("drive")
 
@@ -25,7 +34,6 @@ print(f"entry(): rows={len(rows)} schema={[f.name for f in df.schema.fields]}")
 assert len(rows) > 0
 
 # 2. t2 gate
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
@@ -50,7 +58,7 @@ import time
 qs, os_ = e.queries(), e.oracle_sql()
 fails = []
 timings = {}
-for name in qs:  # registry insertion order — matches the driver's walk
+for name in KEYS or qs:  # else registry insertion order, as the driver walks
     t0 = time.monotonic()
     sdf = qs[name](spark, SF)
     scols = [c.lower() for c in sdf.columns]
@@ -68,6 +76,10 @@ for name in qs:  # registry insertion order — matches the driver's walk
     status = "OK" if (ok_schema and ok_rows and ok_hash) else "MISMATCH"
     if status != "OK":
         fails.append(name)
+        if KEYS:
+            print(f"  spark types: {[(f.name, f.dataType.simpleString()) for f in sdf.schema.fields]}")
+            print(f"  spark rows (<=5): {srows[:5]}")
+            print(f"  duck  rows (<=5): {drows[:5]}")
     print(f"{name}: {status} rows={len(srows)}/{len(drows)} schema={ok_schema} hash={ok_hash} t={timings[name]:.2f}s")
 
 slow = sorted(timings.items(), key=lambda kv: -kv[1])[:10]
