@@ -43,8 +43,9 @@ out a DataFrame bound to a dead JVM context.
 
 One ``RLock`` guards the tier, held across a build, so two threads asking
 for the same cold entry build it once. It must be re-entrant because
-builds nest: ``kpi_hourly`` builds ``demand_hourly``, which builds
-``vehicle_hour_base``, which calls ``load_table``.
+builds nest: ``kpi_hourly`` builds the (route, hour) tier of
+operators/hourly.py — ``demand_hourly``, whose build reads
+``vehicle_hour_base``, whose build calls ``load_table``.
 """
 
 from __future__ import annotations

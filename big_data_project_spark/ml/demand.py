@@ -203,7 +203,7 @@ def demand_model_leaderboard(
     ``baseline_leaderboard`` (both-lags-exist restriction, the
     seasonal_naive_eval rule)."""
     from ..functions.portable import davg
-    from ..operators.kpi import demand_hourly_cached as demand_hourly
+    from ..operators.hourly import demand_hourly
 
     preds = rf_demand_predictions(spark, sf_dir).select(
         "route_id", "hour_ts", "y_true", "y_pred"
@@ -252,7 +252,7 @@ def baseline_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaderboard aggregate is 2 rows."""
     from ..caching import persisted
     from ..functions.portable import davg
-    from ..operators.kpi import demand_hourly_cached as demand_hourly
+    from ..operators.hourly import demand_hourly
 
     d = persisted(
         demand_hourly(spark, sf_dir).select(
@@ -372,7 +372,7 @@ def demand_leaderboard_audit(
     (days×24 rows), the tag is a broadcast scalar join, the predictor
     joins are rollup-sized hash equi-joins, and the output is 3 rows."""
     from ..functions.portable import davg
-    from ..operators.kpi import demand_hourly_cached as demand_hourly
+    from ..operators.hourly import demand_hourly
 
     base = training_frame(spark, sf_dir).select(
         "route_id",

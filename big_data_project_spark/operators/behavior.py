@@ -1447,7 +1447,8 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation.
 
     Determinism: exact integer counts; share is a 6dp pround; rank
-    orders by (n DESC, path ASC)."""
+    orders by (n DESC, path ASC NULLS LAST), DuckDB's default order. A
+    triple with a NULL first or second event has a NULL path."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     triples = (
@@ -1460,7 +1461,8 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("e3").isNotNull())
         .select(
             "user_id",
-            F.concat_ws(">", "e1", "e2", "e3").alias("path"),
+            # NULL when any step is NULL, as the oracle's || is
+            F.concat("e1", F.lit(">"), "e2", F.lit(">"), "e3").alias("path"),
         )
     )
     agg = triples.groupBy("path").agg(
@@ -1468,7 +1470,7 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("n_users"),
     )
     total = agg.agg(F.sum("n").alias("total"))
-    w_rank = Window.orderBy(F.col("n").desc(), F.col("path").asc())
+    w_rank = Window.orderBy(F.col("n").desc(), F.col("path").asc_nulls_last())
     return (
         agg.crossJoin(F.broadcast(total))
         .withColumn("share", pround(F.col("n") / F.col("total"), 6))

@@ -22,176 +22,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.portable import pround, sql_davg
+from ..functions.portable import davg, pround, sql_davg
 from ..functions.time import day_of_week, hour_of_day, is_peak_hour
 from ..rollups import shared_rollup
-from .headway import SQL_HEADWAY
 from .hourly import (
     SQL_ACTIVE,
     SQL_DELAY,
     SQL_DEMAND,
+    SQL_HEADWAY,
     SQL_VEHICLE,
     SQL_WEATHER,
+    active_users_hourly,
+    delay_hourly,
+    demand_hourly,
+    headway_hourly,
     weather_hourly,
 )
 
-# Materialized-view tier (rollups.shared_rollup): the composite family
-# is fed from ONE shared (route, hour, vehicle)-grain partial aggregate
-# over the events feed. Because the float partials are exact
-# DECIMAL(28,6) sums (associative + commutative), re-aggregating the
-# partials to (route, hour) is bit-identical to aggregating the raw feed
-# directly — so stats, active-vehicle counts, AND headway all derive
-# from a single scan+shuffle, and the stop→route mapping used by demand
-# comes from the same tiny relation instead of a second full scan.
-# Mirrors the reference's kpi_views.sql materialized-view layer; the
-# standalone one-view-per-metric queries() entries in hourly.py keep the
-# reference's original per-view shapes.
-
-
-def _vehicle_hour_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial aggregate at (route, hour, vehicle) grain — one pass over
-    the 100 TB feed; every composite rollup re-aggregates this tiny
-    relation instead of re-scanning the feed."""
-    from ..catalog import load_table
-    from ..functions.time import hour_trunc
-
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("route_id"),
-        hour_trunc("ts").alias("hour_ts"),
-        F.col("user_id").alias("vehicle_id"),
-    ).agg(
-        F.count(F.lit(1)).alias("cnt_all"),
-        F.count("value").alias("cnt_val"),
-        F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_val"),
-        F.min("ts").alias("first_seen"),
-    )
-
-
-def _base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_rollup(spark, sf_dir, "vehicle_hour_base", _vehicle_hour_base)
-
-
-def _demand_from_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """demand_hourly semantics, with the stop→route mapping distinct'd
-    from the cached base relation rather than a second full feed scan."""
-    from ..catalog import load_table
-    from ..functions.time import hour_trunc
-    from ..functions.portable import dsum
-
-    mapping = (
-        _base_cached(spark, sf_dir)
-        .select(F.col("vehicle_id").alias("stop_id"), "route_id")
-        .distinct()
-    )
-    ev = load_table(spark, sf_dir, "events")
-    flow = ev.select(
-        F.col("user_id").alias("stop_id"),
-        F.col("ts"),
-        F.col("value").alias("estimated_passengers"),
-    )
-    return (
-        flow.join(F.broadcast(mapping), "stop_id")
-        .groupBy("route_id", hour_trunc("ts").alias("hour_ts"))
-        .agg(dsum("estimated_passengers", 2).alias("passengers"))
-    )
-
-
-def _stats_from_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_route_hour_stats semantics from the shared base: summing the
-    exact decimal partials is order-independent, so avg_delay_seconds
-    matches the single-pass davg bit-for-bit; active_vehicles is the
-    group count (vehicle_id is a group key of the base)."""
-    b = _base_cached(spark, sf_dir).filter(F.col("route_id").isNotNull())
-    return b.groupBy("route_id", "hour_ts").agg(
-        F.sum("cnt_all").alias("trip_update_events"),
-        pround(
-            F.sum("sum_val").cast("double") / F.sum("cnt_val"), 4
-        ).alias("avg_delay_seconds"),
-        F.sum("cnt_all").alias("vehicle_events"),
-        F.count(F.lit(1)).alias("active_vehicles"),
-    )
-
-
-def _headway_from_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """headway_hourly semantics from the shared base (first_seen is
-    already the per-vehicle MIN(ts))."""
-    from pyspark.sql.window import Window as W
-
-    b = _base_cached(spark, sf_dir).filter(F.col("route_id").isNotNull())
-    w = W.partitionBy("route_id", "hour_ts").orderBy("first_seen")
-    gaps = b.select("route_id", "hour_ts", "first_seen").withColumn(
-        "headway_min",
-        (
-            F.unix_micros("first_seen")
-            - F.unix_micros(F.lag("first_seen").over(w))
-        )
-        / F.lit(60_000_000.0),
-    )
-    valid = F.when(
-        F.col("headway_min").between(0.5, 60.0), F.col("headway_min")
-    )
-    return gaps.groupBy("route_id", "hour_ts").agg(
-        pround(
-            F.sum(valid.cast("decimal(28,6)")).cast("double")
-            / F.count(valid),
-            4,
-        ).alias("avg_headway_min")
-    )
-
-
-def _demand_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_rollup(spark, sf_dir, "demand_hourly", _demand_from_base)
-
-
-def _stats_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_rollup(spark, sf_dir, "route_hour_stats", _stats_from_base)
-
-
-def _weather_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_rollup(spark, sf_dir, "weather_hourly", weather_hourly)
-
-
-def _headway_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_rollup(spark, sf_dir, "headway_hourly", _headway_from_base)
-
-
-# Public accessors for the shared tier: the trend/forecast family
-# (operators/trend.py, ml/demand.py) consumes the same (route, hour)
-# rollups as the kpi composites, so routing them through the
-# materialized tier amortizes the corpus scan across the whole family
-# instead of re-deriving per query. Values are bit-identical to the
-# standalone hourly.py views (decimal partials re-aggregate exactly;
-# proven by ml_dataset_hourly's oracle, which is written against the
-# per-view SQL).
-
-
-def demand_hourly_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _demand_cached(spark, sf_dir)
-
-
-def delay_hourly_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _stats_cached(spark, sf_dir).select(
-        "route_id", "hour_ts", "trip_update_events", "avg_delay_seconds"
-    )
-
-
-def weather_hourly_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _weather_cached(spark, sf_dir)
-
 
 def ml_dataset_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pd_ = _demand_cached(spark, sf_dir)
-    stats = _stats_cached(spark, sf_dir).select(
-        "route_id",
-        "hour_ts",
-        "trip_update_events",
-        "avg_delay_seconds",
-        "vehicle_events",
-    )
-    wh = _weather_cached(spark, sf_dir)
+    # a left join on route_id matches only non-NULL routes, where
+    # events_hourly's vehicle_events equals trip_update_events
+    pd_ = demand_hourly(spark, sf_dir)
+    dl = delay_hourly(spark, sf_dir)
+    wh = weather_hourly(spark, sf_dir)
     return (
-        pd_.join(F.broadcast(stats), ["route_id", "hour_ts"], "left")
+        pd_.join(F.broadcast(dl), ["route_id", "hour_ts"], "left")
         .join(F.broadcast(wh), ["hour_ts"], "left")
         .select(
             "route_id",
@@ -199,7 +55,7 @@ def ml_dataset_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("passengers").cast("double").alias("passengers"),
             F.coalesce("trip_update_events", F.lit(0)).alias("trip_update_events"),
             F.coalesce("avg_delay_seconds", F.lit(0.0)).alias("avg_delay_seconds"),
-            F.coalesce("vehicle_events", F.lit(0)).alias("vehicle_events"),
+            F.coalesce("trip_update_events", F.lit(0)).alias("vehicle_events"),
             F.coalesce("temperature_c", F.lit(0.0)).alias("temperature_c"),
             F.coalesce("precipitation_mm", F.lit(0.0)).alias("precipitation_mm"),
             F.coalesce("wind_speed_mps", F.lit(0.0)).alias("wind_speed_mps"),
@@ -217,7 +73,7 @@ def prediction_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (demand_predictions); the pyspark.ml model lives in
     ml/demand.py and is benchmarked separately (not SQL-expressible).
     """
-    pd_ = _demand_cached(spark, sf_dir)
+    pd_ = demand_hourly(spark, sf_dir)
     w = Window.partitionBy("route_id").orderBy("hour_ts")
     return (
         pd_.select(
@@ -237,30 +93,22 @@ def kpi_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kpi_hourly_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pred = prediction_baseline(spark, sf_dir)
-    stats = _stats_cached(spark, sf_dir).select(
+    kpi = prediction_baseline(spark, sf_dir)
+    for side in (active_users_hourly, headway_hourly, delay_hourly):
+        kpi = kpi.join(
+            F.broadcast(side(spark, sf_dir)), ["route_id", "hour_ts"], "left"
+        )
+    return kpi.select(
         "route_id",
         "hour_ts",
-        "active_vehicles",
-        "trip_update_events",
-        "avg_delay_seconds",
-    )
-    hw = _headway_cached(spark, sf_dir)
-    return (
-        pred.join(F.broadcast(stats), ["route_id", "hour_ts"], "left")
-        .join(F.broadcast(hw), ["route_id", "hour_ts"], "left")
-        .select(
-            "route_id",
-            "hour_ts",
-            F.col("y_pred").alias("predicted_passengers"),
-            F.col("y_true").alias("observed_passengers"),
-            F.coalesce("active_vehicles", F.lit(0)).alias("active_vehicles"),
-            "avg_headway_min",
-            F.coalesce("trip_update_events", F.lit(0)).alias("trip_update_events"),
-            F.coalesce("avg_delay_seconds", F.lit(0.0)).alias("avg_delay_seconds"),
-            hour_of_day("hour_ts").alias("hour_of_day"),
-            is_peak_hour("hour_ts").alias("is_peak_hour"),
-        )
+        F.col("y_pred").alias("predicted_passengers"),
+        F.col("y_true").alias("observed_passengers"),
+        F.coalesce("active_vehicles", F.lit(0)).alias("active_vehicles"),
+        "avg_headway_min",
+        F.coalesce("trip_update_events", F.lit(0)).alias("trip_update_events"),
+        F.coalesce("avg_delay_seconds", F.lit(0.0)).alias("avg_delay_seconds"),
+        hour_of_day("hour_ts").alias("hour_of_day"),
+        is_peak_hour("hour_ts").alias("is_peak_hour"),
     )
 
 
@@ -271,8 +119,6 @@ def peak_hours_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     win = kpi.join(F.broadcast(latest)).filter(
         F.col("hour_ts") >= F.col("max_ts") - F.expr("INTERVAL 24 HOURS")
     )
-    from ..functions.portable import davg  # noqa: F811
-
     active_pos = F.when(
         F.col("active_vehicles") > 0, F.col("active_vehicles")
     )

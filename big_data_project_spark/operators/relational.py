@@ -83,10 +83,9 @@ def demand_delay_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join of two hourly rollups — keeps route-hours seen by
     either side, with presence flags (the shape reconciliation jobs
     need; reference's views only left-join)."""
-    from .hourly import delay_hourly
-    from .kpi import _demand_cached
+    from .hourly import delay_hourly, demand_hourly
 
-    d = _demand_cached(spark, sf_dir)
+    d = demand_hourly(spark, sf_dir)
     dl = delay_hourly(spark, sf_dir).select(
         "route_id", "hour_ts", "trip_update_events"
     )
@@ -113,9 +112,9 @@ def demand_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly series shrink the window — interval semantics, not
     row-count semantics)."""
     from ..functions.portable import pround
-    from .kpi import _demand_cached
+    from .hourly import demand_hourly
 
-    d = _demand_cached(spark, sf_dir)
+    d = demand_hourly(spark, sf_dir)
     w = (
         Window.partitionBy("route_id")
         .orderBy(F.unix_timestamp("hour_ts"))

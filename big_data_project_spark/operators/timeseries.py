@@ -23,10 +23,14 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import davg, pround, sql_davg, sql_pround
-from .hourly import SQL_DELAY, SQL_DEMAND, SQL_WEATHER
-from .kpi import delay_hourly_cached as delay_hourly
-from .kpi import demand_hourly_cached as demand_hourly
-from .kpi import weather_hourly_cached as weather_hourly
+from .hourly import (
+    SQL_DELAY,
+    SQL_DEMAND,
+    SQL_WEATHER,
+    delay_hourly,
+    demand_hourly,
+    weather_hourly,
+)
 
 ASOF_LOOKBACK_H = 3
 ROLLING_HOURS = 3
@@ -116,10 +120,6 @@ def top_stops_per_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _delay_hourly_ragged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return delay_hourly(spark, sf_dir)
-
-
 def delay_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style gap fill: the full (route x hour) spine from the
     feed's global hour bounds, missing route-hours filled with a zero
@@ -130,7 +130,7 @@ def delay_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     a left join at (route, hour) grain. Cost is spine-sized (tiny), the
     raw feed is only scanned by the hourly rollup itself.
     """
-    d = _delay_hourly_ragged(spark, sf_dir)
+    d = delay_hourly(spark, sf_dir)
     bounds = d.agg(
         F.min("hour_ts").alias("h0"), F.max("hour_ts").alias("h1")
     )

@@ -29,10 +29,16 @@ from ..functions.portable import (
     sql_pround,
     sql_uniform01,
 )
-from .headway import SQL_HEADWAY, headway_hourly
-from .hourly import SQL_DELAY, SQL_DEMAND, SQL_WEATHER
-from .kpi import delay_hourly_cached as delay_hourly
-from .kpi import demand_hourly_cached as demand_hourly
+from .hourly import (
+    SQL_DELAY,
+    SQL_DEMAND,
+    SQL_HEADWAY,
+    SQL_WEATHER,
+    delay_hourly,
+    demand_hourly,
+    headway_hourly,
+    weather_hourly,
+)
 
 CUSUM_MIN_HOURS = 5
 REGULAR_MIN_HOURS = 5
@@ -451,8 +457,6 @@ def weather_delay_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: delay rollup ⋈ broadcast hours-sized weather profile, then
     a routes-sized moment aggregate — the delay_headway_corr shape with
     a broadcast dimension instead of a second rollup."""
-    from .kpi import weather_hourly_cached as weather_hourly
-
     d = delay_hourly(spark, sf_dir).filter(
         F.col("avg_delay_seconds").isNotNull()
     )

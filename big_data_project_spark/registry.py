@@ -27,7 +27,6 @@ from .operators import (
     curation,
     dedup,
     geo,
-    headway,
     hourly,
     ingest,
     kpi,
@@ -77,7 +76,6 @@ _MODULES = [
     cdc,
     # --- r01 cohort: newest driver evidence is CORRECTNESS_r01 ---
     hourly,
-    headway,
     kpi,
     suggestions,
     validation,

@@ -575,8 +575,8 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond gap math: unix_timestamp() truncates to whole seconds
-    # while the oracle's epoch() is fractional — same trap headway.py
-    # dodges with epoch_us
+    # while the oracle's epoch() is fractional — same trap
+    # headway_hourly dodges with epoch_us
     gap = F.lit(_SESSION_GAP_US)
     flagged = ev.select(
         "user_id",
@@ -686,10 +686,12 @@ def _transition_step(key: tuple, last: tuple, pdf: pd.DataFrame):
     last_ts, last_eid, last_type = last
     counts: Counter = Counter()
     for ts, eid, et in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-        if last_type is not None:
+        # as event_transition_matrix: a pair into a NULL type is
+        # dropped, a pair out of one is kept
+        if last_ts is not None and et is not None:
             counts[last_type, et] += 1
         last_ts, last_eid, last_type = int(ts.value // 1000), int(eid), et
-    rows = [pair + (n,) for pair, n in sorted(counts.items())]
+    rows = [pair + (n,) for pair, n in counts.items()]
     return (last_ts, last_eid, last_type), rows
 
 
@@ -1110,26 +1112,32 @@ _PATHS_OUT = StructType(
 )
 
 # last TWO events seen per user — the trigram twin needs one more slot
-# than the transition twin's single pair; still O(1) state per user
+# than the transition twin's single pair; still O(1) state per user. A
+# NULL slot means "no event yet", so a NULL event type is kept as
+# _NULL_TYPE.
 _PATHS_STATE = StructType(
     [
         StructField("prev2_type", StringType()),
         StructField("prev1_type", StringType()),
     ]
 )
+_NULL_TYPE = "\x00"
 
 
 def _paths_step(key: tuple, st: tuple, pdf: pd.DataFrame):
     """3-step path counter: the state is the user's last two event
     types, so triples spanning a batch boundary are counted; the rows
-    are the batch's pre-aggregated (path, n) counts."""
+    are the batch's pre-aggregated (path, n) counts. As
+    event_path_trigrams: a triple ending in a NULL type is dropped, and
+    one with a NULL first or second type counts under a NULL path."""
     prev2, prev1 = st
     counts: Counter = Counter()
     for et in pdf["event_type"]:
-        if prev2 is not None and prev1 is not None:
-            counts[f"{prev2}>{prev1}>{et}"] += 1
-        prev2, prev1 = prev1, et
-    return (prev2, prev1), sorted(counts.items())
+        if prev2 is not None and et is not None:
+            path = f"{prev2}>{prev1}>{et}"
+            counts[None if _NULL_TYPE in (prev2, prev1) else path] += 1
+        prev2, prev1 = prev1, _NULL_TYPE if et is None else et
+    return (prev2, prev1), list(counts.items())
 
 
 _paths_fn = _Walk(

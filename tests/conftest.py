@@ -32,3 +32,27 @@ def duck():
         )
     yield con
     con.close()
+
+
+# event_id strides at which the null_events_dir copy of the sf0.001
+# events table holds a NULL
+NULL_STRIDES = {"user_id": 7, "event_type": 11, "value": 13}
+
+
+@pytest.fixture(scope="session")
+def null_events_dir(spark, tmp_path_factory):
+    """An sf dir holding only ``events``: the sf0.001 table with NULL
+    ``user_id``, ``event_type`` and ``value`` at the NULL_STRIDES
+    event_id strides. The generated data has no NULLs."""
+    from pyspark.sql import functions as F
+
+    from big_data_project_spark.catalog import load_table, table_path
+
+    sf_dir = str(tmp_path_factory.mktemp("null_sf"))
+    ev = load_table(spark, SF_DIR, "events")
+    for col, stride in NULL_STRIDES.items():
+        ev = ev.withColumn(
+            col, F.when(F.col("event_id") % stride != 0, F.col(col))
+        )
+    ev.coalesce(1).write.parquet(table_path(sf_dir, "events"))
+    return sf_dir

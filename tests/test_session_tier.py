@@ -133,3 +133,41 @@ def test_pinned_layout_survives_persist(spark):
                 assert _shuffles_above_cache(plan) == 0, plan.toString()
     finally:
         release_caches()
+
+
+def test_hourly_dag_builds_each_tier_once(spark, monkeypatch):
+    """The hourly DAG's registry keys in DAG order — weather_job,
+    build_kpi_job, ml_job — build and persist each rollup tier once,
+    and the weather relation weather_job writes is the one ml_job
+    reads."""
+    from big_data_project_spark import rollups
+    from big_data_project_spark.registry import QUERIES
+
+    real = rollups.memoized
+    built: dict[str, list] = {}
+
+    def counting(spark_, sf_dir, name, build):
+        def counted():
+            df = build()
+            built.setdefault(name, []).append(df)
+            return df
+
+        return real(spark_, sf_dir, name, counted)
+
+    monkeypatch.setattr(rollups, "memoized", counting)
+    release_caches()
+    try:
+        written = {}
+        for key in ("weather_hourly", "kpi_hourly", "rf_demand_predictions"):
+            written[key] = QUERIES[key](spark, SF_DIR)
+            written[key].write.format("noop").mode("overwrite").save()
+        tiers = {
+            "vehicle_hour_base", "route_hour_stats", "demand_hourly",
+            "headway_hourly", "weather_hourly", "kpi_hourly",
+        }
+        assert tiers <= set(built)
+        assert {n: len(dfs) for n, dfs in built.items() if len(dfs) != 1} == {}
+        assert all(dfs[0].is_cached for dfs in built.values())
+        assert written["weather_hourly"] is built["weather_hourly"][0]
+    finally:
+        release_caches()
