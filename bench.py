@@ -618,6 +618,55 @@ def _cpu_ref_sec() -> float:
     return round(best, 4)
 
 
+def _cache_builders(spark) -> set[int]:
+    """Every relation registered in the CacheManager, by the identity of
+    its CachedRDDBuilder (shared by each copy of the InMemoryRelation)."""
+    ident = spark._jvm.java.lang.System.identityHashCode
+    data = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return {
+        ident(data.apply(i).cachedRepresentation().cacheBuilder())
+        for i in range(data.size())
+    }
+
+
+def _cached_scans(spark, df) -> set[int]:
+    """The cached relations ``df``'s plan scans after cache substitution
+    (``queryExecution().withCachedData()``), by builder identity."""
+    ident = spark._jvm.java.lang.System.identityHashCode
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return {
+        ident(leaf.cacheBuilder())
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "InMemoryRelation"
+    }
+
+
+def _cold_pass(spark, names, run_once):
+    """Run each key once, in order, and time it. Returns (cold seconds,
+    built, read): ``built`` maps each key whose run registered cached
+    relations to their count (a tier BUILDER); ``read`` lists the keys
+    whose plan scans a relation an earlier key registered. The steady
+    numbers of both kinds measure post-materialization repeat cost.
+    A streaming result is not checked for reads: its plan runs through
+    the stream, never through batch cache substitution."""
+    cold: dict[str, float] = {}
+    built: dict[str, int] = {}
+    read: list[str] = []
+    registered: set[int] = set()
+    for name in names:
+        before = _cache_builders(spark)
+        t0 = time.perf_counter()
+        df = run_once(name)
+        cold[name] = round(time.perf_counter() - t0, 3)
+        new = _cache_builders(spark) - before
+        if new:
+            built[name] = len(new)
+        if not df.isStreaming and _cached_scans(spark, df) & registered:
+            read.append(name)
+        registered |= new
+    return cold, built, read
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -692,32 +741,7 @@ def main() -> None:
         # round-over-round deltas like-for-like (round-2 verdict item 4:
         # r01 was cold-ish n=1, r02 was min-of-N post-warm-up — not
         # comparable).
-        # Mechanical amortization evidence (round-9 verdict: the static
-        # `amortized` list went stale when the dedup memo landed): count
-        # the CacheManager registrations each key's COLD run adds — a
-        # key that registers a persisted relation is a tier BUILDER
-        # whose steady numbers measure post-materialization repeat cost.
-        def _n_cached() -> int:
-            try:
-                return (
-                    spark._jsparkSession.sharedState()
-                    .cacheManager()
-                    .cachedData()
-                    .size()
-                )
-            except Exception:  # noqa: BLE001 — diagnostics only
-                return -1
-
-        cold: dict[str, float] = {}
-        cache_regs: dict[str, int] = {}
-        for name in HEADLINE:
-            c0 = _n_cached()
-            t0 = time.perf_counter()
-            run_once(name)
-            cold[name] = round(time.perf_counter() - t0, 3)
-            c1 = _n_cached()
-            if c1 > c0 >= 0:
-                cache_regs[name] = c1 - c0
+        cold, cache_regs, cache_reads = _cold_pass(spark, HEADLINE, run_once)
 
         timings: dict[str, float] = {}
         loads: dict[str, list[float]] = {}
@@ -853,11 +877,13 @@ def main() -> None:
             "regressed_vs_prior": regressed,
             # Keys whose STEADY numbers read a persisted/memoized tier
             # the cold pass built (full-pipeline cost is queries_cold):
-            # every key that registered a cached relation during the
-            # cold pass (`amortized_built_by`: per-key count of
-            # CacheManager registrations).
-            "amortized": sorted(cache_regs),
+            # the union of the builders (`amortized_built_by`: per-key
+            # count of CacheManager registrations) and the readers
+            # (`amortized_read_by`: keys whose cache-substituted plan
+            # scans a relation an earlier key registered).
+            "amortized": sorted(set(cache_regs) | set(cache_reads)),
             "amortized_built_by": cache_regs,
+            "amortized_read_by": cache_reads,
             "ambient_load_frac": round(
                 ambient["load_1m"] / ambient["cpus"], 3
             ),

@@ -5,6 +5,20 @@ each table would be a partitioned parquet/Delta directory; the reader code
 is identical — ``spark.read.parquet`` prunes partitions and pushes filters
 either way.
 
+Every batch parquet read of the package goes through ``read_parquet``,
+which resolves a table's schema on the driver, with no Spark job:
+
+- it reads one footer, the one Spark's non-merge inference picks: the
+  path itself if it is a file, else the root's ``_common_metadata``,
+  then its ``_metadata``, then the first data file in path order (names
+  starting with ``_`` or ``.`` are not data files);
+- it converts that footer with Spark's own converter
+  (``ParquetFileFormat.readSchemaFromFooter`` over a
+  ``ParquetToSparkSchemaConverter`` of the session's SQLConf), so the
+  schema equals what ``spark.read.parquet`` infers;
+- a ``merge_schema`` read keeps Spark's parallel all-footer merge job,
+  the right plan once files of one table may differ.
+
 ``load_table`` and ``load_table_spread`` memoize their scan definitions
 in the session memo tier (``caching``), which assumes the data under
 ``sf_dir`` does not change during the session.
@@ -12,6 +26,7 @@ in the session memo tier (``caching``), which assumes the data under
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,7 +34,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .caching import memoized
-from .session import scoped_conf
 
 TABLES = (
     "region",
@@ -55,25 +69,125 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS); Spark only reads it via
-        # the legacy long path, so surface it as a microsecond timestamp.
-        # Floor division, NOT `div`: `div` truncates toward zero, which
-        # would disagree with DuckDB's epoch_us flooring on pre-1970
-        # nanos. The conf is scoped to the read (it is captured at
-        # analysis time — verified: execution still succeeds) so other
-        # nanos-parquet reads in the session keep default typing.
-        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-            df = spark.read.parquet(table_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(
-                    F.expr("(ts - pmod(ts, 1000)) div 1000")
-                ),
-            )
-        return _tz_normalized(df)
-    return _tz_normalized(spark.read.parquet(table_path(sf_dir, name)))
+    if name != "events":
+        return _tz_normalized(read_parquet(spark, table_path(sf_dir, name)))
+    # events.ts may be parquet TIMESTAMP(NANOS), which Spark reads only
+    # as a long; surface it as a microsecond timestamp. Floor division,
+    # NOT `div`: `div` truncates toward zero, which would disagree with
+    # DuckDB's epoch_us flooring on pre-1970 nanos.
+    df = read_parquet(spark, table_path(sf_dir, name), nanos_as_long=True)
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        df = df.withColumn(
+            "ts", F.timestamp_micros(F.expr("(ts - pmod(ts, 1000)) div 1000"))
+        )
+    return _tz_normalized(df)
+
+
+def read_parquet(
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    *,
+    nanos_as_long: bool = False,
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema read on the driver
+    (the contract is in the module docstring). Spark's own inference
+    reads the same single footer, but as a one-task job.
+
+    The read gets the footer's schema explicitly; partition discovery
+    still appends the partition columns. ``nanos_as_long`` converts
+    parquet TIMESTAMP(NANOS) columns to LongType through a private copy
+    of the session's SQLConf, so the session conf is never written. A
+    path with no data file goes to Spark's inference, which raises its
+    usual ``AnalysisException``.
+    """
+    if merge_schema:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    status = _footer_file(spark, path)
+    if status is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(
+        _footer_schema(spark, status, nanos_as_long)
+    ).parquet(path)
+
+
+# The parquet summary files. Spark's listing keeps them and drops every
+# other name starting with "_" (unless it holds "=", as a partition
+# directory may) or "." and in-flight copies
+# (HadoopFSUtils.shouldFilterOutPathName).
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(_SUMMARY_FILES)
+
+
+def _footer_file(spark: SparkSession, path: str):
+    """The Hadoop FileStatus whose footer Spark's non-merge inference
+    reads (``ParquetUtils.inferSchema``), or None when ``path`` does not
+    exist or holds no data file: ``path`` itself if it is a file, else
+    the root's ``_common_metadata``, then its ``_metadata``, then the
+    first data file in full-path order. Summary files are looked for at
+    the root only, where parquet's committer writes them. Listing goes
+    through the Hadoop FS API, so s3a:// and hdfs:// paths work."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return None
+
+    def first(dir_path, at_root: bool):
+        entries = {}
+        for st in fs.listStatus(dir_path):
+            name = st.getPath().getName()
+            if _listed(name):
+                # every file under a directory sorts after "<name>/", so
+                # walking entries in key order visits files in full-path
+                # order
+                entries[name + "/" if st.isDirectory() else name] = st
+        if at_root:
+            for summary in _SUMMARY_FILES:
+                if summary in entries:
+                    return entries[summary]
+        for key in sorted(entries):
+            if key.endswith("/"):
+                found = first(entries[key].getPath(), False)
+                if found is not None:
+                    return found
+            elif key not in _SUMMARY_FILES:
+                return entries[key]
+        return None
+
+    return first(root, True)
+
+
+def _footer_schema(spark: SparkSession, status, nanos_as_long: bool):
+    """The Spark schema of one parquet file's footer, as inference
+    derives it: ``ParquetFileFormat.readSchemaFromFooter`` (the schema a
+    Spark writer stored in the footer, else the converted parquet
+    schema) with a ``ParquetToSparkSchemaConverter`` over the session's
+    SQLConf."""
+    parquet = spark._jvm.org.apache.parquet
+    spark_pq = spark._jvm.org.apache.spark.sql.execution.datasources.parquet
+    conf = spark._jsparkSession.sessionState().conf()
+    if nanos_as_long:
+        conf = conf.clone()
+        conf.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
+    meta = spark_pq.ParquetFooterReader.readFooter(
+        parquet.hadoop.util.HadoopInputFile.fromStatus(
+            status, spark._jsc.hadoopConfiguration()
+        ),
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = spark_pq.ParquetFileFormat.readSchemaFromFooter(
+        parquet.hadoop.Footer(status.getPath(), meta),
+        spark_pq.ParquetToSparkSchemaConverter(conf),
+    )
+    return T.StructType.fromJson(json.loads(schema.json()))
 
 
 def _tz_normalized(df: DataFrame) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
 from ..session import scoped_conf
 
 
@@ -129,7 +130,7 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
             "spark.sql.sources.partitionColumnTypeInference.enabled",
             "false",
         ):
-            staged = spark.read.parquet(tmp)
+            staged = read_parquet(spark, tmp)
             staged.schema
         part_cols = [
             st.getPath().getName().split("=", 1)[0]
@@ -180,13 +181,10 @@ def _read_or_none(
     if not _fs_exists(spark, path):
         return None
     try:
-        reader = spark.read
-        if merge_schema:
-            # evolved tables hold files with different (additive)
-            # schemas; without footer merging the read picks one
-            # file's schema and silently drops the newer columns
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(path)
+        # evolved tables hold files with different (additive) schemas;
+        # without footer merging the read picks one file's schema and
+        # silently drops the newer columns
+        df = read_parquet(spark, path, merge_schema)
         df.schema  # force analysis so a missing path raises here
         return df
     except AnalysisException:
@@ -200,7 +198,7 @@ def read_upsert_table(spark: SparkSession, path: str) -> DataFrame:
     a plain read would resolve one file's schema and silently drop the
     evolved columns for every row."""
     recover_staging(spark, path)
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    return read_parquet(spark, path, merge_schema=True)
 
 
 def _merge(
@@ -298,7 +296,7 @@ def stage_swap_parquet(
     # need to delete it from the now-live directory, but drop it anyway
     # so the live table never looks like a stage to recovery.
     _rm_recursive(spark, target_path.rstrip("/") + "/" + _SWAP_MARK)
-    return spark.read.parquet(target_path)
+    return read_parquet(spark, target_path)
 
 
 def upsert_parquet(
@@ -440,7 +438,7 @@ def _upsert_partitioned(
     # staging dir holding only __HIVE_DEFAULT_PARTITION__ (all-NULL
     # delta) infers VOID, which cannot be written back — restore the
     # delta's declared type (no-op otherwise).
-    staged = spark.read.parquet(tmp).withColumn(
+    staged = read_parquet(spark, tmp).withColumn(
         partition_col,
         F.col(partition_col).cast(delta.schema[partition_col].dataType),
     )
@@ -596,7 +594,7 @@ def compact_parquet(
         "spark.sql.sources.partitionColumnTypeInference.enabled",
         "false",
     ):
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         df.schema  # force analysis while the conf is active
     # Inference-off types partition columns as the directory-name
     # string — EXCEPT a column whose every value is NULL
@@ -753,7 +751,7 @@ def read_snapshot(spark: SparkSession, root: str) -> DataFrame:
     committed = snapshot_versions(spark, root)
     if not committed:
         raise FileNotFoundError(f"no committed snapshot under {root!r}")
-    return spark.read.parquet(f"{root.rstrip('/')}/{committed[-1][1]}")
+    return read_parquet(spark, f"{root.rstrip('/')}/{committed[-1][1]}")
 
 
 def upsert_snapshot(
@@ -771,7 +769,7 @@ def upsert_snapshot(
     missing-path window."""
     committed = snapshot_versions(spark, root)
     current = (
-        spark.read.parquet(f"{root.rstrip('/')}/{committed[-1][1]}")
+        read_parquet(spark, f"{root.rstrip('/')}/{committed[-1][1]}")
         if committed
         else None
     )

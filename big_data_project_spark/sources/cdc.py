@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table_spread
+from ..catalog import load_table_spread, read_parquet
 from ..functions.portable import pround, sql_pround
 
 QUERIES: dict = {}
@@ -247,7 +247,7 @@ def read_cdc_state(spark: SparkSession, target_path: str) -> DataFrame:
     """Live state of a merge_cdc_parquet table: the non-tombstone slice
     (tombstones stay on disk so stale redeliveries cannot resurrect
     deleted keys)."""
-    return spark.read.parquet(target_path).filter(F.col("op") != "d")
+    return read_parquet(spark, target_path).filter(F.col("op") != "d")
 
 
 def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,7 +320,7 @@ def compact_cdc_tombstones(
     merge itself."""
     from ..plans.sinks import stage_swap_parquet
 
-    cur = spark.read.parquet(target_path)
+    cur = read_parquet(spark, target_path)
     kept = cur.filter(
         (F.col("op") != "d") | (F.col("__ts") >= F.lit(horizon_ts))
     )

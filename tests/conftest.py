@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -7,6 +9,24 @@ from big_data_project_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
+
+
+def count_spark_jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` launches, from this thread and
+    from every thread it starts.
+
+    The jobs carry a fresh job tag, which a thread started meanwhile
+    inherits with the other local properties. A job group would miss the
+    jobs of a streaming query: its execution thread replaces the group
+    with the query's run id."""
+    sc = spark.sparkContext
+    tag = f"count-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    return len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
 
 
 @pytest.fixture(scope="session")
@@ -55,4 +75,25 @@ def null_events_dir(spark, tmp_path_factory):
             col, F.when(F.col("event_id") % stride != 0, F.col(col))
         )
     ev.coalesce(1).write.parquet(table_path(sf_dir, "events"))
+    return sf_dir
+
+
+@pytest.fixture(scope="session")
+def nanos_events_dir(tmp_path_factory):
+    """An sf dir holding only ``events``: the sf0.001 table with ``ts``
+    stored as parquet TIMESTAMP(NANOS), each value 999 ns past the
+    original microsecond. Every generated ``events.parquet`` is MICROS."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from big_data_project_spark.catalog import table_path
+
+    tbl = pq.read_table(table_path(SF_DIR, "events"))
+    micros = tbl.column("ts").cast(pa.int64())
+    nanos = pc.add(pc.multiply(micros, 1000), 999).cast(pa.timestamp("ns"))
+    i = tbl.schema.get_field_index("ts")
+    tbl = tbl.set_column(i, pa.field("ts", pa.timestamp("ns")), nanos)
+    sf_dir = str(tmp_path_factory.mktemp("nanos_sf"))
+    pq.write_table(tbl, table_path(sf_dir, "events"), version="2.6")
     return sf_dir
