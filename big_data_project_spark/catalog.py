@@ -89,6 +89,7 @@ def read_parquet(
     merge_schema: bool = False,
     *,
     nanos_as_long: bool = False,
+    partition_types: dict[str, T.DataType] | None = None,
 ) -> DataFrame:
     """``spark.read.parquet(path)`` with the schema read on the driver
     (the contract is in the module docstring). Spark's own inference
@@ -100,15 +101,31 @@ def read_parquet(
     of the session's SQLConf, so the session conf is never written. A
     path with no data file goes to Spark's inference, which raises its
     usual ``AnalysisException``.
+
+    ``partition_types`` types the named partition columns through the
+    reader schema: partition discovery casts each directory string to
+    the given type without inference, so a string type reads ``k=01``
+    as ``"01"`` (inference would read INT 1) and an all-NULL partition
+    as a NULL string (inference would read VOID). With ``merge_schema``
+    the merged schema is resolved first and the table read again under
+    it, retyped.
     """
     if merge_schema:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    status = _footer_file(spark, path)
-    if status is None:
-        return spark.read.parquet(path)
-    return spark.read.schema(
-        _footer_schema(spark, status, nanos_as_long)
-    ).parquet(path)
+        df = spark.read.option("mergeSchema", "true").parquet(path)
+        if not partition_types:
+            return df
+        schema = df.schema
+    else:
+        status = _footer_file(spark, path)
+        if status is None:
+            return spark.read.parquet(path)
+        schema = _footer_schema(spark, status, nanos_as_long)
+    if partition_types:
+        schema = T.StructType(
+            [f for f in schema.fields if f.name not in partition_types]
+            + [T.StructField(c, t) for c, t in partition_types.items()]
+        )
+    return spark.read.schema(schema).parquet(path)
 
 
 # The parquet summary files. Spark's listing keeps them and drops every

@@ -18,6 +18,15 @@ rows. On a data lake the same contracts are:
   read) are the same.
 - ``write_partitioned``: hive-style partition layout so downstream scans
   prune on the partition column.
+
+Every rewriting sink commits the same way: it writes the sibling
+``<path>.staging``, marks it complete, then either swaps it in whole
+(:func:`_swap_in`: full-table rewrites and compaction) or replays its
+partitions into the table by dynamic overwrite
+(:func:`_replay_partitions`: the partitioned upsert).
+:func:`recover_staging` finishes or discards whatever a crash left
+between those steps. Partition columns the sinks read back are typed
+through the reader schema, never through session-wide inference.
 """
 
 from __future__ import annotations
@@ -25,6 +34,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StringType
 
 from ..catalog import read_parquet
 from ..session import scoped_conf
@@ -66,6 +76,100 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(hpath)
 
 
+def _siblings(target_path: str) -> tuple[str, str]:
+    """The (stage, aside) directories of the table at ``target_path``."""
+    base = target_path.rstrip("/")
+    return base + ".staging", base + ".old"
+
+
+def _partition_cols(fs, hpath) -> list[str]:
+    """Hive partition column names of the table at ``hpath``, outermost
+    first, read off its first chain of ``name=value`` directories."""
+    cols = []
+    while True:
+        dirs = [
+            st.getPath()
+            for st in fs.listStatus(hpath)
+            if st.isDirectory() and "=" in st.getPath().getName()
+        ]
+        if not dirs:
+            return cols
+        cols.append(dirs[0].getName().split("=", 1)[0])
+        hpath = dirs[0]
+
+
+def _write_stage(
+    spark: SparkSession, writer, target_path: str, mark: str
+) -> None:
+    """Write ``<target_path>.staging`` through ``writer`` (a
+    DataFrameWriter), then its completeness ``mark``: from the mark on,
+    recovery commits the stage instead of discarding it."""
+    tmp, _ = _siblings(target_path)
+    writer.mode("overwrite").parquet(tmp)
+    _touch(spark, tmp + "/" + mark)
+
+
+def _swap_in(spark: SparkSession, target_path: str) -> None:
+    """Commit the ``_SWAP_MARK``-ed stage of ``target_path`` by checked
+    renames (Hadoop rename reports failure by returning false, not by
+    throwing): set the live table aside to ``.old``, rename the stage
+    in, then drop the aside and the marker. The data survives at
+    exactly one of target / ``.old`` / ``.staging`` at every step.
+
+    A failed rename leaves nothing recovery would commit, since the
+    caller is told the write failed: a failed set-aside drops the
+    stage; a failed swap-in renames the original back and drops the
+    stage, or, when there is no original (first write) or it cannot be
+    renamed back, strips the stage's marker, so the next
+    :func:`recover_staging` restores the aside and discards the stage."""
+    tmp, aside = _siblings(target_path)
+    fs, target = _hadoop_path(spark, target_path)
+    _, tmp_p = _hadoop_path(spark, tmp)
+    _, aside_p = _hadoop_path(spark, aside)
+    if fs.exists(target):
+        _rm_recursive(spark, aside)
+        if not fs.rename(target, aside_p):
+            _rm_recursive(spark, tmp)
+            raise IOError(f"cannot set aside {target_path!r}")
+    if not fs.rename(tmp_p, target):
+        restored = fs.exists(aside_p) and fs.rename(aside_p, target)
+        _rm_recursive(spark, tmp if restored else tmp + "/" + _SWAP_MARK)
+        raise IOError(
+            f"swap-in failed for {target_path!r}; "
+            + (
+                "original restored"
+                if restored
+                else f"staged copy (unmarked) is at {tmp!r}, and the "
+                "next recover_staging restores any set-aside original"
+            )
+        )
+    _rm_recursive(spark, aside)
+    # The marker file starts with "_" so parquet readers ignore it; drop
+    # it anyway so the live table never looks like a stage to recovery.
+    _rm_recursive(spark, target_path.rstrip("/") + "/" + _SWAP_MARK)
+
+
+def _replay_partitions(
+    spark: SparkSession, target_path: str, part_cols: list[str]
+) -> None:
+    """Commit the ``_PART_MARK``-ed stage of ``target_path``: overwrite
+    the partitions it holds by dynamic partition overwrite, leaving
+    every other partition's files as they are, then drop the stage.
+    Idempotent (the stage holds the fully-merged partitions), so
+    recovery can replay an interrupted commit. The partition columns
+    are read as the directory strings, so each partition is written
+    back under the name it was staged as. Dynamic is the writer's
+    option, which wins over the session conf and leaves it alone."""
+    tmp, _ = _siblings(target_path)
+    staged = read_parquet(
+        spark, tmp, partition_types=dict.fromkeys(part_cols, StringType())
+    )
+    staged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*part_cols).parquet(target_path)
+    _rm_recursive(spark, tmp)
+
+
 def recover_staging(spark: SparkSession, target_path: str) -> str | None:
     """Detect and repair an interrupted sink write at ``target_path``
     (round-6 advice: a crash mid-swap used to leave the only complete
@@ -87,13 +191,13 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
 
     Returns a short action string for the caller's audit log (or None
     when there was nothing to repair). All states are crash states of
-    :func:`stage_swap_parquet` / :func:`upsert_parquet`; every repair
-    either completes the interrupted commit (the staged data is a
-    complete merged table, and upserts are idempotent) or discards an
-    incomplete stage — never both copies.
+    :func:`stage_swap_parquet`, :func:`compact_parquet` and
+    :func:`upsert_parquet`; every repair either completes the
+    interrupted commit through the same step the writer would have
+    taken (the staged data is complete, and upserts are idempotent) or
+    discards an incomplete stage — never both copies.
     """
-    tmp = target_path.rstrip("/") + ".staging"
-    aside = target_path.rstrip("/") + ".old"
+    tmp, aside = _siblings(target_path)
     fs, target = _hadoop_path(spark, target_path)
     _, tmp_p = _hadoop_path(spark, tmp)
     _, aside_p = _hadoop_path(spark, aside)
@@ -101,49 +205,15 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
     has_aside = fs.exists(aside_p)
     if not has_tmp and not has_aside:
         return None
-    swap_ok = has_tmp and _fs_exists(spark, tmp + "/" + _SWAP_MARK)
-    part_ok = has_tmp and _fs_exists(spark, tmp + "/" + _PART_MARK)
-    if swap_ok:
-        # Complete the interrupted swap: the stage is the full merged
-        # table. Make sure the old copy is out of the way first.
-        if fs.exists(target):
-            _rm_recursive(spark, aside)
-            if not fs.rename(target, aside_p):
-                raise IOError(
-                    f"recover_staging: cannot set aside {target_path!r}"
-                )
-        if not fs.rename(tmp_p, target):
-            raise IOError(
-                f"recover_staging: swap-in failed for {target_path!r}; "
-                f"complete staged copy remains at {tmp!r}"
-            )
-        _rm_recursive(spark, aside)
-        _rm_recursive(spark, target_path.rstrip("/") + "/" + _SWAP_MARK)
+    if has_tmp and _fs_exists(spark, tmp + "/" + _SWAP_MARK):
+        _swap_in(spark, target_path)
         return "completed_swap"
-    if part_ok:
-        # Replay the interrupted dynamic partition overwrite from the
-        # complete stage (idempotent: the stage holds the fully-merged
-        # touched partitions). Partition-type inference off — same
-        # round-trip contract as compact_parquet.
-        with scoped_conf(
-            spark,
-            "spark.sql.sources.partitionColumnTypeInference.enabled",
-            "false",
-        ):
-            staged = read_parquet(spark, tmp)
-            staged.schema
-        part_cols = [
-            st.getPath().getName().split("=", 1)[0]
-            for st in fs.listStatus(tmp_p)
-            if st.isDirectory() and "=" in st.getPath().getName()
-        ][:1]
+    if has_tmp and _fs_exists(spark, tmp + "/" + _PART_MARK):
+        part_cols = _partition_cols(fs, tmp_p)
         if not part_cols:
             _rm_recursive(spark, tmp)
             return "dropped_empty_partition_stage"
-        staged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(part_cols[0]).parquet(target_path)
-        _rm_recursive(spark, tmp)
+        _replay_partitions(spark, target_path, part_cols)
         return "replayed_partition_overwrite"
     repaired = None
     if has_aside:
@@ -169,7 +239,10 @@ def recover_staging(spark: SparkSession, target_path: str) -> str | None:
 
 
 def _read_or_none(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    partition_types: dict[str, DataType] | None = None,
 ) -> DataFrame | None:
     # Probe through the Hadoop FS API, not os.path — the target may live
     # on any Hadoop-compatible filesystem (s3a://, hdfs://), where a
@@ -184,7 +257,9 @@ def _read_or_none(
         # evolved tables hold files with different (additive) schemas;
         # without footer merging the read picks one file's schema and
         # silently drops the newer columns
-        df = read_parquet(spark, path, merge_schema)
+        df = read_parquet(
+            spark, path, merge_schema, partition_types=partition_types
+        )
         df.schema  # force analysis so a missing path raises here
         return df
     except AnalysisException:
@@ -235,10 +310,9 @@ def stage_swap_parquet(
     """Materialize ``df`` OVER the table it reads from: write to a
     sibling ``.staging`` directory first (the plan reads the same files
     it replaces — a direct overwrite would consume its own deletions),
-    then swap the staged copy in by CHECKED renames (metadata ops), not
-    a second data rewrite. The single swap point shared by every
-    full-rewrite sink (keyed upsert, CDC merge, tombstone TTL) so
-    durability hardening lands once.
+    then swap the staged copy in by checked renames (:func:`_swap_in`,
+    metadata ops), not a second data rewrite. The swap point of every
+    full-rewrite sink (keyed upsert, CDC merge, tombstone TTL).
 
     Crash contract: a ``_STAGED_SWAP_OK`` marker is written only after
     the stage is complete, and every state an interruption can leave
@@ -251,51 +325,8 @@ def stage_swap_parquet(
     partial data); for snapshot-isolated readers use
     :func:`upsert_snapshot` / :func:`read_snapshot`."""
     recover_staging(spark, target_path)
-    tmp = target_path.rstrip("/") + ".staging"
-    aside = target_path.rstrip("/") + ".old"
-    _rm_recursive(spark, tmp)
-    df.write.mode("overwrite").parquet(tmp)
-    _touch(spark, tmp + "/" + _SWAP_MARK)
-    fs, target = _hadoop_path(spark, target_path)
-    _, tmp_p = _hadoop_path(spark, tmp)
-    _, aside_p = _hadoop_path(spark, aside)
-    if fs.exists(target):
-        _rm_recursive(spark, aside)
-        if not fs.rename(target, aside_p):
-            _rm_recursive(spark, tmp)
-            raise IOError(
-                f"stage_swap_parquet: cannot set aside {target_path!r}"
-            )
-    if not fs.rename(tmp_p, target):
-        restored = fs.exists(aside_p) and fs.rename(aside_p, target)
-        if restored:
-            # The write FAILED from the caller's view — discard the
-            # marked stage, or the next recover_staging would silently
-            # commit the abandoned batch over the restored original
-            # (compact_parquet makes the same call in this state).
-            _rm_recursive(spark, tmp)
-        else:
-            # No aside to restore (first-ever write) or the restore
-            # itself failed: the stage must still not look committable —
-            # strip the marker so the next recover_staging DISCARDS it
-            # (or restores the aside) instead of silently committing a
-            # batch the caller was just told failed. The staged files
-            # stay behind, unmarked, for manual inspection until the
-            # next touch drops them.
-            _rm_recursive(spark, tmp + "/" + _SWAP_MARK)
-        raise IOError(
-            f"stage_swap_parquet: swap-in failed for {target_path!r}"
-            + (
-                "; original restored"
-                if restored
-                else f"; staged copy (unmarked) is at {tmp!r}"
-            )
-        )
-    _rm_recursive(spark, aside)
-    # The marker file starts with "_" so parquet readers ignore it; no
-    # need to delete it from the now-live directory, but drop it anyway
-    # so the live table never looks like a stage to recovery.
-    _rm_recursive(spark, target_path.rstrip("/") + "/" + _SWAP_MARK)
+    _write_stage(spark, df.write, target_path, _SWAP_MARK)
+    _swap_in(spark, target_path)
     return read_parquet(spark, target_path)
 
 
@@ -335,6 +366,8 @@ def upsert_parquet(
     3. merges and rewrites just those partitions via dynamic partition
        overwrite, leaving every other partition's files byte-identical.
 
+    The partition column is read back as the delta's declared type
+    (a string ``"01"`` stays ``"01"``, in the directory name too).
     Without it, the whole table is merged and rewritten — fine for
     small serving tables, O(table) per batch otherwise.
     """
@@ -353,10 +386,19 @@ def upsert_parquet(
         allow_schema_evolution,
     )
     merged = _read_or_none(
-        spark, target_path, merge_schema=allow_schema_evolution
+        spark, target_path, allow_schema_evolution,
+        _declared(delta, partition_col),
     )
     # An empty delta into a table that does not exist yet wrote nothing.
     return merged if merged is not None else delta
+
+
+def _declared(delta: DataFrame, partition_col: str) -> dict[str, DataType]:
+    if partition_col not in delta.columns:
+        raise ValueError(
+            f"partition_col {partition_col!r} not in delta columns"
+        )
+    return {partition_col: delta.schema[partition_col].dataType}
 
 
 def _check_columns(
@@ -386,10 +428,7 @@ def _upsert_partitioned(
     read-back of the merged table: listing every partition of the table
     is O(history), and the serving loop (``materialize_hourly``) never
     reads the result."""
-    if partition_col not in delta.columns:
-        raise ValueError(
-            f"partition_col {partition_col!r} not in delta columns"
-        )
+    declared = _declared(delta, partition_col)
     touched = [
         r[0] for r in delta.select(partition_col).distinct().collect()
     ]
@@ -400,7 +439,7 @@ def _upsert_partitioned(
         # batch in the serving loop is normal, not an error.
         return
     current = _read_or_none(
-        spark, target_path, merge_schema=allow_schema_evolution
+        spark, target_path, allow_schema_evolution, declared
     )
     _check_columns(current, delta, allow_schema_evolution)
     if current is not None:
@@ -422,30 +461,14 @@ def _upsert_partitioned(
         current, delta, keys, version_col,
         allow_missing=allow_schema_evolution,
     )
-    # Stage only the touched partitions (O(delta) bytes), then swap them
-    # in atomically-per-partition with dynamic overwrite: partitions not
-    # present in the staged frame are left untouched on disk. Dynamic is
-    # the writer's option, which wins over the session conf and leaves
-    # it alone.
-    tmp = target_path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    # Completeness marker: from here recovery can REPLAY the dynamic
-    # overwrite from the stage if the commit below is interrupted
-    # (idempotent — the stage holds the fully-merged touched
-    # partitions), instead of leaving a half-overwritten partition.
-    _touch(spark, tmp + "/" + _PART_MARK)
-    # Partition-column type is INFERRED from directory names on read; a
-    # staging dir holding only __HIVE_DEFAULT_PARTITION__ (all-NULL
-    # delta) infers VOID, which cannot be written back — restore the
-    # delta's declared type (no-op otherwise).
-    staged = read_parquet(spark, tmp).withColumn(
-        partition_col,
-        F.col(partition_col).cast(delta.schema[partition_col].dataType),
+    # Stage only the touched partitions (O(delta) bytes), then replay
+    # them into the table: partitions not present in the stage are left
+    # untouched on disk.
+    _write_stage(
+        spark, merged.write.partitionBy(partition_col), target_path,
+        _PART_MARK,
     )
-    staged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(partition_col).parquet(target_path)
-    _rm_recursive(spark, tmp)
+    _replay_partitions(spark, target_path, [partition_col])
 
 
 def write_partitioned(
@@ -484,6 +507,31 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
+def _write_skippable(
+    out: DataFrame, path: str, small_row_groups: bool
+) -> None:
+    """The write tail of the data-skipping layouts, ``out`` being the
+    laid-out frame. Timestamps are written
+    as TIMESTAMP_MICROS, not the session's INT96 default: INT96 chunks
+    carry NO min/max statistics, which silently disables exactly the
+    row-group skipping these layouts exist for — the single most common
+    way a "sorted" time-series table still full-scans.
+
+    ``small_row_groups`` shrinks the parquet block size so skipping
+    has granularity even in small test files; leave False in
+    production (the ~128 MB default block is the right grain at
+    100 TB)."""
+    w = out.write.mode("overwrite")
+    if small_row_groups:
+        w = w.option("parquet.block.size", 1024)
+    with scoped_conf(
+        out.sparkSession,
+        "spark.sql.parquet.outputTimestampType",
+        "TIMESTAMP_MICROS",
+    ):
+        w.parquet(path)
+
+
 def write_sorted(
     df: DataFrame,
     path: str,
@@ -504,16 +552,7 @@ def write_sorted(
     indexes (/root/reference/initdb/init-postgis.sql:182-246) — on a
     lake, ordering IS the index.
 
-    Timestamps are written as TIMESTAMP_MICROS (not Spark's legacy
-    INT96 default): INT96 chunks carry NO min/max statistics, which
-    silently disables exactly the row-group skipping this layout
-    exists for — the single most common way a "sorted" time-series
-    table still full-scans.
-
-    ``small_row_groups`` shrinks the parquet block size so skipping
-    has granularity even in small test files; leave False in
-    production (the ~128 MB default block is the right grain at
-    100 TB).
+    Timestamps and ``small_row_groups``: see :func:`_write_skippable`.
     """
     rc = range_col or sort_cols[0]
     out = (
@@ -521,15 +560,9 @@ def write_sorted(
         if n_files is not None
         else df.repartitionByRange(rc)
     )
-    w = out.sortWithinPartitions(*sort_cols).write.mode("overwrite")
-    if small_row_groups:
-        w = w.option("parquet.block.size", 1024)
-    with scoped_conf(
-        df.sparkSession,
-        "spark.sql.parquet.outputTimestampType",
-        "TIMESTAMP_MICROS",
-    ):
-        w.parquet(path)
+    _write_skippable(
+        out.sortWithinPartitions(*sort_cols), path, small_row_groups
+    )
 
 
 def compact_parquet(
@@ -544,8 +577,7 @@ def compact_parquet(
     leave thousands of KB-sized files behind; at 100 TB the resulting
     open/seek overhead dominates scan time and the fix is this
     periodic rewrite (what OPTIMIZE does on Delta/Iceberg — same
-    semantics here on plain parquet, via a staging dir + atomic-ish
-    rename so a crash never leaves a half-compacted table).
+    semantics here on plain parquet).
 
     Partitioned tables spread each hive partition over a bounded
     per-partition file count via an explicit splitter column (hashing
@@ -553,16 +585,14 @@ def compact_parquet(
     task and one file). Returns {"files_before", "files_after",
     "bytes"} for the caller's audit log.
 
-    Crash-safety order: write staging -> rename live table ASIDE ->
-    rename staging in -> delete the aside copy, with BOTH rename
-    results checked (Hadoop rename reports failure by returning false,
-    not throwing). The data always survives on disk: before the swap at
-    ``path``, after it at ``path`` again, and during the brief window
-    between the renames at ``path + ".old"`` — a crash exactly there
-    leaves readers of ``path`` failing until the aside dir is renamed
-    back (documented recovery), but never deletes the only copy the
-    way delete-then-rename would.
+    Commit: the same marked ``.staging`` directory and :func:`_swap_in`
+    as :func:`stage_swap_parquet`, so a crash at any point is repaired
+    by :func:`recover_staging` on the next read or write (the compaction
+    completes from its complete stage, or its partial stage is
+    discarded), and a failed rename restores the original or leaves it
+    for recovery to restore.
     """
+    recover_staging(spark, path)
     fs, jvm_path = _hadoop_path(spark, path)
 
     def _stats(p) -> tuple[int, int]:
@@ -579,36 +609,20 @@ def compact_parquet(
 
     files_before, total_bytes = _stats(jvm_path)
     n_files = int(max(1, -(-total_bytes // target_bytes)))
-    # Read with partition-column TYPE INFERENCE OFF: inference re-types
-    # directory names on every read, so a compaction round-trip through
-    # an inferring read would rewrite "k=01" as "k=1" (string inferred
-    # INT, value silently changed) and fail outright on an all-NULL
-    # partition dir (inferred VOID, unwritable). With inference off the
-    # partition column is read as the exact directory-name string, the
-    # rewrite reproduces byte-identical partition paths, and every
-    # DOWNSTREAM reader (inferring or not) sees the same table it saw
-    # before compaction. Data-file column types are untouched either
-    # way (they come from the parquet footers).
-    with scoped_conf(
+    # Partition columns are read as the directory-name strings: an
+    # inferring read would type "k=01" as INT 1 and rewrite it as "k=1"
+    # (value silently changed), and an all-NULL partition as an
+    # unwritable VOID. As strings the rewrite reproduces the partition
+    # paths byte for byte, so every downstream reader sees the table it
+    # saw before compaction. Data-file column types come from the
+    # parquet footers either way.
+    df = read_parquet(
         spark,
-        "spark.sql.sources.partitionColumnTypeInference.enabled",
-        "false",
-    ):
-        df = read_parquet(spark, path)
-        df.schema  # force analysis while the conf is active
-    # Inference-off types partition columns as the directory-name
-    # string — EXCEPT a column whose every value is NULL
-    # (__HIVE_DEFAULT_PARTITION__ only), which still comes back VOID
-    # and can be neither a partition column nor a parquet data column
-    # on the staging write. NULL round-trips identically through
-    # string.
-    from pyspark.sql.types import NullType
-
-    for f in df.schema.fields:
-        if isinstance(f.dataType, NullType):
-            df = df.withColumn(f.name, F.col(f.name).cast("string"))
-    staging = path.rstrip("/") + ".compact"
-    _rm_recursive(spark, staging)
+        path,
+        partition_types=dict.fromkeys(
+            _partition_cols(fs, jvm_path), StringType()
+        ),
+    )
     if partition_cols:
         # Bounded per-partition fan-out: hashing only on the partition
         # columns puts a whole hive partition in ONE task (one output
@@ -634,43 +648,12 @@ def compact_parquet(
             df.withColumn("__split", split)
             .repartition(n_files, *partition_cols, F.col("__split"))
             .drop("__split")
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
+            .write.partitionBy(*partition_cols)
         )
     else:
-        writer = df.repartition(n_files).write.mode("overwrite")
-    writer.parquet(staging)
-    # Swap via the Hadoop FS API (s3a://-style targets work — same
-    # policy as upsert_parquet), in the crash-safe order above.
-    aside = path.rstrip("/") + ".old"
-    _rm_recursive(spark, aside)
-    _, aside_path = _hadoop_path(spark, aside)
-    # Hadoop rename signals failure by returning false (dest exists,
-    # permissions, s3a copy failure) — an unchecked false here would
-    # either delete the set-aside original after a failed swap-in or
-    # report success without compacting.
-    if not fs.rename(jvm_path, aside_path):
-        _rm_recursive(spark, staging)
-        raise IOError(f"compact_parquet: cannot set aside {path!r}")
-    if not fs.rename(_hadoop_path(spark, staging)[1], jvm_path):
-        # roll the original straight back so readers never notice — and
-        # CHECK that rename too: if restoration also fails (e.g. an s3a
-        # copy error), the table is missing at `path` and the only copy
-        # sits at the aside dir; saying "original restored" then would
-        # send the operator to a path that 404s.
-        restored = fs.rename(aside_path, jvm_path)
-        _rm_recursive(spark, staging)
-        if not restored:
-            raise IOError(
-                f"compact_parquet: swap-in failed for {path!r} AND the "
-                f"rollback rename failed — the table is NOT at {path!r}; "
-                f"the only copy is at {aside!r} (rename it back manually)"
-            )
-        raise IOError(
-            f"compact_parquet: swap-in failed for {path!r}; original "
-            "restored"
-        )
-    _rm_recursive(spark, aside)
+        writer = df.repartition(n_files).write
+    _write_stage(spark, writer, path, _SWAP_MARK)
+    _swap_in(spark, path)
     files_after, _ = _stats(jvm_path)
     return {
         "files_before": files_before,
@@ -823,8 +806,7 @@ def write_zordered(
     interleave and layout below are unchanged. NULLs sort first
     (z = -1) so they pack into one file instead of smearing.
 
-    Timestamps in ``df`` still write as TIMESTAMP_MICROS (same footer-
-    stats requirement as write_sorted)."""
+    Timestamps and ``small_row_groups``: see :func:`_write_skippable`."""
     if len(zorder_cols) != 2:
         raise ValueError("write_zordered interleaves exactly 2 columns")
     a, b = zorder_cols
@@ -876,16 +858,6 @@ def write_zordered(
         if n_files is not None
         else keyed.repartitionByRange("__z")
     )
-    w = (
-        out.sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
+    _write_skippable(
+        out.sortWithinPartitions("__z").drop("__z"), path, small_row_groups
     )
-    if small_row_groups:
-        w = w.option("parquet.block.size", 1024)
-    with scoped_conf(
-        df.sparkSession,
-        "spark.sql.parquet.outputTimestampType",
-        "TIMESTAMP_MICROS",
-    ):
-        w.parquet(path)

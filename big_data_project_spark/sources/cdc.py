@@ -201,14 +201,15 @@ def merge_cdc_parquet(
     arriving after the delete would see no row and resurrect the key
     (the classic CDC resurrection bug; Delta/Hudi keep delete markers
     for the same reason). Live state is the ``op <> 'd'`` slice — use
-    :func:`read_cdc_state`; a TTL compaction that physically drops
-    tombstones older than the redelivery horizon is the production
-    follow-up (compact_parquet's crash-safe swap is the mechanism).
+    :func:`read_cdc_state`; :func:`compact_cdc_tombstones` physically
+    drops tombstones older than the redelivery horizon.
 
     Scale: the batch folds to one row per touched key BEFORE touching
     the table (apply_cdc_log, tombstones kept); the merge is one
-    key-window over current ∪ winners, staged-and-swapped like
-    upsert_parquet. With hive partitioning needs, route through the
+    key-window over current ∪ winners, committed by
+    ``stage_swap_parquet`` like the unpartitioned upsert_parquet (a
+    crash is repaired by ``recover_staging`` on the next read or
+    write). With hive partitioning needs, route through the
     same partition-pruned shape as upsert_parquet; the serving tables
     this mirrors (the reference's per-entity tables) are key-grain and
     small relative to the corpus."""
@@ -246,7 +247,11 @@ def merge_cdc_parquet(
 def read_cdc_state(spark: SparkSession, target_path: str) -> DataFrame:
     """Live state of a merge_cdc_parquet table: the non-tombstone slice
     (tombstones stay on disk so stale redeliveries cannot resurrect
-    deleted keys)."""
+    deleted keys). Like every sink read helper it first repairs an
+    interrupted commit."""
+    from ..plans.sinks import recover_staging
+
+    recover_staging(spark, target_path)
     return read_parquet(spark, target_path).filter(F.col("op") != "d")
 
 
@@ -316,10 +321,13 @@ def compact_cdc_tombstones(
     tombstone rows whose version is older than ``horizon_ts`` (the
     redelivery horizon — once the changelog source can no longer replay
     ops that old, the resurrection guard is moot and the marker is pure
-    storage). Live rows are never touched. Staged-and-swapped like the
-    merge itself."""
-    from ..plans.sinks import stage_swap_parquet
+    storage). Live rows are never touched. Committed by
+    ``stage_swap_parquet`` like the merge itself; an interrupted commit
+    is repaired BEFORE the read, or the rewrite would drop the merge it
+    completes."""
+    from ..plans.sinks import recover_staging, stage_swap_parquet
 
+    recover_staging(spark, target_path)
     cur = read_parquet(spark, target_path)
     kept = cur.filter(
         (F.col("op") != "d") | (F.col("__ts") >= F.lit(horizon_ts))

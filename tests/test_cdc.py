@@ -279,6 +279,40 @@ def test_tombstone_ttl_compaction_drops_only_expired_markers(
     assert {r.key for r in read_cdc_state(spark, path).collect()} == {1}
 
 
+@pytest.mark.parametrize("compact", [False, True], ids=["read", "compact"])
+def test_interrupted_merge_is_completed_before_the_table_is_read(
+    spark, tmp_path, compact
+):
+    """A merge that died after marking its stage is completed BEFORE
+    read_cdc_state or the tombstone compaction reads the table: the
+    read serves the merged row, and the compaction keeps it instead of
+    rewriting the pre-merge table over it."""
+    import shutil
+
+    from big_data_project_spark.plans import sinks
+    from big_data_project_spark.sources.cdc import compact_cdc_tombstones
+
+    path = str(tmp_path / "serving")
+    merged = str(tmp_path / "merged")
+    first = _log(
+        spark, [("u", _t("2024-01-01T00:00:01"), 1, 1, (1, "a", 1.0))]
+    )
+    second = _log(
+        spark, [("u", _t("2024-01-01T00:00:02"), 2, 2, (2, "b", 2.0))]
+    )
+    merge_cdc_parquet(spark, path, first)
+    # The crash state of the second merge: its complete, marked stage
+    # next to the table it was about to replace.
+    merge_cdc_parquet(spark, merged, first)
+    merge_cdc_parquet(spark, merged, second)
+    shutil.copytree(merged, path + ".staging")
+    open(f"{path}.staging/{sinks._SWAP_MARK}", "w").close()
+
+    if compact:
+        compact_cdc_tombstones(spark, path, _t("2024-03-01T00:00:00"))
+    assert {r.key for r in read_cdc_state(spark, path).collect()} == {1, 2}
+
+
 def test_round_trip_survives_adversarial_strings_and_doubles(spark):
     """JSON escaping and double fidelity: quotes, backslashes, newlines,
     unicode, and extreme-magnitude doubles all survive encode -> decode

@@ -14,6 +14,7 @@ import threading
 import time
 
 import pytest
+from pyspark.sql.types import StringType
 
 from big_data_project_spark.plans import sinks
 
@@ -334,19 +335,38 @@ def test_failed_first_write_is_not_committed_by_next_read(
     )
     monkeypatch.undo()
 
-    # Next READ: must not surface the batch the caller was told failed.
-    assert sinks._read_or_none(spark, target) is None
-    # ...and recovery classified the stage as incomplete debris.
+    # Recovery classifies the unmarked stage as incomplete debris...
+    assert sinks.recover_staging(spark, target) == "dropped_incomplete_stage"
     assert not os.path.exists(target + ".staging")
     assert not os.path.exists(target)
+    # ...so the next READ cannot surface the batch the caller was told
+    # failed.
+    assert sinks._read_or_none(spark, target) is None
 
 
+def _swap_new_rows(spark, target):
+    df = spark.createDataFrame([(1, "new", 2)], "k long, v string, ver long")
+    sinks.stage_swap_parquet(spark, df, target)
+
+
+def _compact(spark, target):
+    sinks.compact_parquet(spark, target)
+
+
+@pytest.mark.parametrize(
+    "write",
+    [
+        pytest.param(_swap_new_rows, id="stage_swap_parquet"),
+        pytest.param(_compact, id="compact_parquet"),
+    ],
+)
 def test_failed_overwrite_restores_original_and_discards_stage(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, write
 ):
-    """Same injection over an EXISTING table: the original is restored,
-    the caller sees the failure, and the next read serves the ORIGINAL
-    rows (never the abandoned batch)."""
+    """Same injection over an EXISTING table, for both writers that
+    commit by swap-in: the original is restored, the caller sees the
+    failure, and the next read serves the ORIGINAL rows (never the
+    abandoned batch)."""
     target = str(tmp_path / "t")
     _write_table(spark, target, [(1, "orig", 1)])
     real = sinks._hadoop_path
@@ -356,9 +376,8 @@ def test_failed_overwrite_restores_original_and_discards_stage(
         return _FailSwapIn(fs), hpath
 
     monkeypatch.setattr(sinks, "_hadoop_path", patched)
-    df = spark.createDataFrame([(1, "new", 2)], "k long, v string, ver long")
     with pytest.raises(IOError, match="original restored"):
-        sinks.stage_swap_parquet(spark, df, target)
+        write(spark, target)
     monkeypatch.undo()
 
     assert _rows(spark, target) == {1: ("orig", 1)}
@@ -366,3 +385,107 @@ def test_failed_overwrite_restores_original_and_discards_stage(
     assert not os.path.exists(target + ".staging")
     got = sinks.read_upsert_table(spark, target)
     assert {(r["k"], r["v"]) for r in got.collect()} == {(1, "orig")}
+
+
+# --- one commit protocol: compaction, partition typing, no conf writes -----
+
+
+def test_interrupted_compaction_completes_on_recovery(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies right after writing its marked stage is
+    completed by the next recover_staging like any interrupted swap:
+    the table then serves the compacted files, with the same rows."""
+    target = str(tmp_path / "t")
+    for i in range(4):
+        spark.createDataFrame(
+            [(i, f"v{i}", 1)], "k long, v string, ver long"
+        ).write.mode("append").parquet(target)
+
+    class _Crash(Exception):
+        pass
+
+    def crash(*_args):
+        raise _Crash
+
+    monkeypatch.setattr(sinks, "_swap_in", crash)
+    with pytest.raises(_Crash):
+        sinks.compact_parquet(spark, target, target_bytes=1 << 30)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(target + ".staging", sinks._SWAP_MARK))
+
+    assert sinks.recover_staging(spark, target) == "completed_swap"
+    assert _rows(spark, target) == {i: (f"v{i}", 1) for i in range(4)}
+    data = [f for f in os.listdir(target) if not f.startswith(("_", "."))]
+    assert len(data) == 1
+    assert not os.path.exists(target + ".staging")
+
+
+def test_partitioned_upsert_keeps_zero_padded_partition_values(
+    spark, tmp_path
+):
+    """A string partition value "01" is written as pd=01/ and read back
+    as "01", on the first write and on a merge: the partition column
+    takes the delta's declared type, never a type inferred from the
+    directory name (INT 1, rewritten as pd=1/)."""
+    target = str(tmp_path / "t")
+    schema = "k long, v string, ver long, pd string"
+
+    def upsert(rows):
+        return sinks.upsert_parquet(
+            spark, target, spark.createDataFrame(rows, schema), ["k"],
+            "ver", partition_col="pd",
+        )
+
+    def part_dirs():
+        return sorted(d for d in os.listdir(target) if d.startswith("pd="))
+
+    first = upsert([(1, "a", 1, "01"), (2, "b", 1, "02")])
+    assert part_dirs() == ["pd=01", "pd=02"]
+    assert {(r["k"], r["pd"]) for r in first.collect()} == {
+        (1, "01"), (2, "02"),
+    }
+    merged = upsert([(1, "a2", 2, "01"), (3, "c", 2, "01")])
+    assert part_dirs() == ["pd=01", "pd=02"]
+    assert {r["k"]: (r["v"], r["pd"]) for r in merged.collect()} == {
+        1: ("a2", "01"), 2: ("b", "02"), 3: ("c", "01"),
+    }
+
+
+def test_partition_sinks_write_no_session_conf(spark, tmp_path, monkeypatch):
+    """A partitioned upsert, a replayed partition stage and a
+    partitioned compaction type partition columns through the reader
+    schema, so none of them sets or unsets a session conf that a query
+    planned on the same session meanwhile would see."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    target = str(tmp_path / "t")
+    schema = "k long, v string, ver long, pd string"
+    base = spark.createDataFrame(
+        [(1, "a", 1, "01"), (2, "b", 1, "02")], schema
+    )
+    staged = spark.createDataFrame([(1, "a2", 2, "01")], schema)
+    calls = []
+    for name in ("set", "unset"):
+        real = getattr(RuntimeConfig, name)
+
+        def record(self, *args, _name=name, _real=real):
+            calls.append((_name, *args))
+            return _real(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, record)
+
+    sinks.upsert_parquet(spark, target, base, ["k"], "ver", partition_col="pd")
+    staged.write.mode("overwrite").partitionBy("pd").parquet(
+        target + ".staging"
+    )
+    open(os.path.join(target + ".staging", sinks._PART_MARK), "w").close()
+    assert sinks.recover_staging(spark, target) == (
+        "replayed_partition_overwrite"
+    )
+    sinks.compact_parquet(spark, target, partition_cols=["pd"])
+    assert calls == []
+    got = {r["k"]: (r["v"], r["pd"]) for r in sinks._read_or_none(
+        spark, target, partition_types={"pd": StringType()}
+    ).collect()}
+    assert got == {1: ("a2", "01"), 2: ("b", "02")}

@@ -82,59 +82,6 @@ def test_split_audit_matches_pipeline_split(spark):
     assert 0.6 <= audit["train"]["n_rows"] / n <= 0.95
 
 
-def test_stage_swap_failed_first_write_not_committed(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE fix, exercised through stage_swap_parquet's OWN failure
-    branch: when the swap-in rename of a FIRST-EVER write fails (no
-    aside to restore), the stage must be left UNMARKED so the next
-    recovery touch discards it — never silently commits a write the
-    caller was told failed. The rename failure is injected by wrapping
-    the Hadoop FS so exactly the staging→target rename returns
-    false."""
-    from big_data_project_spark.plans import sinks
-
-    target = str(tmp_path / "t")
-    df = spark.range(5).selectExpr("id", "id * 2 AS v")
-
-    real_hadoop_path = sinks._hadoop_path
-
-    class _FailSwapIn:
-        """Delegates to the real FileSystem, failing only the
-        .staging → target rename (the JVM object is final; this is
-        the seam)."""
-
-        def __init__(self, real):
-            self._real = real
-
-        def rename(self, a, b):
-            if str(a).endswith(".staging") and str(b).endswith("/t"):
-                return False
-            return self._real.rename(a, b)
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    def patched(spark_, path):
-        fs, hpath = real_hadoop_path(spark_, path)
-        return _FailSwapIn(fs), hpath
-
-    monkeypatch.setattr(sinks, "_hadoop_path", patched)
-    with pytest.raises(IOError, match="swap-in failed"):
-        sinks.stage_swap_parquet(spark, df, target)
-    monkeypatch.setattr(sinks, "_hadoop_path", real_hadoop_path)
-
-    # the staged files survive for inspection but carry NO marker...
-    tmp = target + ".staging"
-    assert sinks._fs_exists(spark, tmp)
-    assert not sinks._fs_exists(spark, tmp + "/" + sinks._SWAP_MARK)
-    # ...so the next recovery DISCARDS the stage instead of committing
-    action = sinks.recover_staging(spark, target)
-    assert action == "dropped_incomplete_stage"
-    assert not sinks._fs_exists(spark, target)
-    assert not sinks._fs_exists(spark, tmp)
-
-
 def test_mergeable_quantile_bins_bounds(spark):
     """Histogram estimates stay inside each route's value range, are
     monotone across p, and sit within bin_width/2 of the DISCRETE
