@@ -26,6 +26,7 @@ in the session memo tier (``caching``), which assumes the data under
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -152,7 +153,7 @@ def _footer_file(spark: SparkSession, path: str):
     first data file in full-path order. Summary files are looked for at
     the root only, where parquet's committer writes them. Listing goes
     through the Hadoop FS API, so s3a:// and hdfs:// paths work."""
-    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    root = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(root):
         return None
@@ -188,23 +189,42 @@ def _footer_schema(spark: SparkSession, status, nanos_as_long: bool):
     Spark writer stored in the footer, else the converted parquet
     schema) with a ``ParquetToSparkSchemaConverter`` over the session's
     SQLConf."""
-    parquet = spark._jvm.org.apache.parquet
-    spark_pq = spark._jvm.org.apache.spark.sql.execution.datasources.parquet
+    j = functools.partial(_jclass, spark)
+    parquet = "org.apache.parquet."
+    spark_pq = "org.apache.spark.sql.execution.datasources.parquet."
     conf = spark._jsparkSession.sessionState().conf()
     if nanos_as_long:
         conf = conf.clone()
         conf.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
-    meta = spark_pq.ParquetFooterReader.readFooter(
-        parquet.hadoop.util.HadoopInputFile.fromStatus(
+    converter = j(parquet + "format.converter.ParquetMetadataConverter")
+    meta = j(spark_pq + "ParquetFooterReader").readFooter(
+        j(parquet + "hadoop.util.HadoopInputFile").fromStatus(
             status, spark._jsc.hadoopConfiguration()
         ),
-        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        converter.SKIP_ROW_GROUPS,
     )
-    schema = spark_pq.ParquetFileFormat.readSchemaFromFooter(
-        parquet.hadoop.Footer(status.getPath(), meta),
-        spark_pq.ParquetToSparkSchemaConverter(conf),
+    schema = j(spark_pq + "ParquetFileFormat").readSchemaFromFooter(
+        j(parquet + "hadoop.Footer")(status.getPath(), meta),
+        j(spark_pq + "ParquetToSparkSchemaConverter")(conf),
     )
     return T.StructType.fromJson(json.loads(schema.json()))
+
+
+# (JVM view, {class name: handle}) of the last view _jclass served
+_JCLASSES: tuple = (None, {})
+
+
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name``, looked up once per JVM view: each package
+    step of ``spark._jvm.org.apache...`` is a py4j round trip. Keyed on
+    the view, so a relaunched gateway never gets a stale handle."""
+    global _JCLASSES
+    jvm, classes = _JCLASSES
+    if jvm is not spark._jvm:
+        jvm, classes = _JCLASSES = (spark._jvm, {})
+    if name not in classes:
+        classes[name] = functools.reduce(getattr, name.split("."), jvm)
+    return classes[name]
 
 
 def _tz_normalized(df: DataFrame) -> DataFrame:

@@ -20,8 +20,10 @@ and gets distinguishable, joinable lineage rows per vintage.
 Spark-first deltas: the pandas read-all-rows + sklearn fit becomes a
 pyspark.ml Pipeline (VectorAssembler -> RandomForestRegressor) trained
 on a DataFrame that never leaves the cluster; the row-index 80/20 split
-becomes a time-threshold split (approxQuantile on the hour), which is
-the distributed equivalent of splitting the hour-ordered frame.
+becomes a time-threshold split at the smallest hour whose cumulative
+row share reaches SPLIT_RATIO (``_cut``), the distributed equivalent of
+splitting the hour-ordered frame. The RF and both oracle-backed audits
+split by that one rule.
 
 Model outputs are seed-deterministic but not SQL-expressible, so these
 are *rows-only* entries (SURVEY §2 D48); the deterministic persistence
@@ -34,10 +36,10 @@ from __future__ import annotations
 import hashlib
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.kpi import ml_dataset_hourly
+from ..operators.kpi import SQL_ML_DATASET, ml_dataset_hourly
 
 FEATURES = [
     "trip_update_events",
@@ -70,14 +72,51 @@ def training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cut(t: DataFrame) -> DataFrame:
+    """The one-row relation ``cut_t``: the smallest hour ``t`` (unix
+    seconds) whose cumulative row share reaches SPLIT_RATIO. Rows with
+    ``t <= cut_t`` train, later rows test. The window runs over the
+    distinct-hours relation (days×24 rows), never the rows themselves."""
+    byt = t.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
+    w = Window.orderBy("t")
+    upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    every = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cum = byt.select(
+        "t",
+        F.sum("c").over(upto).alias("cum_c"),
+        F.sum("c").over(every).alias("n"),
+    )
+    return cum.filter(
+        F.col("cum_c") >= F.lit(SPLIT_RATIO) * F.col("n")
+    ).agg(F.min("t").alias("cut_t"))
+
+
 def _split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Time-threshold split at the SPLIT_RATIO quantile of the hour."""
-    cut = df.select(
-        F.unix_timestamp("hour_ts").alias("t")
-    ).approxQuantile("t", [SPLIT_RATIO], 0.0)[0]
-    train = df.filter(F.unix_timestamp("hour_ts") <= F.lit(cut))
-    test = df.filter(F.unix_timestamp("hour_ts") > F.lit(cut))
-    return train, test
+    """(train, test) of ``df`` at the ``_cut`` hour. The cut is taken as
+    a scalar (one job), so the RF's repeated passes over ``train``
+    filter on a literal and never re-run the cut plan."""
+    t = F.unix_timestamp("hour_ts")
+    cut = _cut(df.select(t.alias("t"))).first()["cut_t"]
+    return df.filter(t <= F.lit(cut)), df.filter(t > F.lit(cut))
+
+
+def _split_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``training_frame`` as (split, route_id, hour_ts, y_true), each row
+    tagged train/test lazily by a broadcast join to ``_cut``."""
+    base = training_frame(spark, sf_dir).select(
+        "route_id",
+        "hour_ts",
+        F.unix_timestamp("hour_ts").alias("t"),
+        F.col("passengers_next_hour").alias("y_true"),
+    )
+    return base.join(F.broadcast(_cut(base))).select(
+        F.when(F.col("t") <= F.col("cut_t"), F.lit("train"))
+        .otherwise(F.lit("test"))
+        .alias("split"),
+        "route_id",
+        "hour_ts",
+        "y_true",
+    )
 
 
 def _fit_predict(df: DataFrame) -> DataFrame:
@@ -202,36 +241,50 @@ def demand_model_leaderboard(
     strictly same-rows comparison of the deterministic arms, use
     ``baseline_leaderboard`` (both-lags-exist restriction, the
     seasonal_naive_eval rule)."""
+    return _leaderboard(
+        spark, sf_dir, rf_demand_predictions(spark, sf_dir), F.col("y_pred")
+    )
+
+
+def _leaderboard(
+    spark: SparkSession, sf_dir: str, test: DataFrame, rf_pred: Column | None
+) -> DataFrame:
+    """The 3-arm leaderboard over the held-out ``test`` rows (feature
+    hour, next-hour label ``y_true``): each row left-joined to the
+    demand rollup for the persistence (same-hour) and seasonal
+    (target-24h) predictors, each arm scored on per-arm coverage.
+    ``rf_pred`` None scores the RandomForest arm over every test row
+    with a NULL ``mae``."""
     from ..functions.portable import davg
     from ..operators.hourly import demand_hourly
 
-    preds = rf_demand_predictions(spark, sf_dir).select(
-        "route_id", "hour_ts", "y_true", "y_pred"
-    )
     d = demand_hourly(spark, sf_dir)
     persist = d.select(
         "route_id", "hour_ts", F.col("passengers").alias("yhat_persist")
     )
     seasonal = d.select(
         "route_id",
-        (F.col("hour_ts") + F.expr("INTERVAL 23 HOURS")).alias(
-            "hour_ts"
-        ),
+        (F.col("hour_ts") + F.expr("INTERVAL 23 HOURS")).alias("hour_ts"),
         F.col("passengers").alias("yhat_seasonal"),
     )
-    ev = preds.join(persist, ["route_id", "hour_ts"], "left").join(
+    ev = test.join(persist, ["route_id", "hour_ts"], "left").join(
         seasonal, ["route_id", "hour_ts"], "left"
     )
 
     def arm(name, yhat):
-        scored = ev.filter(yhat.isNotNull())
+        scored = ev if yhat is None else ev.filter(yhat.isNotNull())
+        mae = (
+            F.lit(None).cast("double")
+            if yhat is None
+            else davg(F.abs(yhat - F.col("y_true")), 4)
+        )
         return scored.agg(
             F.lit(name).alias("model"),
             F.count(F.lit(1)).alias("n_eval"),
-            davg(F.abs(yhat - F.col("y_true")), 4).alias("mae"),
+            mae.alias("mae"),
         )
 
-    rf = arm("random_forest", F.col("y_pred"))
+    rf = arm("random_forest", rf_pred)
     pe = arm("persistence", F.col("yhat_persist"))
     se = arm("seasonal_naive", F.col("yhat_seasonal"))
     return rf.unionByName(pe).unionByName(se).orderBy("model")
@@ -301,48 +354,23 @@ def ml_dataset_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     only thing left rows-only in ml/demand.py is the RandomForest's own
     scores.
 
-    The cut rule here is the portable one — the smallest hour whose
-    cumulative row share reaches SPLIT_RATIO (cume_dist over the hour
-    axis) — mirrored exactly in the DuckDB oracle; a unit test bounds
-    it against ``_split``'s approxQuantile cut. Scale: the ranking
-    window runs over the DISTINCT-HOURS relation (already grouped —
-    days×24 rows, never the rollup), the tag is a broadcast scalar
-    join, and the audit aggregate is one rollup-sized groupBy."""
+    The split is ``_cut``'s, the one the RF trains on, mirrored in the
+    DuckDB oracle. Scale: the cut window runs over the DISTINCT-HOURS
+    relation (days×24 rows, never the rollup), the tag is a broadcast
+    scalar join, and the audit aggregate is one rollup-sized groupBy."""
     from ..functions.portable import davg, dsum
 
-    base = training_frame(spark, sf_dir).select(
-        "route_id",
-        "hour_ts",
-        F.unix_timestamp("hour_ts").alias("t"),
-        F.col("passengers_next_hour").alias("label"),
-    )
-    byt = base.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    cum = byt.withColumn("cum_c", F.sum("c").over(w))
-    total = base.agg(F.count(F.lit(1)).alias("n"))
-    cut = (
-        cum.join(F.broadcast(total))
-        .filter(F.col("cum_c") >= F.lit(SPLIT_RATIO) * F.col("n"))
-        .agg(F.min("t").alias("cut_t"))
-    )
-    tagged = base.join(F.broadcast(cut)).select(
-        F.when(F.col("t") <= F.col("cut_t"), F.lit("train"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
-        "route_id",
-        "hour_ts",
-        "label",
-    )
     return (
-        tagged.groupBy("split")
+        _split_tagged(spark, sf_dir)
+        .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("route_id").alias("n_routes"),
             F.countDistinct("hour_ts").alias("n_hours"),
             F.min("hour_ts").alias("hour_min"),
             F.max("hour_ts").alias("hour_max"),
-            dsum("label", 2).alias("label_sum"),
-            davg("label", 4).alias("label_avg"),
+            dsum("y_true", 2).alias("label_sum"),
+            davg("y_true", 4).alias("label_avg"),
         )
         .orderBy("split")
     )
@@ -359,71 +387,16 @@ def demand_leaderboard_audit(
     (``mae`` of the random_forest row, NULL here) as the rows-only
     residue that ``demand_model_leaderboard`` carries.
 
-    Same eval frame as the rows-only leaderboard: the held-out test
-    rows (feature hour, next-hour label) left-joined to the demand
-    rollup for the persistence (same-hour) and seasonal (target-24h)
-    predictors, each arm scored on per-arm coverage. Test membership
-    uses the portable cut — smallest hour whose cumulative row share
-    reaches SPLIT_RATIO — which ``ml_dataset_split_audit``'s unit test
-    bounds against ``_split``'s approxQuantile cut, so the coverage
-    columns here are the same numbers the RF leaderboard reports.
+    Same eval frame as the rows-only leaderboard (``_leaderboard``),
+    over the test rows of ``_cut``, the split the RF trains on, so the
+    coverage columns here are the same numbers the RF leaderboard
+    reports.
 
-    Scale: the cut ranking runs over the distinct-hours relation
+    Scale: the cut window runs over the distinct-hours relation
     (days×24 rows), the tag is a broadcast scalar join, the predictor
     joins are rollup-sized hash equi-joins, and the output is 3 rows."""
-    from ..functions.portable import davg
-    from ..operators.hourly import demand_hourly
-
-    base = training_frame(spark, sf_dir).select(
-        "route_id",
-        "hour_ts",
-        F.unix_timestamp("hour_ts").alias("t"),
-        F.col("passengers_next_hour").alias("y_true"),
-    )
-    byt = base.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    cum = byt.withColumn("cum_c", F.sum("c").over(w))
-    total = base.agg(F.count(F.lit(1)).alias("n"))
-    cut = (
-        cum.join(F.broadcast(total))
-        .filter(F.col("cum_c") >= F.lit(SPLIT_RATIO) * F.col("n"))
-        .agg(F.min("t").alias("cut_t"))
-    )
-    test = (
-        base.join(F.broadcast(cut))
-        .filter(F.col("t") > F.col("cut_t"))
-        .select("route_id", "hour_ts", "y_true")
-    )
-    d = demand_hourly(spark, sf_dir)
-    persist = d.select(
-        "route_id", "hour_ts", F.col("passengers").alias("yhat_persist")
-    )
-    seasonal = d.select(
-        "route_id",
-        (F.col("hour_ts") + F.expr("INTERVAL 23 HOURS")).alias("hour_ts"),
-        F.col("passengers").alias("yhat_seasonal"),
-    )
-    ev = test.join(persist, ["route_id", "hour_ts"], "left").join(
-        seasonal, ["route_id", "hour_ts"], "left"
-    )
-
-    def arm(name, yhat):
-        scored = ev if yhat is None else ev.filter(yhat.isNotNull())
-        mae = (
-            F.lit(None).cast("double")
-            if yhat is None
-            else davg(F.abs(yhat - F.col("y_true")), 4)
-        )
-        return scored.agg(
-            F.lit(name).alias("model"),
-            F.count(F.lit(1)).alias("n_eval"),
-            mae.alias("mae"),
-        )
-
-    rf = arm("random_forest", None)
-    pe = arm("persistence", F.col("yhat_persist"))
-    se = arm("seasonal_naive", F.col("yhat_seasonal"))
-    return rf.unionByName(pe).unionByName(se).orderBy("model")
+    test = _split_tagged(spark, sf_dir).filter(F.col("split") == "test")
+    return _leaderboard(spark, sf_dir, test, None)
 
 
 QUERIES = {
@@ -484,43 +457,49 @@ def _baseline_leaderboard_sql() -> str:
 ORACLES["baseline_leaderboard"] = _baseline_leaderboard_sql()
 
 
+# The labelled rows and their train/test tag, as CTEs shared by both
+# audit oracles: tagged(split, route_id, hour_ts, y_true).
+_SQL_SPLIT_TAGGED = f"""
+    ds AS ({SQL_ML_DATASET}),
+    lab AS (
+      SELECT route_id, hour_ts,
+             lead(passengers) OVER (
+               PARTITION BY route_id ORDER BY hour_ts) AS y_true
+      FROM ds
+    ),
+    base AS (
+      SELECT route_id, hour_ts, epoch(hour_ts) AS t, y_true
+      FROM lab WHERE y_true IS NOT NULL
+    ),
+    byt AS (SELECT t, count(*) AS c FROM base GROUP BY t),
+    cum AS (
+      SELECT t, sum(c) OVER (ORDER BY t) AS cum_c,
+             (SELECT count(*) FROM base) AS n
+      FROM byt
+    ),
+    cutv AS (
+      SELECT min(t) AS cut_t FROM cum
+      WHERE cum_c >= {SPLIT_RATIO} * n
+    ),
+    tagged AS (
+      SELECT CASE WHEN t <= cut_t THEN 'train' ELSE 'test' END AS split,
+             route_id, hour_ts, y_true
+      FROM base, cutv
+    )
+"""
+
+
 def _split_audit_sql() -> str:
     from ..functions.portable import sql_davg, sql_dsum
-    from ..operators.kpi import SQL_ML_DATASET
 
     return f"""
-        WITH ds AS ({SQL_ML_DATASET}),
-        lab AS (
-          SELECT route_id, hour_ts,
-                 lead(passengers) OVER (
-                   PARTITION BY route_id ORDER BY hour_ts) AS label
-          FROM ds
-        ),
-        base AS (
-          SELECT route_id, hour_ts, epoch(hour_ts) AS t, label
-          FROM lab WHERE label IS NOT NULL
-        ),
-        byt AS (SELECT t, count(*) AS c FROM base GROUP BY t),
-        cum AS (
-          SELECT t, sum(c) OVER (ORDER BY t) AS cum_c,
-                 (SELECT count(*) FROM base) AS n
-          FROM byt
-        ),
-        cutv AS (
-          SELECT min(t) AS cut_t FROM cum
-          WHERE cum_c >= {SPLIT_RATIO} * n
-        ),
-        tagged AS (
-          SELECT CASE WHEN t <= cut_t THEN 'train' ELSE 'test' END AS split,
-                 route_id, hour_ts, label
-          FROM base, cutv
-        )
+        WITH {_SQL_SPLIT_TAGGED}
         SELECT split, count(*) AS n_rows,
                count(DISTINCT route_id) AS n_routes,
                count(DISTINCT hour_ts) AS n_hours,
                min(hour_ts) AS hour_min, max(hour_ts) AS hour_max,
-               {sql_dsum('label', 2)} AS label_sum,
-               {sql_davg('label', 4)} AS label_avg
+               {sql_dsum('y_true', 2)} AS label_sum,
+               {sql_davg('y_true', 4)} AS label_avg
         FROM tagged GROUP BY split ORDER BY split
     """
 
@@ -531,33 +510,11 @@ ORACLES["ml_dataset_split_audit"] = _split_audit_sql()
 def _leaderboard_audit_sql() -> str:
     from ..functions.portable import sql_davg
     from ..operators.hourly import SQL_DEMAND
-    from ..operators.kpi import SQL_ML_DATASET
 
     return f"""
-        WITH ds AS ({SQL_ML_DATASET}),
-        lab AS (
-          SELECT route_id, hour_ts,
-                 lead(passengers) OVER (
-                   PARTITION BY route_id ORDER BY hour_ts) AS y_true
-          FROM ds
-        ),
-        base AS (
-          SELECT route_id, hour_ts, epoch(hour_ts) AS t, y_true
-          FROM lab WHERE y_true IS NOT NULL
-        ),
-        byt AS (SELECT t, count(*) AS c FROM base GROUP BY t),
-        cum AS (
-          SELECT t, sum(c) OVER (ORDER BY t) AS cum_c,
-                 (SELECT count(*) FROM base) AS n
-          FROM byt
-        ),
-        cutv AS (
-          SELECT min(t) AS cut_t FROM cum
-          WHERE cum_c >= {SPLIT_RATIO} * n
-        ),
+        WITH {_SQL_SPLIT_TAGGED},
         test AS (
-          SELECT route_id, hour_ts, y_true
-          FROM base, cutv WHERE t > cut_t
+          SELECT route_id, hour_ts, y_true FROM tagged WHERE split = 'test'
         ),
         d AS ({SQL_DEMAND}),
         p1 AS (

@@ -226,39 +226,8 @@ def top_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def summary_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Action counts over the latest hour, 'needs_data' when no suggestion."""
-    rows = _route_rows_latest(spark, sf_dir)
+    rows = route_export_rows(spark, sf_dir)
     return rows.groupBy("action").agg(F.count(F.lit(1)).alias("n"))
-
-
-def _route_rows_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-hour payload: kpi rows ⟕ suggestions (SQL_LATEST_ROWS)."""
-    kpi = kpi_hourly(spark, sf_dir)
-    latest = kpi.agg(F.max("hour_ts").alias("max_ts"))
-    k = kpi.join(F.broadcast(latest)).filter(
-        F.col("hour_ts") == F.col("max_ts")
-    )
-    s = suggestions(spark, sf_dir).select(
-        "route_id",
-        "hour_ts",
-        F.col("action").alias("s_action"),
-        F.col("current_headway_min").alias("s_cur_hw"),
-        F.col("recommended_headway_min").alias("s_rec_hw"),
-        F.col("priority_score").alias("s_score"),
-    )
-    joined = k.join(F.broadcast(s), ["route_id", "hour_ts"], "left")
-    return joined.select(
-        "route_id",
-        "hour_ts",
-        "predicted_passengers",
-        "observed_passengers",
-        "active_vehicles",
-        "avg_headway_min",
-        "is_peak_hour",
-        F.coalesce("s_action", F.lit("needs_data")).alias("action"),
-        F.col("s_cur_hw").alias("current_headway_min"),
-        F.col("s_rec_hw").alias("recommended_headway_min"),
-        F.coalesce("s_score", F.lit(0.0)).alias("priority_score"),
-    )
 
 
 def route_export_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,7 +299,7 @@ def needs_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Status/message classification of the latest-hour payload
     (compute_status/compute_message in export_suggestions_json.py:149-168)
     plus headway deltas (build_route_rows:218-225)."""
-    rows = _route_rows_latest(spark, sf_dir)
+    rows = route_export_rows(spark, sf_dir)
     has_veh = F.col("active_vehicles") > 0
     has_hw = F.col("avg_headway_min").isNotNull()
     status = (

@@ -3,10 +3,12 @@ shared k-means fit, the ml split audit, and the TakeOrdered WRS cut."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MED
 
 
 def test_triangle_count_types_and_values(spark):
@@ -63,23 +65,35 @@ def test_km_fit_shared_is_memoized(spark):
 
 
 def test_split_audit_matches_pipeline_split(spark):
-    """The audit's portable cume-dist cut must reproduce the actual
-    pipeline's approxQuantile(err=0) split membership."""
+    """The one split cut (``_cut``: the smallest hour whose cumulative
+    row share reaches SPLIT_RATIO) equals Spark's exact quantile of the
+    hour, approxQuantile(err=0), and the audit's per-split row counts
+    are the rows on either side of it. Checked at every generated scale
+    factor."""
     from big_data_project_spark.ml.demand import (
-        _split,
+        SPLIT_RATIO,
+        _cut,
         ml_dataset_split_audit,
         training_frame,
     )
 
-    audit = {
-        r["split"]: r
-        for r in ml_dataset_split_audit(spark, SF_DIR).collect()
-    }
-    train, test = _split(training_frame(spark, SF_DIR))
-    assert audit["train"]["n_rows"] == train.count()
-    assert audit["test"]["n_rows"] == test.count()
-    n = audit["train"]["n_rows"] + audit["test"]["n_rows"]
-    assert 0.6 <= audit["train"]["n_rows"] / n <= 0.95
+    sf_large = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    for sf_dir in (SF_DIR, SF_DIR_MED, sf_large):
+        if not os.path.isdir(sf_dir):
+            continue
+        df = training_frame(spark, sf_dir)
+        t = F.unix_timestamp("hour_ts")
+        hours = df.select(t.alias("t"))
+        ref = hours.approxQuantile("t", [SPLIT_RATIO], 0.0)[0]
+        assert _cut(hours).first()["cut_t"] == ref, sf_dir
+        audit = {
+            r["split"]: r
+            for r in ml_dataset_split_audit(spark, sf_dir).collect()
+        }
+        assert audit["train"]["n_rows"] == df.filter(t <= ref).count()
+        assert audit["test"]["n_rows"] == df.filter(t > ref).count()
+        n = audit["train"]["n_rows"] + audit["test"]["n_rows"]
+        assert 0.6 <= audit["train"]["n_rows"] / n <= 0.95, sf_dir
 
 
 def test_mergeable_quantile_bins_bounds(spark):

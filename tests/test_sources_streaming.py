@@ -818,10 +818,19 @@ def test_rf_demand_model_metrics(spark):
 
 
 def test_rf_predictions_cover_test_split_only(spark):
+    """The predictions cover exactly the training-frame rows after
+    Spark's exact SPLIT_RATIO quantile of the hour, approxQuantile(err=0):
+    the rule the RF split is held to."""
     df = demand.training_frame(spark, SF_DIR)
-    train, test = demand._split(df)
+    t = F.unix_timestamp("hour_ts")
+    cut = df.select(t.alias("t")).approxQuantile(
+        "t", [demand.SPLIT_RATIO], 0.0
+    )[0]
+    want = df.filter(t > F.lit(cut)).select("route_id", "hour_ts")
     preds = demand.rf_demand_predictions(spark, SF_DIR)
-    assert preds.count() == test.count()
+    got = preds.select("route_id", "hour_ts")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
     assert preds.filter(F.col("y_pred").isNull()).count() == 0
 
 
