@@ -1,23 +1,44 @@
-"""Rounding that is bit-identical between Spark and the DuckDB oracle.
+"""Column/SQL pairs that evaluate bit-identically in Spark and in the
+DuckDB oracle. Each primitive is stated once here; operators and
+oracles build on these names rather than respelling them.
 
-``round()`` differs between engines on exact half-way doubles (Spark
-rounds HALF_UP via BigDecimal, DuckDB half-to-even on doubles), which
-shows up when rule outputs are blends of already-rounded values. This
-floor-based form evaluates identically because both engines see the same
-IEEE double and ``floor`` has no tie cases.
+Rounding. ``round()`` differs between engines on exact half-way doubles
+(Spark rounds HALF_UP via BigDecimal, DuckDB half-to-even on doubles),
+which shows up when rule outputs are blends of already-rounded values.
+The floor-based ``pround`` evaluates identically because both engines
+see the same IEEE double and ``floor`` has no tie cases.
+
+Text. ``norm`` / ``SQL_NORM`` lower-cases, trims and collapses every
+whitespace run to one space; ``tokens`` / ``SQL_TOKENS`` split the
+normalized text on ``' '``; ``word_tokens`` explodes the tokens of a
+frame's ``text`` column and drops empty ones.
+
+Hash. ``hash60`` / ``sql_hash60`` read the first 15 hex chars of md5 as
+a BIGINT in [0, 2^60); ``uniform01`` builds on it.
+
+NULL and blank text. A NULL text normalizes to NULL and has NULL
+tokens, which explode to no rows: a NULL doc contributes no token and
+no shingle, in both engines. A blank text (``''`` or whitespace only)
+normalizes to ``''`` and splits to the one-element array ``['']``, so it
+has one token, the empty string; ``word_tokens`` drops it, and an
+operator that counts array elements sees 1. A ratio whose denominator
+can be 0 (a blank doc's ``n_chars``) divides with ``try_divide``, NULL
+where DuckDB's ``/`` gives NULL, rather than raising under ANSI.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
 def pround(c: Column | str, n: int = 4) -> Column:
-    if isinstance(c, str):
-        c = F.col(c)
     scale = float(10**n)
-    return F.floor(c * scale + F.lit(0.5)) / F.lit(scale)
+    return F.floor(_col(c) * scale + F.lit(0.5)) / F.lit(scale)
 
 
 def sql_pround(expr: str, n: int = 4) -> str:
@@ -39,8 +60,7 @@ def sql_pround(expr: str, n: int = 4) -> str:
 
 
 def davg(c: Column | str, n: int = 4) -> Column:
-    if isinstance(c, str):
-        c = F.col(c)
+    c = _col(c)
     return pround(
         F.sum(c.cast("decimal(28,6)")).cast("double") / F.count(c), n
     )
@@ -57,19 +77,50 @@ def dsum_exact(c: Column | str) -> Column:
     accumulation cast back to double WITHOUT final rounding — for
     callers that combine several moment sums in one closed-form
     expression (corr, OLS, cosine) and round once at the end."""
-    if isinstance(c, str):
-        c = F.col(c)
-    return F.sum(c.cast("decimal(28,6)")).cast("double")
+    return F.sum(_col(c).cast("decimal(28,6)")).cast("double")
 
 
 def dsum(c: Column | str, n: int = 2) -> Column:
-    if isinstance(c, str):
-        c = F.col(c)
-    return pround(F.sum(c.cast("decimal(28,6)")).cast("double"), n)
+    return pround(dsum_exact(c), n)
 
 
 def sql_dsum(expr: str, n: int = 2) -> str:
     return sql_pround(f"(sum(({expr})::DECIMAL(28,6)))::DOUBLE", n)
+
+
+# Explicit whitespace class: Java's \s includes \x0B, RE2's does not —
+# spelling the class out keeps Spark and the oracle bit-identical on any
+# input, not just the ASCII-printable test corpus.
+_WS = r"[ \t\n\r\f\x0B]+"
+
+SQL_NORM = (
+    "regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')"
+)
+SQL_TOKENS = f"string_split({SQL_NORM}, ' ')"
+
+
+def norm(c: Column | str) -> Column:
+    return F.regexp_replace(F.lower(F.trim(_col(c))), _WS, " ")
+
+
+def tokens(c: Column | str) -> Column:
+    return F.split(norm(c), " ")
+
+
+def word_tokens(df: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus one ``tok`` row per non-empty token of
+    ``text``."""
+    return df.select(
+        *keep, F.explode(tokens("text")).alias("tok")
+    ).filter(F.col("tok") != "")
+
+
+def hash60(c: Column | str) -> Column:
+    return F.conv(F.substring(F.md5(_col(c)), 1, 15), 16, 10).cast("long")
+
+
+def sql_hash60(expr: str) -> str:
+    return f"(('0x' || substr(md5({expr}), 1, 15)))::BIGINT"
 
 
 # md5-derived uniform in (0, 1]: the deterministic stand-in for rand()
@@ -81,14 +132,8 @@ def sql_dsum(expr: str, n: int = 2) -> str:
 
 
 def uniform01(c: Column | str) -> Column:
-    if isinstance(c, str):
-        c = F.col(c)
-    h = F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-    return (h + 1) / F.lit(float(2**60))
+    return (hash60(c) + 1) / F.lit(float(2**60))
 
 
 def sql_uniform01(expr: str) -> str:
-    return (
-        f"((('0x' || substr(md5({expr}), 1, 15))::BIGINT + 1))::DOUBLE"
-        f" / {2**60}.0"
-    )
+    return f"(({sql_hash60(expr)} + 1))::DOUBLE / {2**60}.0"

@@ -271,23 +271,30 @@ def _leaderboard(
         seasonal, ["route_id", "hour_ts"], "left"
     )
 
-    def arm(name, yhat):
-        scored = ev if yhat is None else ev.filter(yhat.isNotNull())
-        mae = (
-            F.lit(None).cast("double")
-            if yhat is None
-            else davg(F.abs(yhat - F.col("y_true")), 4)
+    # One aggregate with a count and a mean per arm, unpivoted: an arm
+    # scores the rows where its prediction is not NULL, as count(yhat)
+    # and davg's count(|yhat - y_true|) skip the others.
+    arms = {
+        "random_forest": rf_pred,
+        "persistence": F.col("yhat_persist"),
+        "seasonal_naive": F.col("yhat_seasonal"),
+    }
+    aggs = []
+    for name, yhat in arms.items():
+        if yhat is None:
+            n, mae = F.count(F.lit(1)), F.lit(None).cast("double")
+        else:
+            n, mae = F.count(yhat), davg(F.abs(yhat - F.col("y_true")), 4)
+        aggs.append(
+            F.struct(
+                F.lit(name).alias("model"), n.alias("n_eval"), mae.alias("mae")
+            ).alias(name)
         )
-        return scored.agg(
-            F.lit(name).alias("model"),
-            F.count(F.lit(1)).alias("n_eval"),
-            mae.alias("mae"),
-        )
-
-    rf = arm("random_forest", rf_pred)
-    pe = arm("persistence", F.col("yhat_persist"))
-    se = arm("seasonal_naive", F.col("yhat_seasonal"))
-    return rf.unionByName(pe).unionByName(se).orderBy("model")
+    return (
+        ev.agg(*aggs)
+        .select(F.inline(F.array(*arms)))
+        .orderBy("model")
+    )
 
 
 def baseline_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,9 +35,15 @@ from pyspark.sql import functions as F
 
 from ..caching import persisted
 from ..catalog import load_table_spread
-from ..functions.portable import pround, sql_pround
+from ..functions.portable import (
+    SQL_NORM,
+    hash60,
+    norm,
+    pround,
+    sql_hash60,
+    sql_pround,
+)
 from .corpus import INC_MOD, INC_REM
-from .dedup import _SQL_NORM, _hash60, _norm, _sql_hash60
 
 M_BITS = 4096  # bit-array size: small enough to measure real FPs
 K_HASH = 3  # probes per key
@@ -48,7 +54,7 @@ def _probe_positions(h):
     independent md5-derived hashes mod M_BITS, all map-side."""
     return F.array(
         *[
-            _hash60(F.concat(h, F.lit(f":{i}"))) % M_BITS
+            hash60(F.concat(h, F.lit(f":{i}"))) % M_BITS
             for i in range(K_HASH)
         ]
     )
@@ -61,9 +67,7 @@ def bloom_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the filter's bit fill ratio. ``fp_rate ~ fill_ratio^K`` — when
     fill approaches 1 the filter is saturated and must be resized."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    hashed = persisted(
-        docs.select("doc_id", F.md5(_norm(F.col("text"))).alias("h"))
-    )
+    hashed = persisted(docs.select("doc_id", F.md5(norm("text")).alias("h")))
     is_batch = (F.col("doc_id") % INC_MOD) == INC_REM
     base = hashed.filter(~is_batch)
     batch = hashed.filter(is_batch)
@@ -136,14 +140,14 @@ QUERIES = {
 
 _SQL_POSITIONS = " UNION ALL ".join(
     f"""SELECT doc_id, h,
-        {_sql_hash60(f"h || ':{i}'")} % {M_BITS} AS pos FROM h"""
+        {sql_hash60(f"h || ':{i}'")} % {M_BITS} AS pos FROM h"""
     for i in range(K_HASH)
 )
 
 ORACLES = {
     "bloom_dedup_audit": f"""
         WITH h AS (
-          SELECT doc_id, md5({_SQL_NORM}) AS h FROM documents
+          SELECT doc_id, md5({SQL_NORM}) AS h FROM documents
         ),
         pos AS ({_SQL_POSITIONS}),
         base_bits AS (

@@ -30,9 +30,17 @@ from pyspark.sql import functions as F
 
 from ..caching import persisted as _persisted
 from ..catalog import load_table, load_table_spread
-from ..functions.portable import davg, pround, sql_davg, sql_pround
+from ..functions.portable import (
+    SQL_TOKENS,
+    davg,
+    pround,
+    sql_davg,
+    sql_pround,
+    tokens,
+    word_tokens,
+)
 from ..session import scoped_conf
-from .dedup import _SQL_NORM, _SQL_SHINGLES, _norm, _shingle_arr
+from .dedup import _SQL_SHINGLES, _shingle_arr
 from . import dedup as _dedup
 from . import textops as _textops
 
@@ -46,15 +54,6 @@ INC_REM = 3
 # ranked (raw PMI is maximized by one-off pairs), report the top K.
 PMI_MIN_COUNT = 5
 PMI_TOP_K = 25
-
-
-def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    return docs.select(
-        "doc_id",
-        "source",
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
 
 
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,7 +73,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is AQE-coalescible; the vocabulary-sized per_source
     relation feeds both sides, so it is persisted once.
     """
-    toks = _tokens(spark, sf_dir)
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
+    toks = word_tokens(docs, "doc_id", "source")
     n_docs = load_table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -112,7 +112,8 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (language-bounded), not the corpus; the grand total
     comes from a whole-relation window over the same single-partition
     exchange rather than a second pass over the token stream."""
-    counts = _tokens(spark, sf_dir).groupBy("tok").agg(
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
+    counts = word_tokens(docs).groupBy("tok").agg(
         F.count(F.lit(1)).alias("n")
     )
     ranked = counts.withColumn(
@@ -275,7 +276,7 @@ def _bigram_arr(c):
     """Token-bigram array (WITH multiplicity — LM counts need it), pure
     map-side: zip the token array with its own 1-shifted slice; the
     null-padded tail concats to null and is filtered off."""
-    toks = F.split(_norm(c), " ")
+    toks = tokens(c)
     shifted = F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0)))
     pairs = F.zip_with(
         toks, shifted, lambda a, b: F.concat(a, F.lit(" "), b)
@@ -393,10 +394,7 @@ def token_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-relation sort."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     uni = (
-        docs.select(
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
+        word_tokens(docs)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -453,10 +451,10 @@ QUERIES = {
     "token_pmi_bigrams": token_pmi_bigrams,
 }
 
-_SQL_TOKENS = f"""
+_SQL_WORD_TOKENS = f"""
     SELECT doc_id, source, tok
     FROM (SELECT doc_id, source,
-                 unnest(string_split({_SQL_NORM}, ' ')) AS tok
+                 unnest({SQL_TOKENS}) AS tok
           FROM documents) t
     WHERE tok != ''
 """
@@ -476,7 +474,7 @@ def sql_bigrams(extra_cols: str = "") -> str:
              range(1, greatest(len(toks), 1)),
              i -> toks[i] || ' ' || toks[i+1]
            )) AS bg
-    FROM (SELECT doc_id, {extra_cols} string_split({_SQL_NORM}, ' ') AS toks
+    FROM (SELECT doc_id, {extra_cols} {SQL_TOKENS} AS toks
           FROM documents) d
     WHERE len(toks) >= 2
 """
@@ -515,7 +513,7 @@ ORACLES = {
         ORDER BY doc_id
     """,
     "tfidf_top_terms": f"""
-        WITH t AS ({_SQL_TOKENS}),
+        WITH t AS ({_SQL_WORD_TOKENS}),
         n AS (SELECT count(*) AS n_docs FROM documents),
         dfq AS (SELECT tok, count(DISTINCT doc_id) AS df FROM t GROUP BY tok),
         tf AS (SELECT source, tok, count(*) AS tf FROM t GROUP BY source, tok)
@@ -535,7 +533,7 @@ ORACLES = {
     """,
     "vocab_coverage": f"""
         WITH counts AS (
-          SELECT tok, count(*) AS n FROM ({_SQL_TOKENS}) t GROUP BY tok
+          SELECT tok, count(*) AS n FROM ({_SQL_WORD_TOKENS}) t GROUP BY tok
         ),
         ranked AS (
           SELECT n, row_number() OVER (ORDER BY n DESC, tok) AS rnk
@@ -620,7 +618,7 @@ ORACLES = {
         FROM j
     """,
     "token_pmi_bigrams": f"""
-        WITH t AS ({_SQL_TOKENS}),
+        WITH t AS ({_SQL_WORD_TOKENS}),
         uni AS (SELECT tok, count(*) AS cnt FROM t GROUP BY tok),
         tu AS (SELECT CAST(sum(cnt) AS BIGINT) AS total_uni FROM uni),
         bg AS ({_SQL_BIGRAMS}),
@@ -658,7 +656,8 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the vocabulary and joined back on tok; the per-doc rank window
     partitions on doc_id. Rank on the ROUNDED score with the term as
     tie-break, so the ordering is engine-portable."""
-    toks = _tokens(spark, sf_dir)
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
+    toks = word_tokens(docs, "doc_id")
     n_docs = load_table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -684,7 +683,7 @@ def doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["doc_top_terms"] = doc_top_terms
 
 ORACLES["doc_top_terms"] = f"""
-    WITH t AS ({_SQL_TOKENS}),
+    WITH t AS ({_SQL_WORD_TOKENS}),
     n AS (SELECT count(*) AS n_docs FROM documents),
     tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY doc_id, tok),
     dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok)
@@ -738,9 +737,7 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders by that exact sum with doc_id tie-break."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     vocab = sorted({t for _, t in BM25_QUERY_TERMS})
-    toks = F.filter(
-        F.split(_norm(F.col("text")), " "), lambda t: t != ""
-    )
+    toks = F.filter(tokens("text"), lambda t: t != "")
     base = _persisted(
         docs.select(
             "doc_id",
@@ -818,14 +815,14 @@ _SQL_BM25_TS = (
 ORACLES["bm25_retrieval_topk"] = f"""
     WITH dld AS (
       SELECT doc_id,
-             len(list_filter(string_split({_SQL_NORM}, ' '),
+             len(list_filter({SQL_TOKENS},
                              x -> x <> '')) AS dl,
              text
       FROM documents
     ),
     stats AS (SELECT count(*) AS n, sum(dl)::BIGINT AS sum_dl FROM dld),
     toks AS (
-      SELECT doc_id, dl, unnest(string_split({_SQL_NORM}, ' ')) AS tok
+      SELECT doc_id, dl, unnest({SQL_TOKENS}) AS tok
       FROM dld
     ),
     q(query_id, tok) AS ({_SQL_BM25_Q}),
@@ -872,11 +869,7 @@ def _nmf_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted — shared by the single-round and unrolled-rounds keys."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     return _persisted(
-        docs.select(
-            "doc_id",
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
+        word_tokens(docs, "doc_id")
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("double").alias("v"))
     )
@@ -1011,7 +1004,7 @@ def _nmf_sql() -> str:
         WITH v AS (
           SELECT doc_id, tok, count(*)::DOUBLE AS v
           FROM (SELECT doc_id,
-                       unnest(string_split({_SQL_NORM}, ' ')) AS tok
+                       unnest({SQL_TOKENS}) AS tok
                 FROM documents) t
           WHERE tok != ''
           GROUP BY doc_id, tok
@@ -1358,7 +1351,7 @@ def _nmf_rounds_sql() -> str:
         WITH v AS MATERIALIZED (
           SELECT doc_id, tok, count(*)::DOUBLE AS v
           FROM (SELECT doc_id,
-                       unnest(string_split({_SQL_NORM}, ' ')) AS tok
+                       unnest({SQL_TOKENS}) AS tok
                 FROM documents) t
           WHERE tok != ''
           GROUP BY doc_id, tok

@@ -32,9 +32,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_spread
-from ..functions.portable import dsum_exact, pround, sql_pround
+from ..functions.portable import (
+    SQL_TOKENS,
+    dsum_exact,
+    hash60,
+    pround,
+    sql_hash60,
+    sql_pround,
+    tokens,
+    word_tokens,
+)
 from . import sampling as _sampling
-from .dedup import _SQL_NORM, _hash60, _norm, _sql_hash60
+from .dedup import _trigram_arr
 
 WINNOW_W = 4  # winnowing window: guarantee ~every 4th gram fingerprinted
 CHECKSUM_P = 1_000_000_007
@@ -51,10 +60,7 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     one double rounding, identical in both engines; the sum is then
     order-independent)."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = word_tokens(docs, "doc_id")
     per = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("cnt"))
     clnc = (F.col("cnt") * F.log("cnt")).cast("decimal(28,6)")
     return (
@@ -117,21 +123,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartitionByRange(par, "doc_id")
         .sortWithinPartitions("doc_id")
     )
-    toks = F.split(_norm(F.col("text")), " ")
-    n = F.size(toks)
-    g2 = F.zip_with(
-        toks,
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.concat(x, F.lit(" "), y),
-    )
-    g3 = F.filter(
-        F.zip_with(
-            g2,
-            F.slice(toks, 3, F.greatest(n - 2, F.lit(0))),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        ),
-        lambda x: x.isNotNull(),
-    )
+    g3 = _trigram_arr(F.col("text"))
     # Round-9 optimization (guide §1.2 per-task work): higher-order
     # array expressions run interpreted with NO common-subexpression
     # elimination, and projection collapse inlines a referenced-twice
@@ -149,7 +141,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arithmetic is unchanged.
     hs_tbl = docs.select(
         "doc_id",
-        F.inline(F.array(F.struct(F.transform(g3, _hash60).alias("hs")))),
+        F.inline(F.array(F.struct(F.transform(g3, hash60).alias("hs")))),
     ).filter(F.size("hs") >= 1)
     # window starts: 1-based slice positions 1..n_grams-W+1 (a short doc
     # gets the single window 1, whose slice is truncated to what exists)
@@ -190,9 +182,7 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical; the regression relation is N rows (audit-sized),
     produced by one corpus-scale token count."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = docs.select(
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = word_tokens(docs)
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     # Distributed top-k, NOT a whole-vocabulary rank window: orderBy +
     # limit compiles to TakeOrderedAndProject (per-partition heaps, no
@@ -263,11 +253,7 @@ def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     relations."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     st = (
-        docs.select(
-            "source",
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
+        word_tokens(docs, "source")
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c_st"))
     )
@@ -305,7 +291,7 @@ QUERIES = {
 _SQL_DOC_TOKENS = f"""
     SELECT doc_id, tok
     FROM (SELECT doc_id,
-                 unnest(string_split({_SQL_NORM}, ' ')) AS tok
+                 unnest({SQL_TOKENS}) AS tok
           FROM documents) t
     WHERE tok != ''
 """
@@ -331,13 +317,13 @@ ORACLES = {
         WITH g0 AS (
           SELECT doc_id, toks, len(toks) - 2 AS n_grams,
                  unnest(range(1, len(toks) - 1)) AS i
-          FROM (SELECT doc_id, string_split({_SQL_NORM}, ' ') AS toks
+          FROM (SELECT doc_id, {SQL_TOKENS} AS toks
                 FROM documents) d
           WHERE len(toks) >= 3
         ),
         g AS (
           SELECT doc_id, n_grams, i - 1 AS pos,
-                 {_sql_hash60(
+                 {sql_hash60(
                      "toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]")} AS h
           FROM g0
         ),
@@ -361,7 +347,7 @@ ORACLES = {
         WITH counts AS (
           SELECT tok, count(*) AS n
           FROM (SELECT
-                  unnest(string_split({_SQL_NORM}, ' ')) AS tok
+                  unnest({SQL_TOKENS}) AS tok
                 FROM documents) t
           WHERE tok != ''
           GROUP BY tok
@@ -404,7 +390,7 @@ ORACLES = {
         WITH t AS (
           SELECT source, tok
           FROM (SELECT source,
-                       unnest(string_split({_SQL_NORM}, ' ')) AS tok
+                       unnest({SQL_TOKENS}) AS tok
                 FROM documents) u
           WHERE tok != ''
         ),
@@ -501,13 +487,13 @@ def _window_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute. Same rows, same hashes (A/B'd value-identical; sf1 tier
     6.59 -> 2.59 s)."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = tokens("text")
     tt = docs.select(
         "doc_id", F.inline(F.array(F.struct(toks.alias("toks"))))
     )
     wins = F.transform(
         F.sequence(F.lit(1), F.size("toks") - SPAN_W + 1),
-        lambda i: _hash60(
+        lambda i: hash60(
             F.array_join(F.slice(F.col("toks"), i, SPAN_W), " ")
         ),
     )
@@ -581,10 +567,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a broadcast scalar max — no global row-ordering window over
     the corpus. The cumulative window runs on 20 rows."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = word_tokens(docs, "doc_id")
     max_doc = docs.agg(
         (F.max("doc_id") + 1).cast("double").alias("max_doc")
     )
@@ -632,14 +615,14 @@ QUERIES["vocab_growth_curve"] = vocab_growth_curve
 # Oracle twin of _window_hashes: emits (doc_id, wh).
 _SQL_WINDOW_HASHES = f"""
     t AS (
-      SELECT doc_id, string_split({_SQL_NORM}, ' ') AS toks
+      SELECT doc_id, {SQL_TOKENS} AS toks
       FROM documents
     ),
     w AS (
       SELECT doc_id,
              unnest(list_transform(
                range(1, len(toks) - {SPAN_W} + 2),
-               i -> {_sql_hash60(
+               i -> {sql_hash60(
                  f"array_to_string(toks[i:i + {SPAN_W} - 1], ' ')"
                )}
              )) AS wh
@@ -667,7 +650,7 @@ ORACLES["vocab_growth_curve"] = f"""
       SELECT (max(doc_id) + 1)::DOUBLE AS max_doc FROM documents
     ),
     toks AS (
-      SELECT doc_id, unnest(string_split({_SQL_NORM}, ' ')) AS tok
+      SELECT doc_id, unnest({SQL_TOKENS}) AS tok
       FROM documents
     ),
     tk AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
@@ -753,10 +736,7 @@ def inverted_index_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df desc, occurrences desc, token) so the K-cut is deterministic on
     both engines."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = word_tokens(docs, "doc_id")
     return (
         toks.groupBy("tok")
         .agg(
@@ -776,7 +756,7 @@ QUERIES["inverted_index_sample"] = inverted_index_sample
 
 ORACLES["inverted_index_sample"] = f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_SQL_NORM}, ' ')) AS tok
+      SELECT doc_id, unnest({SQL_TOKENS}) AS tok
       FROM documents
     )
     SELECT tok, count(DISTINCT doc_id) AS n_docs,

@@ -27,8 +27,20 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_spread
-from ..functions.portable import davg, pround, sql_davg, sql_pround
-from .dedup import _SQL_NORM, _hash60, _norm, _shingle_arr, _sql_hash60
+from ..functions.portable import (
+    SQL_NORM,
+    SQL_TOKENS,
+    davg,
+    hash60,
+    norm,
+    pround,
+    sql_davg,
+    sql_hash60,
+    sql_pround,
+    tokens,
+    word_tokens,
+)
+from .dedup import _shingle_arr, _trigram_arr
 from .textops import _sql_marker_score
 
 # Every doc_id ≡ 0 (mod EVAL_MOD) plays the held-out benchmark; ~3% of
@@ -58,7 +70,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     grams = docs.select(
         "doc_id", F.explode(_shingle_arr(F.col("text"))).alias("sh")
-    ).select("doc_id", _hash60(F.col("sh")).alias("h"))
+    ).select("doc_id", hash60(F.col("sh")).alias("h"))
     train = grams.filter(F.col("doc_id") % EVAL_MOD != 0)
     eval_g = grams.filter(F.col("doc_id") % EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_id"), F.col("h").alias("eh")
@@ -91,21 +103,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     no join, no per-doc shuffle.
     """
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = F.split(_norm(F.col("text")), " ")
-    n = F.size(toks)
-    g2 = F.zip_with(
-        toks,
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.concat(x, F.lit(" "), y),
-    )
-    g3 = F.filter(
-        F.zip_with(
-            g2,
-            F.slice(toks, 3, F.greatest(n - 2, F.lit(0))),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        ),
-        lambda x: x.isNotNull(),
-    )
+    g3 = _trigram_arr(F.col("text"))
     return (
         docs.select(
             "doc_id",
@@ -131,8 +129,7 @@ def token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     return (
-        docs.select(F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"))
-        .filter(F.col("tok") != "")
+        word_tokens(docs)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "tok")
@@ -167,7 +164,7 @@ def doc_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions — zero shuffles, linear at any corpus size.
     """
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = tokens("text")
     ratio = F.size(F.array_distinct(toks)) / F.size(toks)
     reason = (
         F.when(F.col("n_chars") < MIN_CHARS, "too_short")
@@ -249,7 +246,7 @@ def lang_rebalance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(F.broadcast(lang_frac), "lang")
         .withColumn(
             "keep",
-            F.pmod(_hash60(_norm(F.col("text"))), F.lit(RESAMPLE_MOD))
+            F.pmod(hash60(norm("text")), F.lit(RESAMPLE_MOD))
             < F.col("keep_threshold"),
         )
     )
@@ -286,7 +283,7 @@ def sequence_packing_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(_norm(F.col("text")), " ")).alias("n_toks"),
+        F.size(tokens("text")).alias("n_toks"),
     )
     w = (
         Window.partitionBy("source")
@@ -324,10 +321,10 @@ def stopword_density_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The quality-filter threshold a C4-style cascade uses comes from
     exactly this histogram; map-side ratio + one aggregation shuffle.
     """
-    from .textops import _marker_score, _toks
+    from .textops import _marker_score
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = _toks(F.col("text"))
+    toks = tokens("text")
     d = docs.select(
         "doc_id",
         _marker_score(toks, "en").alias("n_stop"),
@@ -441,7 +438,7 @@ _SQL_G3 = f"""
              range(1, greatest(len(toks) - 1, 1)),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
            ), x -> x IS NOT NULL) AS g3
-    FROM (SELECT doc_id, string_split({_SQL_NORM}, ' ') AS toks
+    FROM (SELECT doc_id, {SQL_TOKENS} AS toks
           FROM documents) d
     WHERE len(toks) >= 3
 """
@@ -463,7 +460,7 @@ _SQL_REASON = f"""
 
 ORACLES = {
     "contamination_check": f"""
-        WITH grams AS ({_SQL_GRAM_HASH.format(g3=_SQL_G3, h=_sql_hash60('sh'))}),
+        WITH grams AS ({_SQL_GRAM_HASH.format(g3=_SQL_G3, h=sql_hash60('sh'))}),
         train AS (SELECT * FROM grams WHERE doc_id % {EVAL_MOD} != 0),
         eval_g AS (SELECT doc_id AS eval_id, h AS eh FROM grams
                    WHERE doc_id % {EVAL_MOD} = 0),
@@ -492,7 +489,7 @@ ORACLES = {
     """,
     "token_frequencies": f"""
         SELECT tok, count(*) AS n
-        FROM (SELECT unnest(string_split({_SQL_NORM}, ' ')) AS tok
+        FROM (SELECT unnest({SQL_TOKENS}) AS tok
               FROM documents) t
         WHERE tok != ''
         GROUP BY tok
@@ -515,7 +512,7 @@ ORACLES = {
                CASE WHEN {_SQL_REASON} = 'keep' THEN 'keep' ELSE 'drop' END
                  AS verdict
         FROM (SELECT doc_id, source, lang, n_chars,
-                     string_split({_SQL_NORM}, ' ') AS toks
+                     {SQL_TOKENS} AS toks
               FROM documents) d
     """,
     "stopword_density_buckets": f"""
@@ -523,7 +520,7 @@ ORACLES = {
           SELECT doc_id,
                  {_sql_marker_score('en')} AS n_stop,
                  len(toks) AS n_toks
-          FROM (SELECT doc_id, string_split({_SQL_NORM}, ' ') AS toks
+          FROM (SELECT doc_id, {SQL_TOKENS} AS toks
                 FROM documents) t
           WHERE len(toks) > 0
         )
@@ -569,11 +566,11 @@ ORACLES = {
         SELECT d.lang,
                count(*) AS n_docs,
                count(*) FILTER (
-                 WHERE ({_sql_hash60(_SQL_NORM)}) % {RESAMPLE_MOD}
+                 WHERE ({sql_hash60(SQL_NORM)}) % {RESAMPLE_MOD}
                        < lf.keep_threshold) AS n_kept,
                lf.lang_chars,
                CAST(sum(n_chars) FILTER (
-                 WHERE ({_sql_hash60(_SQL_NORM)}) % {RESAMPLE_MOD}
+                 WHERE ({sql_hash60(SQL_NORM)}) % {RESAMPLE_MOD}
                        < lf.keep_threshold) AS BIGINT) AS kept_chars,
                lf.target_frac
         FROM documents d JOIN lf ON d.lang = lf.lang
@@ -583,7 +580,7 @@ ORACLES = {
     "sequence_packing_bins": f"""
         WITH toks AS (
           SELECT doc_id, source,
-                 len(string_split({_SQL_NORM}, ' ')) AS n_toks
+                 len({SQL_TOKENS}) AS n_toks
           FROM documents
         ),
         binned AS (
@@ -805,7 +802,7 @@ ORACLES["filter_retention_funnel"] = f"""
     WITH cascade AS (
       SELECT {_SQL_REASON} AS reason
       FROM (SELECT doc_id, source, lang, n_chars,
-                   string_split({_SQL_NORM}, ' ') AS toks
+                   {SQL_TOKENS} AS toks
             FROM documents) d
     ),
     counts AS (
@@ -876,11 +873,11 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "source",
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
+            F.explode(tokens("text")).alias("tok"),
         ).select(
             "doc_id",
             "source",
-            (_hash60(F.col("tok")) % DSIR_BUCKETS).alias("b"),
+            (hash60(F.col("tok")) % DSIR_BUCKETS).alias("b"),
         )
     )
     bc = toks.groupBy("b").agg(
@@ -928,10 +925,10 @@ QUERIES["dsir_importance_weights"] = dsir_importance_weights
 
 ORACLES["dsir_importance_weights"] = f"""
     WITH toks AS (
-      SELECT doc_id, source, {_sql_hash60("tok")} % {DSIR_BUCKETS} AS b
+      SELECT doc_id, source, {sql_hash60("tok")} % {DSIR_BUCKETS} AS b
       FROM (
         SELECT doc_id, source,
-               unnest(string_split({_SQL_NORM}, ' ')) AS tok
+               unnest({SQL_TOKENS}) AS tok
         FROM documents
       ) t
     ),
@@ -1092,13 +1089,12 @@ def token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     languages-sized relation, PERSISTED so the one-row totals branch
     never re-scans the corpus); the totals are a one-row broadcast."""
     from ..caching import persisted as _persisted
-    from .textops import _toks
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     per = _persisted(
         docs.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(_toks(F.col("text")))).alias("n_tokens"),
+            F.sum(F.size(tokens("text"))).alias("n_tokens"),
         )
     )
     pw = per.select(
@@ -1137,7 +1133,7 @@ QUERIES["token_budget_mix"] = token_budget_mix
 ORACLES["token_budget_mix"] = f"""
     WITH per AS (
       SELECT lang, count(*) AS n_docs,
-             sum(len(string_split({_SQL_NORM}, ' ')))::BIGINT AS n_tokens
+             sum(len({SQL_TOKENS}))::BIGINT AS n_tokens
       FROM documents GROUP BY lang
     ),
     pw AS (
@@ -1186,7 +1182,7 @@ def context_len_padding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents").select(
-        F.size(F.split(_norm(F.col("text")), " ")).alias("n_toks")
+        F.size(tokens("text")).alias("n_toks")
     )
     lens = F.explode(
         F.array(*[F.lit(x) for x in CTX_LENS])
@@ -1223,7 +1219,7 @@ QUERIES["context_len_padding_audit"] = context_len_padding_audit
 
 ORACLES["context_len_padding_audit"] = f"""
     WITH d AS (
-      SELECT len(string_split({_SQL_NORM}, ' ')) AS n_toks FROM documents
+      SELECT len({SQL_TOKENS}) AS n_toks FROM documents
     ),
     per AS (
       SELECT max_len, n_toks,
@@ -1278,16 +1274,13 @@ def feature_hash_collision_audit(
     oracle hash gate."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     vocab = (
-        docs.select(
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
+        word_tokens(docs)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     per_bucket = vocab.groupBy(
         F.pmod(
-            _hash60(F.concat(F.lit("fh:"), F.col("tok"))),
+            hash60(F.concat(F.lit("fh:"), F.col("tok"))),
             F.lit(FH_BUCKETS),
         ).alias("bucket")
     ).agg(
@@ -1323,13 +1316,13 @@ QUERIES["feature_hash_collision_audit"] = feature_hash_collision_audit
 ORACLES["feature_hash_collision_audit"] = f"""
     WITH vocab AS (
       SELECT tok, count(*) AS n
-      FROM (SELECT unnest(string_split({_SQL_NORM}, ' ')) AS tok
+      FROM (SELECT unnest({SQL_TOKENS}) AS tok
             FROM documents) t
       WHERE tok != ''
       GROUP BY tok
     ),
     per_bucket AS (
-      SELECT {_sql_hash60("'fh:' || tok")} % {FH_BUCKETS} AS bucket,
+      SELECT {sql_hash60("'fh:' || tok")} % {FH_BUCKETS} AS bucket,
              count(*) AS occupancy, sum(n) AS mass
       FROM vocab GROUP BY bucket
     ),

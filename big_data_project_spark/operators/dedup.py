@@ -25,7 +25,16 @@ from pyspark.sql import functions as F
 
 from ..caching import persisted as _persisted
 from ..catalog import load_table, load_table_spread
-from ..functions.portable import pround, sql_pround
+from ..functions.portable import (
+    SQL_NORM,
+    SQL_TOKENS,
+    hash60,
+    norm,
+    pround,
+    sql_hash60,
+    sql_pround,
+    tokens,
+)
 
 TAU = 0.8  # exact-Jaccard duplicate threshold
 SWEEP_TAUS = (0.5, 0.6, 0.7, 0.8, 0.9)  # dedup_threshold_sweep grid
@@ -42,28 +51,9 @@ SIM_BANDS = 4  # 4 bands x 8 bits -> exact for hamming <= 3
 HAMMING_MAX = 3
 
 
-# Explicit whitespace class: Java's \s includes \x0B, RE2's does not —
-# spelling the class out keeps Spark and the oracle bit-identical on any
-# input, not just the ASCII-printable test corpus.
-_WS = r"[ \t\n\r\f\x0B]+"
-
-
-def _norm(c: Column) -> Column:
-    return F.regexp_replace(F.lower(F.trim(c)), _WS, " ")
-
-
-def _hash60(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-_SQL_NORM = (
-    "regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')"
-)
-
-
-def _shingle_arr(c: Column) -> Column:
-    """Array of DISTINCT 3-gram word shingles for one document — pure
-    map-side array ops, zero shuffles.
+def _trigram_arr(c: Column) -> Column:
+    """Array of the 3-gram word shingles of one document, in order and
+    with repeats — pure map-side array ops, zero shuffles.
 
     Built with ``zip_with`` over the token array and its slices rather
     than (a) a higher-order ``transform`` whose lambda CAPTURES the
@@ -74,7 +64,7 @@ def _shingle_arr(c: Column) -> Column:
     only touch their own arguments, so the split is evaluated a constant
     number of times per row. The shorter slice is null-padded by
     zip_with; the null concats mark the tail and are filtered off."""
-    toks = F.split(_norm(c), " ")
+    toks = tokens(c)
     n = F.size(toks)
     g2 = F.zip_with(
         toks,
@@ -86,7 +76,12 @@ def _shingle_arr(c: Column) -> Column:
         F.slice(toks, 3, F.greatest(n - 2, F.lit(0))),
         lambda x, y: F.concat(x, F.lit(" "), y),
     )
-    return F.array_distinct(F.filter(g3, lambda x: x.isNotNull()))
+    return F.filter(g3, lambda x: x.isNotNull())
+
+
+def _shingle_arr(c: Column) -> Column:
+    """Array of DISTINCT 3-gram word shingles for one document."""
+    return F.array_distinct(_trigram_arr(c))
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,7 +100,7 @@ _SQL_SHINGLES = f"""
              range(1, greatest(len(toks) - 1, 1)),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
            ))) AS sh
-    FROM (SELECT doc_id, string_split({_SQL_NORM}, ' ') AS toks
+    FROM (SELECT doc_id, {SQL_TOKENS} AS toks
           FROM documents) d
     WHERE len(toks) >= 3
 """
@@ -164,7 +159,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: md5 of whitespace-normalized text, keep min doc_id."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("doc_id", F.md5(_norm(F.col("text"))).alias("doc_hash"))
+        docs.select("doc_id", F.md5(norm("text")).alias("doc_hash"))
         .groupBy("doc_hash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -206,12 +201,10 @@ def _doc_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     # md5-shingle chain serially on the unsplit scan task (measured 4.5s
     # of the round-1 5.9s cold time); the token-count predicate pushes
     # down too but costs only a split().
-    docs = docs.filter(
-        F.size(F.split(_norm(F.col("text")), " ")) >= 3
-    )
+    docs = docs.filter(F.size(tokens("text")) >= 3)
     hs = F.array_distinct(
         F.transform(
-            _shingle_arr(F.col("text")), lambda s: _hash60(s) % MERSENNE_P
+            _shingle_arr(F.col("text")), lambda s: hash60(s) % MERSENNE_P
         )
     )
     # EXACTLY ONE copy of the hash chain in this projection. Higher-
@@ -544,10 +537,8 @@ def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     # Cheap token-count predicate instead of size(hs) — see
     # _doc_hash_arrays for why (pushdown below the exchange).
-    docs = docs.filter(
-        F.size(F.split(_norm(F.col("text")), " ")) >= 3
-    )
-    hs = F.transform(_shingle_arr(F.col("text")), _hash60)
+    docs = docs.filter(F.size(tokens("text")) >= 3)
+    hs = F.transform(_shingle_arr(F.col("text")), hash60)
     # Persist = projection-collapse barrier (see _doc_hash_arrays):
     # without it the 32 per-bit folds each inline and re-evaluate the
     # full md5-shingle chain.
@@ -620,10 +611,6 @@ QUERIES = {
 }
 
 
-def _sql_hash60(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15)))::BIGINT"
-
-
 _SQL_MINHASH_AGGS = ",\n           ".join(
     f"min(({_MH_A[j]} * h31 + {_MH_B[j]}) % {MERSENNE_P}) AS m{j}"
     for j in range(MINHASH_N)
@@ -636,7 +623,7 @@ _SQL_BANDS = "\n      UNION ALL\n".join(
 )
 
 _SQL_MINHASH_VERIFIED = f"""
-    WITH hashed AS ({_SQL_SHINGLE_HASHES.format(h=_sql_hash60("sh"))}),
+    WITH hashed AS ({_SQL_SHINGLE_HASHES.format(h=sql_hash60("sh"))}),
     mh AS (
       SELECT doc_id,
            {_SQL_MINHASH_AGGS}
@@ -685,7 +672,7 @@ _SQL_SIM_TERMS = "\n             + ".join(
 
 _SQL_SIMHASH = f"""
     WITH s AS ({_SQL_SHINGLES}),
-    hashed AS (SELECT doc_id, {_sql_hash60('sh')} AS h FROM s),
+    hashed AS (SELECT doc_id, {sql_hash60('sh')} AS h FROM s),
     bs AS (
       SELECT doc_id,
            {_SQL_SIM_BIT_SUMS}
@@ -708,7 +695,7 @@ _SQL_SIG_MATCHES = " + ".join(
 )
 
 _SQL_MINHASH_ACCURACY = f"""
-    WITH hashed AS ({_SQL_SHINGLE_HASHES.format(h=_sql_hash60("sh"))}),
+    WITH hashed AS ({_SQL_SHINGLE_HASHES.format(h=sql_hash60("sh"))}),
     mh AS (
       SELECT doc_id,
            {_SQL_MINHASH_AGGS}
@@ -759,7 +746,7 @@ _SQL_MINHASH_ACCURACY = f"""
 
 ORACLES = {
     "dedup_exact": f"""
-        SELECT md5({_SQL_NORM}) AS doc_hash,
+        SELECT md5({SQL_NORM}) AS doc_hash,
                count(*) AS n_docs,
                min(doc_id) AS keep_doc_id
         FROM documents
@@ -801,7 +788,7 @@ ORACLES = {
     """,
     "minhash_band_analysis": f"""
         WITH hashed AS (
-          {_SQL_SHINGLE_HASHES.format(h=_sql_hash60("sh"))}
+          {_SQL_SHINGLE_HASHES.format(h=sql_hash60("sh"))}
         ),
         mh AS (
           SELECT doc_id,
@@ -920,7 +907,7 @@ def doc_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["doc_shingle_containment"] = doc_shingle_containment
 
 _SQL_CONTAINMENT = f"""
-    WITH hashed AS ({_SQL_SHINGLE_HASHES.format(h=_sql_hash60("sh"))}),
+    WITH hashed AS ({_SQL_SHINGLE_HASHES.format(h=sql_hash60("sh"))}),
     mh AS (
       SELECT doc_id,
            {_SQL_MINHASH_AGGS}
@@ -994,7 +981,7 @@ def dedup_editdist_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-cost Wagner-Fischer; lengths/distances are exact INTs and the
     one division prounds at 6dp."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _norm(F.col("text")).alias("nt")
+        "doc_id", norm("text").alias("nt")
     )
     # Round-9 optimization, three fixes measured together (steady
     # 1.66 s pre-persist / 10.1 s once the shared candidate persist
@@ -1080,7 +1067,7 @@ QUERIES["dedup_editdist_verify"] = dedup_editdist_verify
 
 _SQL_EDITDIST = f"""
     WITH pairs AS ({_SQL_MINHASH_VERIFIED}),
-    nt AS (SELECT doc_id, {_SQL_NORM} AS nt FROM documents),
+    nt AS (SELECT doc_id, {SQL_NORM} AS nt FROM documents),
     scored AS (
       SELECT p.a_id, p.b_id,
              length(a.nt) AS len_a, length(b.nt) AS len_b,
@@ -1311,7 +1298,7 @@ QUERIES["dedup_prefix_filter"] = dedup_prefix_filter
 
 _SQL_PREFIX_FILTER = f"""
     WITH hashed AS MATERIALIZED (
-      {_SQL_SHINGLE_HASHES.format(h=_sql_hash60("sh"))}
+      {_SQL_SHINGLE_HASHES.format(h=sql_hash60("sh"))}
     ),
     sz AS MATERIALIZED (
       SELECT doc_id, count(*) AS n FROM hashed GROUP BY doc_id

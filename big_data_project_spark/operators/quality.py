@@ -29,9 +29,17 @@ from pyspark.sql import functions as F
 
 from ..caching import persisted
 from ..catalog import load_table_spread
-from ..functions.portable import pround, sql_pround
-from .dedup import _SQL_NORM, _hash60, _norm, _sql_hash60
-from .textops import MARKERS, _toks
+from ..functions.portable import (
+    SQL_NORM,
+    SQL_TOKENS,
+    hash60,
+    norm,
+    pround,
+    sql_hash60,
+    sql_pround,
+    tokens,
+)
+from .textops import MARKERS
 
 # Gopher-style rule thresholds (adapted to the synthetic corpus so each
 # rule discriminates; the published bounds — 50..100k words, 3..10 mean
@@ -52,11 +60,11 @@ def _rule_flags(docs: DataFrame) -> DataFrame:
     """Per-doc boolean rule outcomes. Mean word length uses exact
     integer counts (chars excluding separators / token count) so both
     engines compare identical doubles."""
-    toks = _toks(F.col("text"))
+    toks = tokens("text")
     d = docs.select(
         "doc_id",
         "source",
-        F.length(_norm(F.col("text"))).alias("n_chars_norm"),
+        F.length(norm("text")).alias("n_chars_norm"),
         F.size(toks).alias("n_toks"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
         F.size(
@@ -116,7 +124,7 @@ def gopher_rule_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _split_col() -> Column:
     return F.when(
-        F.pmod(_hash60(_norm(F.col("text"))), SPLIT_MOD) < TEST_BUCKETS,
+        F.pmod(hash60(norm("text")), SPLIT_MOD) < TEST_BUCKETS,
         F.lit("test"),
     ).otherwise(F.lit("train"))
 
@@ -137,7 +145,7 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     hs = persisted(
         docs.select(
-            _hash60(_norm(F.col("text"))).alias("h"),
+            hash60(norm("text")).alias("h"),
             _split_col().alias("split"),
         )
         .groupBy("h", "split")
@@ -145,7 +153,7 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_split = hs.groupBy("split").agg(
         F.sum("cnt").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_hashes"),
+        F.count("h").alias("n_hashes"),
     )
     leaks = (
         hs.groupBy("h")
@@ -201,18 +209,20 @@ _SQL_FLAGS = f"""
               < {MIN_STOPWORD_HITS}) AS fail_stopwords,
            (len(list_distinct(toks)) / len(toks)
               < {MIN_DISTINCT_RATIO}) AS fail_repetition
-    FROM (SELECT doc_id, source, {_SQL_NORM} AS nt,
-                 string_split({_SQL_NORM}, ' ') AS toks
+    FROM (SELECT doc_id, source, {SQL_NORM} AS nt,
+                 {SQL_TOKENS} AS toks
           FROM documents) d
     WHERE len(toks) > 0
 """
 
+# a NULL text has a NULL hash and goes to train, as in _split_col
+_SQL_SPLIT_CASE = f"""CASE WHEN ({sql_hash60(SQL_NORM)}) % {SPLIT_MOD}
+                  < {TEST_BUCKETS}
+                THEN 'test' ELSE 'train' END"""
 _SQL_SPLIT = f"""
     SELECT doc_id, source,
-           {_sql_hash60(_SQL_NORM)} AS h,
-           CASE WHEN ({_sql_hash60(_SQL_NORM)}) % {SPLIT_MOD}
-                  < {TEST_BUCKETS}
-                THEN 'test' ELSE 'train' END AS split
+           {sql_hash60(SQL_NORM)} AS h,
+           {_SQL_SPLIT_CASE} AS split
     FROM documents
 """
 
@@ -295,10 +305,10 @@ def epoch_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     tagged = docs.filter(_split_col() == "train").select(
         F.pmod(
-            _hash60(F.col("doc_id").cast("string")), N_SHARDS
+            hash60(F.col("doc_id").cast("string")), N_SHARDS
         ).alias("shard"),
         "source",
-        F.size(_toks(F.col("text"))).alias("n_toks"),
+        F.size(tokens("text")).alias("n_toks"),
     )
     per = tagged.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -322,12 +332,12 @@ QUERIES["epoch_shard_plan"] = epoch_shard_plan
 ORACLES["epoch_shard_plan"] = f"""
     WITH train AS (
       SELECT doc_id, source, text FROM documents
-      WHERE ({_sql_hash60(_SQL_NORM)}) % {SPLIT_MOD} >= {TEST_BUCKETS}
+      WHERE {_SQL_SPLIT_CASE} = 'train'
     ),
     tagged AS (
-      SELECT ({_sql_hash60("doc_id::VARCHAR")}) % {N_SHARDS} AS shard,
+      SELECT ({sql_hash60("doc_id::VARCHAR")}) % {N_SHARDS} AS shard,
              source,
-             len(string_split({_SQL_NORM}, ' ')) AS n_toks
+             len({SQL_TOKENS}) AS n_toks
       FROM train
     ),
     per AS (

@@ -19,14 +19,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import persisted as _persisted
-from ..functions.portable import pround, sql_pround, sql_uniform01
+from ..functions.portable import SQL_NORM, pround, sql_pround, sql_uniform01
 from .dedup import (
     TAU,
     _SQL_JACCARD_PAIRS,
     _jaccard_pairs,
     _shingles,
 )
-from .dedup import _SQL_NORM as _SQL_NORM_IMPORT
 
 SAMPLE_PER_STRATUM = 5
 CC_MAX_ITERS = 8  # min-label spreads 1 hop/iter; dup-cluster diameters are tiny
@@ -178,7 +177,7 @@ ORACLES = {
     "dedup_keep_list": f"""
         WITH RECURSIVE exact AS (
           SELECT min(doc_id) AS doc_id, 1 AS exact_rep
-          FROM (SELECT doc_id, md5({_SQL_NORM_IMPORT}) AS h FROM documents) x
+          FROM (SELECT doc_id, md5({SQL_NORM}) AS h FROM documents) x
           GROUP BY h
         ),
         pairs AS (

@@ -32,14 +32,22 @@ through DECIMAL so accumulation order never flips a rounded digit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table_spread
-from ..functions.portable import davg, pround, sql_davg, sql_pround
-from .dedup import _SQL_NORM, _hash60, _norm, _sql_hash60
-from .quality import SPLIT_MOD, TEST_BUCKETS
+from ..functions.portable import (
+    SQL_NORM,
+    SQL_TOKENS,
+    davg,
+    norm,
+    pround,
+    sql_davg,
+    sql_pround,
+    tokens,
+)
+from .quality import _SQL_SPLIT_CASE, _split_col
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -76,12 +84,12 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep flag is the filter a 100 TB curation run pushes straight into
     the scan of the next stage."""
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    toks = F.filter(F.split(_norm(F.col("text")), " "), lambda t: t != "")
+    toks = F.filter(tokens("text"), lambda t: t != "")
     d = docs.select(
         "doc_id",
         "source",
         toks.alias("toks"),
-        _norm(F.col("text")).alias("nt"),
+        norm("text").alias("nt"),
     ).select(
         "doc_id",
         "source",
@@ -137,9 +145,9 @@ _SQL_QC_FEATURES = f"""
            length(regexp_replace(nt, '[^0-9]', '', 'g')) AS n_digits
     FROM (
       SELECT doc_id, source,
-             list_filter(string_split({_SQL_NORM}, ' '),
+             list_filter({SQL_TOKENS},
                          t -> t <> '') AS toks,
-             {_SQL_NORM} AS nt
+             {SQL_NORM} AS nt
       FROM documents
     ) d
 """
@@ -253,14 +261,10 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _shingle_arr
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
-    split = F.when(
-        F.pmod(_hash60(_norm(F.col("text"))), SPLIT_MOD) < TEST_BUCKETS,
-        F.lit("test"),
-    ).otherwise(F.lit("train"))
     sh = _persisted(
         docs.select(
             "doc_id",
-            split.alias("split"),
+            _split_col().alias("split"),
             F.explode(_shingle_arr(F.col("text"))).alias("sh"),
         )
     )
@@ -293,14 +297,12 @@ QUERIES["split_leakage_audit"] = split_leakage_audit
 
 _SQL_SPLIT_SHINGLES = f"""
     SELECT doc_id,
-           CASE WHEN ({_sql_hash60(_SQL_NORM)}) % {SPLIT_MOD}
-                  < {TEST_BUCKETS}
-                THEN 'test' ELSE 'train' END AS split,
+           {_SQL_SPLIT_CASE} AS split,
            unnest(list_distinct(list_transform(
              range(1, greatest(len(toks) - 1, 1)),
              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
            ))) AS sh
-    FROM (SELECT doc_id, text, string_split({_SQL_NORM}, ' ') AS toks
+    FROM (SELECT doc_id, text, {SQL_TOKENS} AS toks
           FROM documents) d
     WHERE len(toks) >= 3
 """
@@ -434,7 +436,7 @@ _SQL_DOREMI_BG = f"""
              range(1, len(toks)),
              i -> toks[i] || ' ' || toks[i+1]
            )) AS bg
-    FROM (SELECT source, string_split({_SQL_NORM}, ' ') AS toks
+    FROM (SELECT source, {SQL_TOKENS} AS toks
           FROM documents) d
     WHERE len(toks) >= 2
 """

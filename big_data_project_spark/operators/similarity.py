@@ -27,19 +27,18 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.portable import pround, sql_davg, sql_pround
+from ..functions.portable import (
+    hash60,
+    pround,
+    sql_davg,
+    sql_hash60,
+    sql_pround,
+)
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
 PLANES = 8  # LSH: 8 random hyperplanes -> 256 buckets
 _SCALE = float(1 << 59)  # hash60 -> [-1, 1)
-
-
-def _hash60(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-_SQL_HASH60 = "(('0x' || substr(md5({e}), 1, 15)))::BIGINT"
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,7 +132,7 @@ def _buckets(v: DataFrame) -> DataFrame:
         F.explode(F.array(*[F.lit(p) for p in range(PLANES)])).alias("p"),
     )
     w = (
-        _hash60(
+        hash60(
             F.concat_ws(
                 ":", F.col("p").cast("string"), F.col("d").cast("string")
             )
@@ -690,9 +689,8 @@ _SQL_BUCKETS = f"""
                CASE WHEN round(sum(x * w), 9) > 0 THEN 1 ELSE 0 END AS bit
         FROM (
           SELECT dims.vec_id, dims.d, dims.x, pl.range AS p,
-                 {_SQL_HASH60.format(
-                     e="pl.range::VARCHAR || ':' || dims.d::VARCHAR"
-                 )} / {_SCALE} - 1.0 AS w
+                 {sql_hash60("pl.range::VARCHAR || ':' || dims.d::VARCHAR")}
+                   / {_SCALE} - 1.0 AS w
           FROM (
             SELECT vec_id, unnest(range(len(e))) AS d, unnest(e) AS x
             FROM v

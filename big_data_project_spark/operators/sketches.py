@@ -21,8 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
-from ..functions.portable import pround, sql_pround
+from ..catalog import load_table, load_table_spread
+from ..functions.portable import (
+    SQL_TOKENS,
+    hash60,
+    pround,
+    sql_hash60,
+    sql_pround,
+    word_tokens,
+)
 
 HLL_RSD = 0.05  # target relative standard deviation for HLL
 
@@ -80,14 +87,12 @@ def cm_bucket_rows(tok):
     """The CM_DEPTH (row, bucket) coordinates of one token — the
     SHARED md5 bucket hashing of the count-min family (batch audit +
     streaming maintenance twin read the same cells)."""
-    from .dedup import _hash60
-
     return F.array(
         *[
             F.struct(
                 F.lit(d).alias("d"),
                 F.pmod(
-                    _hash60(F.concat(F.lit(f"{d}|"), tok)),
+                    hash60(F.concat(F.lit(f"{d}|"), tok)),
                     F.lit(CM_WIDTH),
                 ).alias("bucket"),
             )
@@ -112,9 +117,8 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast sketch. The token groupBy for the exact side is the same
     single corpus-scale shuffle token_frequencies pays.
     """
-    from .corpus import _tokens
-
-    toks = _tokens(spark, sf_dir).select("tok")
+    docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
+    toks = word_tokens(docs)
     _rows = cm_bucket_rows
     cm = (
         toks.select(F.explode(_rows(F.col("tok"))).alias("rb"))
@@ -258,10 +262,8 @@ QUERIES = {
 
 
 def _sql_cm_hash(d_expr: str, tok_expr: str) -> str:
-    return (
-        f"((('0x' || substr(md5({d_expr} || '|' || {tok_expr}), 1, 15)))"
-        f"::BIGINT) % {CM_WIDTH}"
-    )
+    h = sql_hash60(f"{d_expr} || '|' || {tok_expr}")
+    return f"({h}) % {CM_WIDTH}"
 
 
 _SQL_CM_DD = ", ".join(f"({d})" for d in range(CM_DEPTH))
@@ -273,11 +275,7 @@ ORACLES: dict[str, str] = {
     "countmin_heavy_hitters": f"""
         WITH toks AS (
           SELECT tok
-          FROM (SELECT unnest(string_split(
-                  regexp_replace(lower(trim(text)),
-                                 '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'),
-                  ' ')) AS tok
-                FROM documents) t
+          FROM (SELECT unnest({SQL_TOKENS}) AS tok FROM documents) t
           WHERE tok != ''
         ),
         dd(d) AS (VALUES {_SQL_CM_DD}),
@@ -381,11 +379,7 @@ LC_M = 1024  # bitmap size
 def lc_bucket(user_col):
     """The linear-counting bucket of one user id — SHARED by the batch
     audit and the streaming occupied-cell twin."""
-    from .dedup import _hash60
-
-    return F.pmod(
-        _hash60(F.concat(F.lit("lc:"), user_col)), F.lit(LC_M)
-    )
+    return F.pmod(hash60(F.concat(F.lit("lc:"), user_col)), F.lit(LC_M))
 
 
 def linear_counting_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,9 +445,7 @@ QUERIES["linear_counting_audit"] = linear_counting_audit
 
 
 def _lc_sql() -> str:
-    from .dedup import _sql_hash60
-
-    h = "(" + _sql_hash60("'lc:' || user_id") + ")"
+    h = "(" + sql_hash60("'lc:' || user_id") + ")"
     v = f"({LC_M} - occupied) / {float(LC_M)}"
     est = f"-{float(LC_M)} * ln({v})"
     return f"""

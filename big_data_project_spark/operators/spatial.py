@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..functions.portable import pround, sql_pround
+from ..functions.portable import hash60, pround, sql_hash60, sql_pround
 
 # City bounding box (Bucharest-ish, the reference's transit domain).
 LAT0, LAT_SPAN = 44.35, 0.2
@@ -49,20 +49,14 @@ M_PER_DEG_LON = 78850.0
 
 def _hash_frac(prefix: str, c: Column) -> Column:
     """Deterministic uniform fraction in [0, 1) from md5(prefix||id) —
-    same md5-top-60-bits trick as operators/dedup.py:_hash60."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), c.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    functions/portable.py::hash60 modulo 10^5."""
+    h = hash60(F.concat(F.lit(prefix), c.cast("string")))
     return (h % 100000) / F.lit(100000.0)
 
 
 def _sql_hash_frac(prefix: str, expr: str) -> str:
-    return (
-        f"((('0x' || substr(md5('{prefix}' || CAST({expr} AS VARCHAR)), 1, 15)"
-        f"))::BIGINT % 100000) / 100000.0"
-    )
+    h = sql_hash60(f"'{prefix}' || CAST({expr} AS VARCHAR)")
+    return f"({h} % 100000) / 100000.0"
 
 
 def _cell(lat: Column, lon: Column) -> tuple[Column, Column]:

@@ -23,7 +23,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .dedup import _SQL_NORM, _SQL_SHINGLES, _hash60, _norm, _shingles
+from ..functions.portable import (
+    SQL_NORM,
+    SQL_TOKENS,
+    hash60,
+    norm,
+    pround,
+    sql_hash60,
+    sql_pround,
+    tokens,
+)
+from .dedup import _SQL_SHINGLES, _shingles
 
 # Marker stopwords per language (argmax with fixed priority order below).
 MARKERS = {
@@ -36,13 +46,6 @@ MARKERS = {
 LANG_ORDER = ("en", "es", "de", "fr", "zh")
 FINGERPRINT_K = 8
 _BPE_RE = "[a-z]+|[0-9]|[^a-z0-9 ]"
-
-
-def _toks(c: Column) -> Column:
-    return F.split(_norm(c), " ")
-
-
-_SQL_TOKS = f"string_split({_SQL_NORM}, ' ')"
 
 
 def _marker_score(toks: Column, lang: str) -> Column:
@@ -60,11 +63,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token list; argmax with fixed priority order (ties -> earlier in
     LANG_ORDER)."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "lang",
-        _toks(F.col("text")).alias("toks"),
-    )
+    d = docs.select("doc_id", "lang", tokens("text").alias("toks"))
     scored = d.select(
         "doc_id",
         "lang",
@@ -73,19 +72,17 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lg in LANG_ORDER
         ],
     )
-    pred = None
-    for lg in reversed(LANG_ORDER):
+    # the last language is the ELSE branch, as in the oracle: a NULL
+    # text (every score NULL) predicts it
+    pred = F.lit(LANG_ORDER[-1])
+    for lg in reversed(LANG_ORDER[:-1]):
         cond = None
         for other in LANG_ORDER:
             if other == lg:
                 continue
             c = F.col(f"s_{lg}") >= F.col(f"s_{other}")
             cond = c if cond is None else (cond & c)
-        pred = (
-            F.when(cond, F.lit(lg))
-            if pred is None
-            else F.when(cond, F.lit(lg)).otherwise(pred)
-        )
+        pred = F.when(cond, F.lit(lg)).otherwise(pred)
     best = F.greatest(*[F.col(f"s_{lg}") for lg in LANG_ORDER])
     return scored.select(
         "doc_id",
@@ -112,10 +109,8 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(_toks(F.col("text"))).alias("ws_tokens"),
-        F.regexp_count(_norm(F.col("text")), F.lit(_BPE_RE)).alias(
-            "bpe_tokens"
-        ),
+        F.size(tokens("text")).alias("ws_tokens"),
+        F.regexp_count(norm("text"), F.lit(_BPE_RE)).alias("bpe_tokens"),
     )
 
 
@@ -125,8 +120,8 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        _norm(F.col("text")).alias("nt"),
-        _toks(F.col("text")).alias("toks"),
+        norm("text").alias("nt"),
+        tokens("text").alias("toks"),
     ).select(
         "doc_id",
         F.length("nt").alias("n_chars"),
@@ -140,7 +135,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1.0), F.col("stops") * F.lit(10.0) / F.col("n_toks")
     )
     punct_c = F.lit(1.0) - F.least(
-        F.lit(1.0), F.col("punct") * F.lit(5.0) / F.col("n_chars")
+        F.lit(1.0), F.try_divide(F.col("punct") * F.lit(5.0), "n_chars")
     )
     return d.select(
         "doc_id",
@@ -155,7 +150,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-k sketch: the K smallest md5-derived 3-gram shingle hashes
     per document, joined into a stable string (docs with >= 3 tokens)."""
-    sh = _shingles(spark, sf_dir).withColumn("h", _hash60(F.col("sh")))
+    sh = _shingles(spark, sf_dir).withColumn("h", hash60(F.col("sh")))
     return sh.groupBy("doc_id").agg(
         F.concat_ws(
             ",",
@@ -169,7 +164,7 @@ def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (source, lang) corpus profile."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
-        "source", "lang", "n_chars", F.size(_toks(F.col("text"))).alias("nt")
+        "source", "lang", "n_chars", F.size(tokens("text")).alias("nt")
     )
     return d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -193,7 +188,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, no shuffle."""
     overlap = CHUNK_TOKENS - CHUNK_STRIDE
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", _toks(F.col("text")).alias("toks"))
+    d = docs.select("doc_id", tokens("text").alias("toks"))
     n = F.size("toks")
     # last start = largest k*stride that still contributes a token the
     # previous window doesn't already cover (k*stride + overlap < n)
@@ -215,8 +210,8 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunks.select(
         "doc_id",
         "chunk_idx",
-        F.concat_ws(
-            " ", F.slice("toks", F.col("start") + 1, CHUNK_TOKENS)
+        F.array_join(
+            F.slice("toks", F.col("start") + 1, CHUNK_TOKENS), " "
         ).alias("chunk_text"),
         F.least(
             F.lit(CHUNK_TOKENS), F.col("n_toks") - F.col("start")
@@ -235,7 +230,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic corpus contains none — the contract is the plumbing and
     the zero counts; the regexes are RE2/Java-compatible)."""
     docs = load_table(spark, sf_dir, "documents")
-    nt = _norm(F.col("text"))
+    nt = norm("text")
     scrubbed = nt
     for tag, pat in PII_PATTERNS.items():
         scrubbed = F.regexp_replace(scrubbed, pat, f"<{tag}>")
@@ -272,7 +267,7 @@ def _sql_pred_lang() -> str:
 
 _SQL_SCORED = "SELECT doc_id, lang, " + ", ".join(
     f"{_sql_marker_score(lg)} AS s_{lg}" for lg in LANG_ORDER
-) + f" FROM (SELECT doc_id, lang, {_SQL_TOKS} AS toks FROM documents) t"
+) + f" FROM (SELECT doc_id, lang, {SQL_TOKENS} AS toks FROM documents) t"
 
 ORACLES = {
     "lang_id": f"""
@@ -291,8 +286,8 @@ ORACLES = {
     """,
     "token_count": f"""
         SELECT doc_id,
-               len({_SQL_TOKS}) AS ws_tokens,
-               len(regexp_extract_all({_SQL_NORM}, '{_BPE_RE}'))
+               len({SQL_TOKENS}) AS ws_tokens,
+               len(regexp_extract_all({SQL_NORM}, '{_BPE_RE}'))
                  AS bpe_tokens
         FROM documents
     """,
@@ -302,7 +297,7 @@ ORACLES = {
                  len(nt) AS n_chars, len(toks) AS n_toks,
                  {_sql_marker_score("en")} AS stops,
                  len(regexp_extract_all(nt, '[^a-z0-9 ]')) AS punct
-          FROM (SELECT doc_id, {_SQL_NORM} AS nt, {_SQL_TOKS} AS toks
+          FROM (SELECT doc_id, {SQL_NORM} AS nt, {SQL_TOKENS} AS toks
                 FROM documents) x
         )
         SELECT doc_id,
@@ -318,8 +313,7 @@ ORACLES = {
     "doc_fingerprint": f"""
         WITH s AS ({_SQL_SHINGLES}),
         hashed AS (
-          SELECT doc_id, (('0x' || substr(md5(sh), 1, 15)))::BIGINT AS h
-          FROM s
+          SELECT doc_id, {sql_hash60("sh")} AS h FROM s
         )
         SELECT doc_id,
                array_to_string(
@@ -330,7 +324,7 @@ ORACLES = {
     """,
     "doc_chunking": f"""
         WITH d AS (
-          SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
+          SELECT doc_id, {SQL_TOKENS} AS toks FROM documents
         ),
         chunks AS (
           SELECT doc_id, len(toks) AS n_toks, toks,
@@ -365,21 +359,18 @@ ORACLES = {
                                        '<email>', 'g'),
                         '{PII_PATTERNS["phone"]}', '<phone>', 'g'))
                  AS scrubbed_len
-        FROM (SELECT doc_id, {_SQL_NORM} AS nt FROM documents) x
+        FROM (SELECT doc_id, {SQL_NORM} AS nt FROM documents) x
     """,
     "doc_stats": f"""
         SELECT source, lang, count(*) AS n_docs,
                round(avg(n_chars), 2) AS avg_chars,
-               round(avg(len({_SQL_TOKS})), 2) AS avg_tokens,
+               round(avg(len({SQL_TOKENS})), 2) AS avg_tokens,
                min(n_chars) AS min_chars,
                max(n_chars) AS max_chars
         FROM documents
         GROUP BY source, lang
     """,
 }
-
-
-from ..functions.portable import pround, sql_pround  # noqa: E402
 
 
 def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,8 +392,8 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = docs.select(
         "lang",
         "n_chars",
-        F.size(_toks(F.col("text"))).alias("ws"),
-        F.regexp_count(_norm(F.col("text")), F.lit(_BPE_RE)).alias("bpe"),
+        F.size(tokens("text")).alias("ws"),
+        F.regexp_count(norm("text"), F.lit(_BPE_RE)).alias("bpe"),
     )
     agg = per.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -427,8 +418,8 @@ QUERIES["tokenizer_fertility"] = tokenizer_fertility
 ORACLES["tokenizer_fertility"] = f"""
     WITH per AS (
       SELECT lang, n_chars,
-             len({_SQL_TOKS}) AS ws,
-             len(regexp_extract_all({_SQL_NORM}, '{_BPE_RE}')) AS bpe
+             len({SQL_TOKENS}) AS ws,
+             len(regexp_extract_all({SQL_NORM}, '{_BPE_RE}')) AS bpe
       FROM documents
     ),
     agg AS (
@@ -477,7 +468,7 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table_spread(spark, sf_dir, "documents", "doc_id")
     words = (
-        docs.select(F.explode(_toks(F.col("text"))).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -508,7 +499,7 @@ ORACLES["bpe_merge_pairs"] = f"""
     WITH words AS (
       SELECT w, count(*) AS freq
       FROM (
-        SELECT unnest({_SQL_TOKS}) AS w FROM documents
+        SELECT unnest({SQL_TOKENS}) AS w FROM documents
       ) t
       WHERE length(w) >= 2
       GROUP BY w
@@ -580,7 +571,7 @@ def bpe_vocab_k_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Eager checkpoints keep each round's plan shallow; the vocabulary
     # relation being checkpointed is tiny (distinct words).
     vocab = (
-        docs.select(F.explode(_toks(F.col("text"))).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .filter(F.length("w") >= 2)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -713,7 +704,7 @@ def _bpe_round_ctes(n_rounds: int) -> str:
 ORACLES["bpe_vocab_k_rounds"] = f"""
     WITH words AS (
       SELECT w, count(*) AS freq
-      FROM (SELECT unnest({_SQL_TOKS}) AS w FROM documents) t
+      FROM (SELECT unnest({SQL_TOKENS}) AS w FROM documents) t
       WHERE length(w) >= 2 GROUP BY w
     ),
     v0 AS (

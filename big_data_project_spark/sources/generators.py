@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.portable import pround, sql_pround
+from ..functions.portable import hash60, pround, sql_hash60, sql_pround
 
 EVENTS_PER_HOUR = 100
 INTERVAL_MINUTES = 1
@@ -39,15 +39,11 @@ _SCALE = float(1 << 59)
 
 def _hash_noise(c: Column, amplitude: float) -> Column:
     """Deterministic uniform noise in [-amplitude, amplitude)."""
-    h = F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-    return (h / F.lit(_SCALE) - F.lit(1.0)) * F.lit(amplitude)
+    return (hash60(c) / F.lit(_SCALE) - F.lit(1.0)) * F.lit(amplitude)
 
 
 def _sql_hash_noise(expr: str, amplitude: float) -> str:
-    return (
-        f"((('0x' || substr(md5({expr}), 1, 15)))::BIGINT / {_SCALE} - 1.0)"
-        f" * {amplitude}"
-    )
+    return f"({sql_hash60(expr)} / {_SCALE} - 1.0) * {amplitude}"
 
 
 def _time_factor(hour: Column) -> Column:

@@ -54,7 +54,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
-from ..functions.portable import pround
+from ..functions.portable import norm, pround, word_tokens
 from ..plans.sinks import _read_or_none, read_upsert_table, stage_swap_parquet
 from ..session import scoped_conf
 
@@ -362,10 +362,8 @@ def stream_dedup_incremental(
     can apply without buffering. Exactly-one-survivor-per-hash is
     asserted by test_stream_dedup_incremental_intra_stream_dups.
     """
-    from ..operators.dedup import _norm as _doc_norm
-
     src = docs_source(spark, docs_dir)
-    hashed = src.withColumn("doc_hash", F.md5(_doc_norm(F.col("text"))))
+    hashed = src.withColumn("doc_hash", F.md5(norm("text")))
     return hashed.dropDuplicates(["doc_hash"]).join(
         base_hashes, "doc_hash", "left_anti"
     )
@@ -398,14 +396,12 @@ def stream_dedup_incremental_watermarked(
     The injected frame (or the parquet dir) must carry DOCS_SCHEMA plus
     ``ingest_ts_col`` as a timestamp. Like the unwatermarked twin, the
     intra-window survivor is the first-arriving replica."""
-    from ..operators.dedup import _norm as _doc_norm
-
     if isinstance(docs_dir, DataFrame):
         src = docs_source(spark, docs_dir)
     else:
         schema = f"{DOCS_SCHEMA}, {ingest_ts_col} timestamp"
         src = spark.readStream.schema(schema).parquet(docs_dir)
-    hashed = src.withColumn("doc_hash", F.md5(_doc_norm(F.col("text"))))
+    hashed = src.withColumn("doc_hash", F.md5(norm("text")))
     return (
         hashed.withWatermark(ingest_ts_col, watermark)
         .dropDuplicatesWithinWatermark(["doc_hash"])
@@ -1440,18 +1436,14 @@ def read_kmv_intersection(
 
 def _countmin_partial(batch_df: DataFrame) -> DataFrame:
     """Count-min cells of one batch: tokenize with the SHARED
-    normalization (operators/dedup.py::_norm) and bin each token into
+    tokenizer (functions/portable.py::word_tokens) and bin each token into
     its CM_DEPTH (row, bucket) cells via the SHARED md5 hashing
     (operators/sketches.py::cm_bucket_rows). Cell counts ADD across
     batches — the mergeability that makes CM a sketch."""
-    from ..operators.dedup import _norm
     from ..operators.sketches import cm_bucket_rows
 
     return (
-        batch_df.select(
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
+        word_tokens(batch_df)
         .select(F.explode(cm_bucket_rows(F.col("tok"))).alias("rb"))
         .groupBy(
             F.col("rb.d").alias("d"), F.col("rb.bucket").alias("bucket")

@@ -78,6 +78,61 @@ def null_events_dir(spark, tmp_path_factory):
     return sf_dir
 
 
+# doc_id strides at which the blank_docs_dir copy of the sf0.001
+# documents table holds an empty, a whitespace-only and a NULL text
+BLANK_TEXT_STRIDES = ((17, ""), (19, "  \t "), (23, None))
+
+
+def _docs_copy(tmp_path_factory, strides) -> str:
+    """A copy of sf0.001 whose ``documents.text`` is replaced at the
+    (stride, text) doc_id strides (the first stride that divides a
+    doc_id wins), with ``n_chars`` its length (NULL for a NULL text).
+    The other tables are symlinks."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_project_spark.catalog import TABLES, table_path
+
+    sf_dir = str(tmp_path_factory.mktemp("docs_sf"))
+    for name in TABLES:
+        if name != "documents":
+            os.symlink(table_path(SF_DIR, name), table_path(sf_dir, name))
+    tbl = pq.read_table(table_path(SF_DIR, "documents"))
+    texts = []
+    for doc_id, text in zip(
+        tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()
+    ):
+        for stride, blank in strides:
+            if doc_id % stride == 0:
+                text = blank
+                break
+        texts.append(text)
+    n_chars = [None if t is None else len(t) for t in texts]
+    for name, values in (("text", texts), ("n_chars", n_chars)):
+        i = tbl.schema.get_field_index(name)
+        field = tbl.schema.field(i)
+        tbl = tbl.set_column(i, field, pa.array(values, field.type))
+    pq.write_table(tbl, table_path(sf_dir, "documents"))
+    return sf_dir
+
+
+@pytest.fixture(scope="session")
+def blank_docs_dir(tmp_path_factory):
+    """sf0.001 with ``''``, ``'  \\t '`` and NULL texts at the
+    BLANK_TEXT_STRIDES. The generated data has no blank or NULL text."""
+    return _docs_copy(tmp_path_factory, BLANK_TEXT_STRIDES)
+
+
+@pytest.fixture(scope="session")
+def null_docs_dir(tmp_path_factory):
+    """sf0.001 with NULL texts only, at BLANK_TEXT_STRIDES' NULL stride:
+    a source whose NULL docs sit beside blank ones can hide a NULL text
+    that one engine reads as ``''``."""
+    return _docs_copy(tmp_path_factory, BLANK_TEXT_STRIDES[2:])
+
+
 @pytest.fixture(scope="session")
 def nanos_events_dir(tmp_path_factory):
     """An sf dir holding only ``events``: the sf0.001 table with ``ts``

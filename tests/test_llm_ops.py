@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_spark.operators import dedup, multimodal, similarity
-from big_data_project_spark.operators.dedup import _hash60, _jaccard_pairs
+from big_data_project_spark.functions.portable import hash60
+from big_data_project_spark.operators.dedup import _jaccard_pairs
 
 from tests.conftest import SF_DIR
 
@@ -37,7 +38,7 @@ def test_jaccard_pairs_exact(spark):
 
 
 def test_hash60_matches_md5_prefix(spark):
-    got = spark.range(1).select(_hash60(F.lit("hello")).alias("h")).head()["h"]
+    got = spark.range(1).select(hash60(F.lit("hello")).alias("h")).head()["h"]
     want = int(hashlib.md5(b"hello").hexdigest()[:15], 16)
     assert got == want
 

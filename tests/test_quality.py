@@ -129,7 +129,7 @@ def test_sequence_packing_conserves_tokens(spark):
 
     from big_data_project_spark.operators import curation
     from big_data_project_spark.operators.curation import PACK_BUDGET_TOKENS
-    from big_data_project_spark.operators.textops import _toks
+    from big_data_project_spark.functions.portable import tokens
     from big_data_project_spark.catalog import load_table
     from pyspark.sql import functions as F
 
@@ -141,7 +141,7 @@ def test_sequence_packing_conserves_tokens(spark):
         r["source"]: r["t"]
         for r in load_table(spark, SF_DIR, "documents")
         .groupBy("source")
-        .agg(F.sum(F.size(_toks(F.col("text")))).alias("t"))
+        .agg(F.sum(F.size(tokens(F.col("text")))).alias("t"))
         .collect()
     }
     assert set(per_source) == set(totals)

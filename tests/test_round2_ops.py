@@ -195,7 +195,7 @@ def test_stream_alerts_hourly_equals_batch(spark, tmp_path):
 
 def test_stream_dedup_incremental_equals_batch(spark, tmp_path):
     from big_data_project_spark.catalog import load_table
-    from big_data_project_spark.operators.dedup import _norm
+    from big_data_project_spark.functions.portable import norm
     from big_data_project_spark.streaming import pipeline
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -203,7 +203,7 @@ def test_stream_dedup_incremental_equals_batch(spark, tmp_path):
     docs.write.parquet(src)
     base = (
         docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.md5(_norm(F.col("text"))).alias("doc_hash"))
+        .select(F.md5(norm(F.col("text"))).alias("doc_hash"))
         .distinct()
     )
     streamed = pipeline.run_available_now(
@@ -213,7 +213,7 @@ def test_stream_dedup_incremental_equals_batch(spark, tmp_path):
     )
     want = {
         r["doc_id"]
-        for r in docs.withColumn("doc_hash", F.md5(_norm(F.col("text"))))
+        for r in docs.withColumn("doc_hash", F.md5(norm(F.col("text"))))
         .join(base, "doc_hash", "left_anti")
         .collect()
     }

@@ -176,11 +176,11 @@ def test_stream_dedup_incremental_intra_stream_dups(spark, tmp_path):
     )
     # two files so replicas arrive from parallel reads
     docs.repartition(2).write.parquet(src)
-    from big_data_project_spark.operators.dedup import _norm
+    from big_data_project_spark.functions.portable import norm
 
     base = spark.createDataFrame(
         [("base text",)], "text string"
-    ).select(F.md5(_norm(F.col("text"))).alias("doc_hash"))
+    ).select(F.md5(norm(F.col("text"))).alias("doc_hash"))
     out = pipeline.run_available_now(
         pipeline.stream_dedup_incremental(spark, src, base),
         "stream_intra_dups",
@@ -308,11 +308,8 @@ def test_winnowing_shared_run_guarantee(spark, tmp_path):
     tokens share at least one fingerprint. Planted overlap between two
     otherwise-different docs must intersect; a third unrelated doc must
     not."""
-    from big_data_project_spark.operators.corpus_stats import (
-        WINNOW_W,
-        _hash60,
-        _norm,
-    )
+    from big_data_project_spark.functions.portable import hash60, norm
+    from big_data_project_spark.operators.corpus_stats import WINNOW_W
     from big_data_project_spark.operators import corpus_stats
 
     shared = "alpha beta gamma delta epsilon zeta"  # 6 = WINNOW_W + 2
@@ -337,7 +334,7 @@ def test_winnowing_shared_run_guarantee(spark, tmp_path):
     # as the operator but materialized per-fp for the intersection check
     from pyspark.sql import Window
 
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = F.split(norm(F.col("text")), " ")
     n = F.size(toks)
     g2 = F.zip_with(
         toks, F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
@@ -352,7 +349,7 @@ def test_winnowing_shared_run_guarantee(spark, tmp_path):
     )
     grams = full.select(
         "doc_id", F.size(g3).alias("n_grams"), F.posexplode(g3).alias("pos", "sh")
-    ).withColumn("h", _hash60(F.col("sh")))
+    ).withColumn("h", hash60(F.col("sh")))
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
     sel = grams.withColumn("fp", F.min("h").over(w)).filter(
         F.col("pos") <= F.greatest(F.col("n_grams") - WINNOW_W, F.lit(0))

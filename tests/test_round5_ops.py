@@ -49,11 +49,11 @@ def test_stream_dedup_watermarked_bounded_state(spark, tmp_path):
         schema,
     ).withColumn("ingest_ts", F.col("ingest_ts").cast("timestamp"))
     docs.repartition(2).write.parquet(src)
-    from big_data_project_spark.operators.dedup import _norm
+    from big_data_project_spark.functions.portable import norm
 
     base = spark.createDataFrame(
         [("base text",)], "text string"
-    ).select(F.md5(_norm(F.col("text"))).alias("doc_hash"))
+    ).select(F.md5(norm(F.col("text"))).alias("doc_hash"))
     out = pipeline.run_available_now(
         pipeline.stream_dedup_incremental_watermarked(spark, src, base),
         "stream_wm_dedup",
@@ -361,13 +361,13 @@ def test_vocab_growth_totals(spark):
     from big_data_project_spark.operators.corpus_stats import (
         vocab_growth_curve,
     )
-    from big_data_project_spark.operators.dedup import _norm
+    from big_data_project_spark.functions.portable import norm
 
     rows = vocab_growth_curve(spark, SF_DIR).collect()
     assert rows == sorted(rows, key=lambda r: r["bucket"])
     docs = load_table(spark, SF_DIR, "documents")
     toks = docs.select(
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok")
+        F.explode(F.split(norm(F.col("text")), " ")).alias("tok")
     ).filter(F.col("tok") != "")
     assert rows[-1]["tokens_cum"] == toks.count()
     assert rows[-1]["types_cum"] == toks.distinct().count()

@@ -116,7 +116,7 @@ def test_curriculum_phases_partition_the_corpus(spark):
 def test_leakage_audit_covers_every_test_doc_with_shingles(spark):
     """Every test-split doc with >= 3 tokens gets a row; ratios are
     n_leaked / n_shingles; leaked counts never exceed totals."""
-    from big_data_project_spark.operators.dedup import _hash60, _norm
+    from big_data_project_spark.functions.portable import hash60, norm
 
     docs = load_table(spark, SF_DIR, "documents")
     from pyspark.sql import functions as F
@@ -125,8 +125,8 @@ def test_leakage_audit_covers_every_test_doc_with_shingles(spark):
         r.doc_id
         for r in docs.select(
             "doc_id",
-            F.pmod(_hash60(_norm(F.col("text"))), SPLIT_MOD).alias("b"),
-            F.size(F.split(_norm(F.col("text")), " ")).alias("n"),
+            F.pmod(hash60(norm(F.col("text"))), SPLIT_MOD).alias("b"),
+            F.size(F.split(norm(F.col("text")), " ")).alias("n"),
         )
         .filter((F.col("b") < TEST_BUCKETS) & (F.col("n") >= 3))
         .collect()
@@ -150,7 +150,7 @@ def test_leakage_audit_sees_a_planted_ngram_leak(spark, tmp_path):
     base = load_table(spark, SF_DIR, "documents")
     # Craft two docs around a shared trigram, then bucket them by the
     # split hash the operator itself uses (content-hash split).
-    from big_data_project_spark.operators.dedup import _hash60, _norm
+    from big_data_project_spark.functions.portable import hash60, norm
 
     texts = []
     shared = "alpha beta gamma"
@@ -159,7 +159,7 @@ def test_leakage_audit_sees_a_planted_ngram_leak(spark, tmp_path):
     probe = spark.createDataFrame(
         texts, "doc_id long, text string, lang string, source string, n_chars long"
     ).withColumn(
-        "bucket", F.pmod(_hash60(_norm(F.col("text"))), SPLIT_MOD)
+        "bucket", F.pmod(hash60(norm(F.col("text"))), SPLIT_MOD)
     )
     buckets = {r.doc_id: r.bucket for r in probe.collect()}
     test_doc = next(d for d, b in buckets.items() if b < TEST_BUCKETS)

@@ -405,9 +405,8 @@ def test_nmf_update_decreases_objective(spark):
         NMF_K,
         NMF_TOP,
         nmf_topic_round,
-        _norm,
     )
-    from big_data_project_spark.functions.portable import uniform01
+    from big_data_project_spark.functions.portable import norm, uniform01
 
     out = nmf_topic_round(spark, SF_DIR).collect()
     assert len(out) == NMF_K * NMF_TOP
@@ -419,7 +418,7 @@ def test_nmf_update_decreases_objective(spark):
     v_rows = (
         docs.select(
             "doc_id",
-            F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
+            F.explode(F.split(norm(F.col("text")), " ")).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
