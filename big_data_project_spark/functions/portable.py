@@ -15,6 +15,14 @@ frame's ``text`` column and drops empty ones.
 
 Hash. ``hash60`` / ``sql_hash60`` read the first 15 hex chars of md5 as
 a BIGINT in [0, 2^60); ``uniform01`` builds on it.
+``spark_sql_uniform01`` is its Spark-SQL text, for expressions parsed in
+one ``F.expr``.
+
+Vectors. ``dot`` is a left fold over the element products, the same
+order DuckDB's ``list_dot_product`` sums in, so both engines give the
+same double; ``l2norm``, ``cosine`` and ``sq_dist`` (the
+``|a|^2 - 2<a,b> + |b|^2`` fold) are built from it, each with its
+``sql_*`` twin. Callers round the result themselves.
 
 NULL and blank text. A NULL text normalizes to NULL and has NULL
 tokens, which explode to no rows: a NULL doc contributes no token and
@@ -137,3 +145,47 @@ def uniform01(c: Column | str) -> Column:
 
 def sql_uniform01(expr: str) -> str:
     return f"(({sql_hash60(expr)} + 1))::DOUBLE / {2**60}.0"
+
+
+def spark_sql_uniform01(expr: str) -> str:
+    """Spark-SQL text of ``uniform01``: it parses to the same tree."""
+    return (
+        f"(cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint) + 1)"
+        f" / cast({2**60} as double)"
+    )
+
+
+def dot(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def l2norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))
+
+
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (l2norm(a) * l2norm(b))
+
+
+def sq_dist(a: Column, b: Column) -> Column:
+    return dot(a, a) - 2 * dot(a, b) + dot(b, b)
+
+
+def sql_dot(a: str, b: str) -> str:
+    return f"list_dot_product({a}, {b})"
+
+
+def sql_l2norm(a: str) -> str:
+    return f"sqrt({sql_dot(a, a)})"
+
+
+def sql_cosine(a: str, b: str) -> str:
+    return f"({sql_dot(a, b)} / ({sql_l2norm(a)} * {sql_l2norm(b)}))"
+
+
+def sql_sq_dist(a: str, b: str) -> str:
+    return f"({sql_dot(a, a)} - 2 * {sql_dot(a, b)} + {sql_dot(b, b)})"

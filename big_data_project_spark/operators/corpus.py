@@ -35,6 +35,7 @@ from ..functions.portable import (
     davg,
     pround,
     sql_davg,
+    spark_sql_uniform01,
     sql_pround,
     tokens,
     word_tokens,
@@ -1076,15 +1077,6 @@ def _sd6(x: str) -> str:
     return f"cast({_snround(x, 6)} as decimal(28,6))"
 
 
-def _suni01(x: str) -> str:
-    """Spark-SQL string twin of functions.portable.uniform01
-    ((hash60 + 1) / 2^60; 2^60 is exactly representable as double)."""
-    return (
-        f"(cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint) + 1)"
-        f" / cast(1152921504606846976 as double)"
-    )
-
-
 # --- nmf_topic_rounds expression strings, built at IMPORT time -------
 # Round-10 (guide §7.3 driver-side planning cost): building the k²-term
 # Column trees through py4j cost ~1.5 s of pure driver time per
@@ -1092,8 +1084,8 @@ def _suni01(x: str) -> str:
 # call). Each expression is now ONE prebuilt SQL string parsed JVM-side
 # by a single F.expr call; string assembly is pure Python at import.
 # The parsed trees are operator-for-operator the Column builders'
-# (pround/uniform01 twins above), so every output value is unchanged —
-# re-proven against the unchanged chained-CTE oracle.
+# (the pround twin above, portable.spark_sql_uniform01), so every output
+# value is unchanged — re-proven against the unchanged chained-CTE oracle.
 _NMF_KS = range(NMF_K)
 _NMF_WTV_AGGS = [
     f"cast(sum({_sd6(f'w{k} * v')}) as double) as wtv{k}" for k in _NMF_KS
@@ -1166,11 +1158,13 @@ _NMF_OBJ_COL = _snround("v2 - 2.0d * xh + gg", 6) + " as objective"
 # ("nmfw:<doc>:<topic>" / "nmfh:<topic>:<tok>"), topic a compile-time
 # literal per column
 _NMF_W_INIT = [
-    _suni01(f"concat('nmfw:', cast(doc_id as string), ':{k}')") + f" as w{k}"
+    spark_sql_uniform01(f"concat('nmfw:', cast(doc_id as string), ':{k}')")
+    + f" as w{k}"
     for k in _NMF_KS
 ]
 _NMF_H_INIT = [
-    _suni01(f"concat('nmfh:{k}:', tok)") + f" as h{k}" for k in _NMF_KS
+    spark_sql_uniform01(f"concat('nmfh:{k}:', tok)") + f" as h{k}"
+    for k in _NMF_KS
 ]
 _NMF_GCOLS = [f"g{i}_{j}" for i in _NMF_KS for j in _NMF_KS]
 _NMF_HGCOLS = [f"hg{i}_{j}" for i in _NMF_KS for j in _NMF_KS]

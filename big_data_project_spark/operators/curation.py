@@ -355,7 +355,11 @@ def doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition (the exact-quantile cost by nature — the GK sketch is the
     streaming-scale path)."""
     docs = load_table(spark, sf_dir, "documents")
-    wr = Window.partitionBy("source").orderBy("n_chars", "doc_id")
+    # NULLS LAST, as the oracle's DuckDB ORDER BY has it (Spark's
+    # default ascending order puts NULLs first)
+    wr = Window.partitionBy("source").orderBy(
+        F.col("n_chars").asc_nulls_last(), "doc_id"
+    )
     wn = Window.partitionBy("source")
     ranked = docs.select(
         "source",

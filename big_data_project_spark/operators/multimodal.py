@@ -35,11 +35,16 @@ _OUT_SCHEMA = (
 )
 
 
-def _decode_payload(payload: bytes) -> dict:
+def _decode_payload(payload: bytes | None) -> dict:
     """Stub decoder: real codecs (PIL/ffmpeg) are not in this container.
     Deterministic so the DuckDB oracle can reproduce it; a production
     build swaps this body for the actual decode and keeps the plumbing.
+    A NULL payload (a NULL ``documents.text``) decodes to NULL stats.
     """
+    if payload is None:
+        return dict.fromkeys(
+            ("byte_len", "payload_sha256", "fake_width", "fake_height")
+        )
     n = len(payload)
     return {
         "byte_len": n,
@@ -101,6 +106,13 @@ _FEAT_SCHEMA = (
 FRAME_SAMPLE_N = 4
 
 
+def _frame_step(payload: bytes | None) -> int:
+    """Byte stride of the FRAME_SAMPLE_N-point frame grid. A NULL
+    payload has no length; the grid then steps by 1, as the oracles'
+    ``greatest(1, NULL // n)`` does."""
+    return 1 if payload is None else max(1, len(payload) // FRAME_SAMPLE_N)
+
+
 def _feature_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
@@ -114,15 +126,18 @@ def _feature_batches(
         for doc_id, modality, payload in zip(
             pdf["doc_id"], pdf["modality"], pdf["payload"]
         ):
-            n = len(payload)
-            step = max(1, n // FRAME_SAMPLE_N)
+            null = payload is None
+            n = None if null else len(payload)
+            step = _frame_step(payload)
             feats.append(
                 {
                     "doc_id": doc_id,
                     "modality": modality,
                     "byte_len": n,
-                    "n_distinct_bytes": len(set(payload)),
-                    "mean_byte": (sum(payload) / n) if n else 0.0,
+                    "n_distinct_bytes": None if null else len(set(payload)),
+                    "mean_byte": (
+                        None if null else (sum(payload) / n) if n else 0.0
+                    ),
                     "frame_offsets": (
                         [i * step for i in range(FRAME_SAMPLE_N)]
                         if modality == "video"
@@ -190,18 +205,23 @@ def _frame_batches(
     for pdf in batches:
         rows = []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            n = len(payload)
-            step = max(1, n // FRAME_SAMPLE_N)
+            step = _frame_step(payload)
             for i in range(FRAME_SAMPLE_N):
                 off = i * step
-                win = payload[off : off + FRAME_BYTES]
+                win = (
+                    None
+                    if payload is None
+                    else payload[off : off + FRAME_BYTES]
+                )
                 rows.append(
                     {
                         "doc_id": doc_id,
                         "frame_idx": i,
                         "frame_offset": off,
-                        "win_len": len(win),
-                        "win_checksum": sum(win) % _FRAME_P,
+                        "win_len": None if win is None else len(win),
+                        "win_checksum": (
+                            None if win is None else sum(win) % _FRAME_P
+                        ),
                     }
                 )
         yield pd.DataFrame(rows)
@@ -295,7 +315,8 @@ def _audio_batches(
     for pdf in batches:
         rows = []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            n = len(payload)
+            # a NULL payload has no windows (the oracle's range(0, NULL))
+            n = 0 if payload is None else len(payload)
             idx = 0
             off = 0
             while off < n:

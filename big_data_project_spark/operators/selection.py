@@ -40,9 +40,11 @@ from ..catalog import load_table_spread
 from ..functions.portable import (
     SQL_NORM,
     SQL_TOKENS,
+    cosine,
     davg,
     norm,
     pround,
+    sql_cosine,
     sql_davg,
     sql_pround,
     tokens,
@@ -507,8 +509,6 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the candidate set comes from the LSH/IVF bucket join
     (ann_lsh_topk / ann_ivf_kmeans_topk) and this exact form is the
     sampled-eval contract."""
-    from .similarity import _dot, _norm as _l2
-
     emb = load_table_spread(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("e"),
@@ -524,9 +524,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("ce"),
         F.col("label").alias("m_label"),
     )
-    cos = _dot(F.col("qe"), F.col("ce")) / (
-        _l2(F.col("qe")) * _l2(F.col("ce"))
-    )
+    cos = cosine(F.col("qe"), F.col("ce"))
     w = Window.partitionBy("query_id").orderBy(
         pround(F.col("cos"), 9).desc(), F.col("match_id").asc()
     )
@@ -570,10 +568,7 @@ ORACLES["knn_label_vote"] = f"""
                c.label AS m_label,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {sql_pround(
-                     "list_dot_product(q.e, c.e)"
-                     " / (sqrt(list_dot_product(q.e, q.e))"
-                     " * sqrt(list_dot_product(c.e, c.e)))", 9)} DESC,
+                 ORDER BY {sql_pround(sql_cosine("q.e", "c.e"), 9)} DESC,
                    c.vec_id ASC
                ) AS rank
         FROM v q JOIN v c ON q.vec_id < {KNN_N_EVAL}
@@ -621,7 +616,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded before the flag comparison."""
     from .corpus import bm25_retrieval_topk
     from ..caching import persisted as _persisted
-    from .similarity import _dot, _norm as _l2, _vectors
+    from .similarity import _vectors
 
     # persisted: pos (rank==1) and neg (rank>1) both consume it — an
     # unpersisted branch would execute the corpus-scale BM25 plan twice
@@ -638,11 +633,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     vp = v.select(F.col("vec_id").alias("pos_doc_id"), F.col("e").alias("pe"))
     vn = v.select(F.col("vec_id").alias("neg_doc_id"), F.col("e").alias("ne"))
-    cos = pround(
-        _dot(F.col("pe"), F.col("ne"))
-        / (_l2(F.col("pe")) * _l2(F.col("ne"))),
-        6,
-    )
+    cos = pround(cosine(F.col("pe"), F.col("ne")), 6)
     return (
         neg.join(F.broadcast(pos), "query_id")
         .join(vp, "pos_doc_id")
@@ -677,11 +668,7 @@ ORACLES["hard_negative_mining"] = f"""
     scored AS (
       SELECT n.query_id, p.pos_doc_id, n.neg_doc_id, n.bm25_rank,
              n.bm25_score,
-             {sql_pround(
-                 "list_dot_product(vp.e, vn.e)"
-                 " / (sqrt(list_dot_product(vp.e, vp.e))"
-                 " * sqrt(list_dot_product(vn.e, vn.e)))", 6)}
-               AS cos_to_pos
+             {sql_pround(sql_cosine("vp.e", "vn.e"), 6)} AS cos_to_pos
       FROM neg n
       JOIN pos p USING (query_id)
       JOIN v vp ON vp.vec_id = p.pos_doc_id

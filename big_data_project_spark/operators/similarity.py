@@ -5,15 +5,23 @@ The reference has no vector ops (its "similarity" surface is the demand
 model's feature space, src/ml/train_predict.py); these are the
 LLM-training-data operators the brief adds as first-class components.
 
-- ``embedding_norms``: L2 norm per vector via F.aggregate (JVM-side,
-  codegen; no UDF).
-- ``ann_cosine_topk``: brute-force cosine top-k — the small query set is
-  broadcast over the corpus, so the plan is one map-side pass over the
-  corpus plus a per-query top-k (embarrassingly parallel at 100 TB).
+One rule, one place:
+
+- The vector algebra (``dot``, ``l2norm``, ``cosine``, ``sq_dist``) and
+  its DuckDB twins live in ``functions/portable.py``. Every Column and
+  oracle site here calls them.
+- Exact retrieval (``ann_cosine_topk``) broadcasts the small query set
+  over the corpus: one map-side pass plus a per-query top-k.
 - ``ann_lsh_topk``: random-hyperplane LSH. Hyperplane weights are
-  md5-derived (deterministic across engines), so even the LSH path has a
-  full DuckDB oracle — bucketing both sides turns candidate generation
-  into an equi-join on the bucket id; no cross join at any scale.
+  md5-derived (deterministic across engines), so candidate generation
+  is an equi-join on the bucket id in both engines.
+- One k-means fit (``_km_fit_shared``): distributed Lloyd rounds built
+  once per session and read by every cell consumer (``ann_ivf_topk``,
+  ``ivf_kmeans_cells``, ``cluster_balanced_sample``,
+  ``cluster_label_purity``). ``ann_ivf_topk`` probes its IVF_NPROBE
+  nearest cells and ranks exact cosine inside them.
+- One per-group centroid array (``_centroids``) and one reciprocal-rank
+  fusion (``_rrf``), each with its SQL twin.
 
 Portability: all arithmetic in double; cosine rounded to 9 dp before
 ranking (cross-engine float noise is ~1e-15, real gaps are >1e-9) with
@@ -28,11 +36,17 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import (
+    cosine,
     hash60,
+    l2norm,
     pround,
+    sq_dist,
+    sql_cosine,
     sql_davg,
     sql_hash60,
+    sql_l2norm,
     sql_pround,
+    sql_sq_dist,
 )
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -48,25 +62,13 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 norm and dimensionality per vector."""
     v = _vectors(spark, sf_dir)
     return v.select(
         "vec_id",
         F.size("e").alias("dim"),
-        F.round(_norm(F.col("e")), 6).alias("l2_norm"),
+        F.round(l2norm(F.col("e")), 6).alias("l2_norm"),
     )
 
 
@@ -110,10 +112,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "match_id",
-            (
-                _dot(F.col("qe"), F.col("ce"))
-                / (_norm(F.col("qe")) * _norm(F.col("ce")))
-            ).alias("cos"),
+            cosine(F.col("qe"), F.col("ce")).alias("cos"),
         )
     )
     return _topk(pairs)
@@ -171,10 +170,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "match_id",
-            (
-                _dot(F.col("qe"), F.col("ce"))
-                / (_norm(F.col("qe")) * _norm(F.col("ce")))
-            ).alias("cos"),
+            cosine(F.col("qe"), F.col("ce")).alias("cos"),
         )
     )
     return _topk(pairs)
@@ -202,10 +198,7 @@ def _cosine_pairs(vb: DataFrame) -> DataFrame:
         .select(
             "a_id",
             "b_id",
-            (
-                _dot(F.col("ae"), F.col("be"))
-                / (_norm(F.col("ae")) * _norm(F.col("be")))
-            ).alias("cos"),
+            cosine(F.col("ae"), F.col("be")).alias("cos"),
         )
         .filter(F.round(F.col("cos"), 9) >= COSINE_TAU)
         .select("a_id", "b_id", F.round("cos", 6).alias("cosine"))
@@ -230,123 +223,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_CELLS = 16
 IVF_NPROBE = 3
-IVF_SEED = 42
-IVF_FIT_SAMPLE = 4096  # fit centroids on vec_id < this (O(1) vs corpus)
-IVF_MAX_ITER = 20
-IVF_TOL = 1e-6
 
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: k-means partitions the corpus into cells; each query
-    probes its IVF_NPROBE nearest cells and ranks exact cosine inside
-    them.
-
-    This is the scale path beyond LSH: centroids are Lloyd-fit
-    driver-side on a bounded deterministic sample (first IVF_FIT_SAMPLE
-    vec_ids — at 100 TB the sample is the same fixed size, so fit cost
-    is O(1) in corpus size), then assignment is one map-side broadcast
-    argmin over the corpus — no per-iteration cluster jobs. The probe
-    is an equi-join on cell id, so per-query cost is
-    corpus/IVF_CELLS x IVF_NPROBE. Rows-only entry (k-means centroids
-    are not SQL-expressible); recall vs the exact operator is asserted
-    in tests.
-    """
-    import numpy as np
-
-    from ..caching import persisted as _persisted
-
-    v = _vectors(spark, sf_dir)
-
-    # Bounded, deterministic fit sample: ordered by vec_id so the
-    # centroids do not depend on partitioning or row order.
-    sample = np.array(
-        v.filter(F.col("vec_id") < IVF_FIT_SAMPLE)
-        .orderBy("vec_id")
-        .select("e")
-        .toPandas()["e"]
-        .tolist()
-    )
-    rng = np.random.default_rng(IVF_SEED)
-    cent = sample[rng.choice(len(sample), size=IVF_CELLS, replace=False)]
-    for _ in range(IVF_MAX_ITER):
-        d2 = ((sample[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        lab = d2.argmin(axis=1)
-        new = np.array(
-            [
-                sample[lab == c].mean(axis=0) if (lab == c).any() else cent[c]
-                for c in range(IVF_CELLS)
-            ]
-        )
-        shift = float(((new - cent) ** 2).sum())
-        cent = new
-        if shift < IVF_TOL:
-            break
-
-    # Fully map-side assignment: the 16 centroids become literal
-    # arrays inside ONE projection; array_min over (dist, cell) structs
-    # is the argmin (ties break to the lower cell id via struct
-    # ordering). Zero shuffles, zero Lloyd jobs over the corpus.
-    dists = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("e"),
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("dist"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(cent)
-        ]
-    )
-    assigned = _persisted(
-        v.select("vec_id", "e", F.array_min(dists)["cell"].alias("cell"))
-    )
-    # Probe cells map-side too: per query, sort the same 16 (dist,
-    # cell) structs and explode the IVF_NPROBE nearest — no crossJoin,
-    # no window, so the broadcast below is a trivial sub-job.
-    probes = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(dists), 1, IVF_NPROBE),
-                    lambda s: s["cell"],
-                )
-            ).alias("cell"),
-        )
-    )
-    pairs = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("match_id"),
-            (
-                _dot(F.col("qe"), F.col("e"))
-                / (_norm(F.col("qe")) * _norm(F.col("e")))
-            ).alias("cos"),
-        )
-    )
-    return _topk(pairs)
-
-
-# --- distributed Lloyd k-means (round-5 verdict item 8) -----------------
+# --- distributed Lloyd k-means: the one fit -----------------------------
 #
-# ann_ivf_topk fits its centroids driver-side on a bounded sample —
-# honest O(1) but rows-only (numpy Lloyd is not SQL-expressible). The
-# functions below are the DISTRIBUTED fit: Lloyd's algorithm unrolled
-# as declarative DataFrame ops (the event_pagerank pattern), with every
-# arithmetic step engine-portable, so the whole iterative pipeline —
-# init, IVF_KM_ITERS assign/recompute rounds, final assignment — sits
-# inside the DuckDB oracle hash gate. This is how the fit stage runs
-# when even the fit sample must be corpus-scale.
+# Lloyd's algorithm unrolled as declarative DataFrame ops (the
+# event_pagerank pattern), every arithmetic step engine-portable, so
+# the whole iterative pipeline — init, IVF_KM_ITERS assign/recompute
+# rounds, final assignment — sits inside the DuckDB oracle hash gate.
+# ``_km_fit_shared`` builds it once per session; every consumer of the
+# cells reads that fit.
 #
 # Per-iteration cost at 100 TB: assignment is ZERO-shuffle — the
 # cells-sized centroid list rides in as a one-row broadcast array and
@@ -354,17 +239,26 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (rounded to 9dp with cell tie-break, so the winner is deterministic
 # on both engines regardless of list order); the mean recompute is ONE
 # corpus×d dims shuffle. That is the textbook distributed-Lloyd
-# profile: iterations × one shuffle.
+# profile: iterations × one shuffle. The IVF probe sorts the same
+# (dist², cell) structs and keeps the IVF_NPROBE nearest.
 
 IVF_KM_ITERS = 2  # unrolled refinement rounds (init -> 2x assign+mean)
 
 
-def _km_d2(e: Column, ce: Column) -> Column:
-    """Rounded squared euclidean distance via the fold-portable
-    decomposition ||e||² - 2<e,ce> + ||ce||² (same contract as the ANN
-    cosines: sequential array folds are bit-identical cross-engine)."""
-    return F.round(
-        _dot(e, e) - 2 * _dot(e, ce) + _dot(ce, ce), 9
+def _cent_list(cent: DataFrame) -> DataFrame:
+    """One row, ``cs``: every (cell, ce) centroid, for a broadcast."""
+    return cent.agg(F.collect_list(F.struct("cell", "ce")).alias("cs"))
+
+
+def _cell_dists(e: Column) -> Column:
+    """(d2, cell) per centroid of ``cs``: the 9-dp-rounded squared
+    euclidean distance of ``e`` to it."""
+    return F.transform(
+        F.col("cs"),
+        lambda c: F.struct(
+            F.round(sq_dist(e, c["ce"]), 9).alias("d2"),
+            c["cell"].alias("cell"),
+        ),
     )
 
 
@@ -373,17 +267,8 @@ def _km_assign(v: DataFrame, cent: DataFrame) -> DataFrame:
     `cent` (cell, ce) collapses to ONE row holding every centroid, is
     broadcast, and the argmin runs inside the projection — no shuffle
     touches the corpus."""
-    cs = cent.agg(F.collect_list(F.struct("cell", "ce")).alias("cs"))
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _km_d2(F.col("e"), c["ce"]).alias("d2"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )
-    return v.crossJoin(F.broadcast(cs)).select(
+    best = F.array_min(_cell_dists(F.col("e")))
+    return v.crossJoin(F.broadcast(_cent_list(cent))).select(
         "vec_id", "e", best["cell"].alias("cell"), best["d2"].alias("d2")
     )
 
@@ -471,12 +356,11 @@ def _km_fit(v: DataFrame) -> tuple[DataFrame, DataFrame]:
 def _km_fit_shared(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Session-memoized k-means fit (round-7 verdict item 4): the
-    centroids AND the final persisted assignment are built once per
-    (application, sf_dir) and shared by every consumer —
-    ``ivf_kmeans_cells`` and ``ann_ivf_kmeans_topk`` previously each
-    re-ran the full unrolled Lloyd pipeline (13 stages apiece at the
-    bench tier) for the identical fit."""
+    """The one k-means fit: the centroids AND the final persisted
+    assignment, built once per (application, sf_dir) and read by every
+    consumer of the cells (``ann_ivf_topk``, ``ivf_kmeans_cells``,
+    ``cluster_balanced_sample``, ``cluster_label_purity``). The only
+    package caller of ``_km_fit``."""
     from ..rollups import shared_rollup
 
     cent = shared_rollup(
@@ -510,7 +394,7 @@ def ivf_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         stats.join(
             cent.select(
-                "cell", F.round(_norm(F.col("ce")), 6).alias("centroid_norm")
+                "cell", F.round(l2norm(F.col("ce")), 6).alias("centroid_norm")
             ),
             "cell",
         )
@@ -518,34 +402,27 @@ def ivf_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN over the DISTRIBUTED k-means cells: each query probes
-    its IVF_NPROBE nearest centroids (map-side ranked slice of the
-    same broadcast centroid array) and exact cosine ranks the members
-    of those cells — ann_ivf_topk's exact shape, but with the fit
-    stage inside the oracle contract instead of a driver-side numpy
-    loop. Probe cost per query stays corpus/IVF_CELLS × IVF_NPROBE.
-    The fit (centroids + persisted assignment) is the session-shared
-    one — computed once for this key and ``ivf_kmeans_cells`` both."""
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN over the k-means cells: each query probes its IVF_NPROBE
+    nearest centroids (map-side ranked slice of the broadcast centroid
+    array) and exact cosine ranks the members of those cells. The probe
+    is an equi-join on cell id, so per-query cost is corpus/IVF_CELLS ×
+    IVF_NPROBE. The fit is the session-shared one (``_km_fit_shared``),
+    inside the oracle contract. Registered as ``ann_ivf_topk`` and
+    ``ann_ivf_kmeans_topk``."""
     v = _km_vectors(spark, sf_dir)
     cent, assigned = _km_fit_shared(spark, sf_dir)
-    cs = cent.agg(F.collect_list(F.struct("cell", "ce")).alias("cs"))
-    ranked = F.transform(
-        F.col("cs"),
-        lambda c: F.struct(
-            _km_d2(F.col("e"), c["ce"]).alias("d2"),
-            c["cell"].alias("cell"),
-        ),
-    )
     probes = (
         v.filter(F.col("vec_id") < N_QUERIES)
-        .crossJoin(F.broadcast(cs))
+        .crossJoin(F.broadcast(_cent_list(cent)))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("e").alias("qe"),
             F.explode(
                 F.transform(
-                    F.slice(F.array_sort(ranked), 1, IVF_NPROBE),
+                    F.slice(
+                        F.array_sort(_cell_dists(F.col("e"))), 1, IVF_NPROBE
+                    ),
                     lambda s: s["cell"],
                 )
             ).alias("cell"),
@@ -557,13 +434,48 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("match_id"),
-            (
-                _dot(F.col("qe"), F.col("e"))
-                / (_norm(F.col("qe")) * _norm(F.col("e")))
-            ).alias("cos"),
+            cosine(F.col("qe"), F.col("e")).alias("cos"),
         )
     )
     return _topk(pairs)
+
+
+def _centroids(df: DataFrame, key: str, scale: int) -> DataFrame:
+    """(key, ce): the centroid of ``df``'s ``e`` vectors per ``key`` —
+    per dim an exact DECIMAL(28, scale) mean rounded to 6 dp (order-
+    independent, both engines agree bit-for-bit), the dims assembled
+    in order into one array. One shuffle on (key, dim_idx), one on
+    key. ``_km_means`` keeps its fused per-dim form, which needs d."""
+    dims = df.select(key, F.posexplode("e").alias("dim_idx", "x"))
+    means = dims.groupBy(key, "dim_idx").agg(
+        pround(
+            F.sum(F.col("x").cast(f"decimal(28,{scale})")).cast("double")
+            / F.count(F.lit(1)),
+            6,
+        ).alias("m")
+    )
+    return means.groupBy(key).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim_idx", "m"))),
+            lambda s: s["m"],
+        ).alias("ce")
+    )
+
+
+def _sql_centroids(rel: str, key: str, scale: int) -> str:
+    """SQL twin of ``_centroids`` over ``rel``'s (key, e) rows."""
+    mean = sql_pround(
+        f"(sum((x)::DECIMAL(28,{scale})))::DOUBLE / count(*)", 6
+    )
+    return f"""
+      SELECT {key}, list(m ORDER BY dim_idx) AS ce FROM (
+        SELECT {key}, dim_idx, {mean} AS m
+        FROM (SELECT {key}, unnest(range(0, len(e))) AS dim_idx,
+                     unnest(e) AS x
+              FROM {rel}) d
+        GROUP BY {key}, dim_idx
+      ) m
+      GROUP BY {key}"""
 
 
 OUTLIERS_PER_LABEL = 5
@@ -574,9 +486,8 @@ def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared euclidean distance) from their own label's centroid —
     candidate mislabels / junk embeddings.
 
-    Centroid = per-dim decimal-exact mean rounded to 6 dp (order-
-    independent, both engines agree bit-for-bit), assembled into one
-    array per label; distance = ||e||^2 - 2<e,c> + ||c||^2 via the same
+    Centroid = ``_centroids`` per label at DECIMAL(28,12); distance =
+    ``sq_dist``, the ||e||^2 - 2<e,c> + ||c||^2 fold of the same
     sequential-fold dot product the ANN oracles already prove
     cross-engine. Centroids are a label-count-sized broadcast, so the
     corpus is scanned twice (centroid pass + distance pass), shuffled
@@ -586,26 +497,8 @@ def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
     )
-    dims = v.select("label", F.posexplode("e").alias("d", "x"))
-    cent_d = dims.groupBy("label", "d").agg(
-        pround(
-            F.sum(F.col("x").cast("decimal(28,12)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    cent = cent_d.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "c"))),
-            lambda s: s["c"],
-        ).alias("ce")
-    )
-    dist2 = pround(
-        _dot(F.col("e"), F.col("e"))
-        - 2 * _dot(F.col("e"), F.col("ce"))
-        + _dot(F.col("ce"), F.col("ce")),
-        6,
-    )
+    cent = _centroids(v, "label", 12)
+    dist2 = pround(sq_dist(F.col("e"), F.col("ce")), 6)
     w = Window.partitionBy("label").orderBy(F.desc("dist2"), "vec_id")
     return (
         v.join(F.broadcast(cent), "label")
@@ -637,9 +530,7 @@ def text_embedding_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     va = v.select(F.col("vec_id").alias("a_id"), F.col("e").alias("ea"))
     vb = v.select(F.col("vec_id").alias("b_id"), F.col("e").alias("eb"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (
-        _norm(F.col("ea")) * _norm(F.col("eb"))
-    )
+    cos = cosine(F.col("ea"), F.col("eb"))
     return (
         pairs.join(va, "a_id")
         .join(vb, "b_id")
@@ -662,6 +553,7 @@ QUERIES = {
     "ann_cosine_topk": ann_cosine_topk,
     "ann_lsh_topk": ann_lsh_topk,
     "ann_ivf_topk": ann_ivf_topk,
+    "ann_ivf_kmeans_topk": ann_ivf_topk,
     "dedup_embedding_cosine": dedup_embedding_cosine,
     "embedding_label_outliers": embedding_label_outliers,
     "text_embedding_agreement": text_embedding_agreement,
@@ -680,6 +572,20 @@ _SQL_TOPK = f"""
       FROM pairs
     ) r
     WHERE rank <= {TOP_K}
+"""
+
+# verified near-duplicate pairs over the buckets ``b`` of ``v``: the SQL
+# twin of _cosine_pairs
+_SQL_COSINE_PAIRS = f"""
+          SELECT a_id, b_id, cos FROM (
+            SELECT a.vec_id AS a_id, c.vec_id AS b_id,
+                   {sql_cosine("a.e", "c.e")} AS cos
+            FROM v a
+            JOIN b ab ON ab.vec_id = a.vec_id
+            JOIN b cb ON cb.bucket = ab.bucket
+            JOIN v c ON c.vec_id = cb.vec_id AND a.vec_id < c.vec_id
+          ) p
+          WHERE round(cos, 9) >= {COSINE_TAU}
 """
 
 _SQL_BUCKETS = f"""
@@ -704,16 +610,14 @@ _SQL_BUCKETS = f"""
 ORACLES = {
     "embedding_norms": f"""
         SELECT vec_id, len(e) AS dim,
-               round(sqrt(list_dot_product(e, e)), 6) AS l2_norm
+               round({sql_l2norm("e")}, 6) AS l2_norm
         FROM ({_SQL_V}) v
     """,
     "ann_cosine_topk": f"""
         WITH v AS ({_SQL_V}),
         pairs AS (
           SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-                 list_dot_product(q.e, c.e)
-                   / (sqrt(list_dot_product(q.e, q.e))
-                      * sqrt(list_dot_product(c.e, c.e))) AS cos
+                 {sql_cosine("q.e", "c.e")} AS cos
           FROM v q JOIN v c ON q.vec_id < {N_QUERIES}
                            AND q.vec_id <> c.vec_id
         )
@@ -725,17 +629,7 @@ ORACLES = {
 {_SQL_BUCKETS}
         )
         SELECT a_id, b_id, round(cos, 6) AS cosine
-        FROM (
-          SELECT a.vec_id AS a_id, c.vec_id AS b_id,
-                 list_dot_product(a.e, c.e)
-                   / (sqrt(list_dot_product(a.e, a.e))
-                      * sqrt(list_dot_product(c.e, c.e))) AS cos
-          FROM v a
-          JOIN b ab ON ab.vec_id = a.vec_id
-          JOIN b cb ON cb.bucket = ab.bucket
-          JOIN v c ON c.vec_id = cb.vec_id AND a.vec_id < c.vec_id
-        ) p
-        WHERE round(cos, 9) >= {COSINE_TAU}
+        FROM ({_SQL_COSINE_PAIRS}) p
     """,
     "ann_lsh_topk": f"""
         WITH v AS ({_SQL_V}),
@@ -744,9 +638,7 @@ ORACLES = {
         ),
         pairs AS (
           SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-                 list_dot_product(q.e, c.e)
-                   / (sqrt(list_dot_product(q.e, q.e))
-                      * sqrt(list_dot_product(c.e, c.e))) AS cos
+                 {sql_cosine("q.e", "c.e")} AS cos
           FROM v q
           JOIN b qb ON qb.vec_id = q.vec_id
           JOIN b cb ON cb.bucket = qb.bucket
@@ -759,24 +651,10 @@ ORACLES = {
         WITH v AS (
           SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
         ),
-        dims AS (
-          SELECT label, i, e[i] AS x
-          FROM v, unnest(range(1, len(e) + 1)) AS t(i)
-        ),
-        cent_d AS (
-          SELECT label, i,
-                 {sql_pround("(sum(x::DECIMAL(28,12)))::DOUBLE / count(*)", 6)}
-                   AS c
-          FROM dims GROUP BY label, i
-        ),
-        cent AS (
-          SELECT label, list(c ORDER BY i) AS ce FROM cent_d GROUP BY label
-        ),
+        cent AS ({_sql_centroids("v", "label", 12)}),
         d AS (
           SELECT v.label, v.vec_id,
-                 {sql_pround(
-                     "list_dot_product(e, e) - 2 * list_dot_product(e, ce)"
-                     " + list_dot_product(ce, ce)", 6)} AS dist2
+                 {sql_pround(sql_sq_dist("e", "ce"), 6)} AS dist2
           FROM v JOIN cent USING (label)
         )
         SELECT label, vec_id, dist2, out_rank
@@ -802,9 +680,7 @@ ORACLES["text_embedding_agreement"] = f"""
            (round(cos, 9) >= {COSINE_TAU})::int AS embedding_agrees
     FROM (
       SELECT p.*,
-             list_dot_product(va.e, vb.e)
-               / (sqrt(list_dot_product(va.e, va.e))
-                  * sqrt(list_dot_product(vb.e, vb.e))) AS cos
+             {sql_cosine("va.e", "vb.e")} AS cos
       FROM pairs p
       JOIN v va ON va.vec_id = p.a_id
       JOIN v vb ON vb.vec_id = p.b_id
@@ -814,6 +690,54 @@ ORACLES["text_embedding_agreement"] = f"""
 
 
 RRF_K = 60  # standard reciprocal-rank-fusion damping constant
+
+
+def _rrf(a: DataFrame, b: DataFrame, key: str, k: int) -> DataFrame:
+    """Reciprocal-rank fusion of two (query_id, key, rank_*) lists: a
+    full outer join on (query_id, key), score = Σ 1/(RRF_K + rank) over
+    the lists a candidate appears in, and the top-k per query by the
+    9-dp-rounded score with ``key`` tie-break (``fused_rank``)."""
+    ra, rb = a.columns[2], b.columns[2]
+    j = a.join(b, ["query_id", key], "full_outer")
+    score = F.coalesce(
+        F.lit(1.0) / (F.lit(RRF_K) + F.col(ra)), F.lit(0.0)
+    ) + F.coalesce(F.lit(1.0) / (F.lit(RRF_K) + F.col(rb)), F.lit(0.0))
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(score, 9).desc(), F.col(key).asc()
+    )
+    return (
+        j.withColumn("fused_rank", F.row_number().over(w))
+        .filter(F.col("fused_rank") <= k)
+        .select(
+            "query_id",
+            key,
+            ra,
+            rb,
+            F.round(score, 6).alias("rrf_score"),
+            "fused_rank",
+        )
+        .orderBy("query_id", "fused_rank")
+    )
+
+
+def _sql_rrf(a: str, ra: str, b: str, rb: str, key: str, k: int) -> str:
+    """SQL twin of ``_rrf`` over the relations ``a`` and ``b``."""
+    return f"""
+    SELECT query_id, {key}, {ra}, {rb},
+           round(score, 6) AS rrf_score, fused_rank
+    FROM (
+      SELECT *, row_number() OVER (
+               PARTITION BY query_id
+               ORDER BY round(score, 9) DESC, {key} ASC) AS fused_rank
+      FROM (
+        SELECT query_id, {key}, {ra}, {rb},
+               coalesce(1.0 / ({RRF_K} + {ra}), 0.0)
+                 + coalesce(1.0 / ({RRF_K} + {rb}), 0.0) AS score
+        FROM {a} FULL JOIN {b} USING (query_id, {key})
+      ) j
+    ) f
+    WHERE fused_rank <= {k}
+    ORDER BY query_id, fused_rank"""
 
 
 def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,54 +762,21 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ap = ann_lsh_topk(spark, sf_dir).select(
         "query_id", "match_id", F.col("rank").alias("rank_lsh")
     )
-    j = ex.join(ap, ["query_id", "match_id"], "full_outer")
-    score = F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_K) + F.col("rank_exact")), F.lit(0.0)
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_K) + F.col("rank_lsh")), F.lit(0.0)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(score, 9).desc(), F.col("match_id").asc()
-    )
-    return (
-        j.withColumn("fused_rank", F.row_number().over(w))
-        .filter(F.col("fused_rank") <= TOP_K)
-        .select(
-            "query_id",
-            "match_id",
-            "rank_exact",
-            "rank_lsh",
-            F.round(score, 6).alias("rrf_score"),
-            "fused_rank",
-        )
-        .orderBy("query_id", "fused_rank")
-    )
+    return _rrf(ex, ap, "match_id", TOP_K)
 
 
 QUERIES["ann_rrf_fusion"] = ann_rrf_fusion
 
 ORACLES["ann_rrf_fusion"] = f"""
-    WITH ex AS ({ORACLES["ann_cosine_topk"]}),
-    ap AS ({ORACLES["ann_lsh_topk"]}),
-    j AS (
-      SELECT query_id, match_id,
-             ex.rank AS rank_exact, ap.rank AS rank_lsh,
-             coalesce(1.0 / ({RRF_K} + ex.rank), 0.0)
-               + coalesce(1.0 / ({RRF_K} + ap.rank), 0.0) AS score
-      FROM ex FULL JOIN ap USING (query_id, match_id)
+    WITH ex AS (
+      SELECT query_id, match_id, rank AS rank_exact
+      FROM ({ORACLES["ann_cosine_topk"]})
+    ),
+    ap AS (
+      SELECT query_id, match_id, rank AS rank_lsh
+      FROM ({ORACLES["ann_lsh_topk"]})
     )
-    SELECT query_id, match_id, rank_exact, rank_lsh,
-           round(score, 6) AS rrf_score, fused_rank
-    FROM (
-      SELECT j.*,
-             row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY round(score, 9) DESC, match_id
-             ) AS fused_rank
-      FROM j
-    ) r
-    WHERE fused_rank <= {TOP_K}
-    ORDER BY query_id, fused_rank
+    {_sql_rrf("ex", "rank_exact", "ap", "rank_lsh", "match_id", TOP_K)}
 """
 
 
@@ -974,17 +865,15 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one member of a mutually-dup group survives).
 
     Clusters here are the md5-derived hyperplane buckets (fully
-    oracle-checkable); a production run swaps in the IVF centroid
-    assignment from ``ann_ivf_topk`` — every downstream step is
+    oracle-checkable); a production run swaps in the k-means cell
+    assignment of ``_km_fit_shared`` — every downstream step is
     unchanged.
 
-    Determinism: per-(bucket, dim) centroid means are decimal folds
-    rounded to 6dp, assembled into ONE centroid array per bucket
-    (dim_idx-sorted on both engines); the per-vector cosine against
-    that array is then a map-side sequential array fold — fixed
-    accumulation order on both engines, the same cross-engine float
-    contract every ANN oracle already proves (list_dot_product ==
-    F.aggregate fold), rounded to 6dp and clamped to [-1, 1].
+    Determinism: the centroid array per bucket is ``_centroids`` (6-dp
+    decimal means, dim_idx-sorted on both engines); the per-vector
+    ``cosine`` against it is a map-side sequential array fold — the
+    same cross-engine float contract every ANN oracle already proves,
+    rounded to 6dp and clamped to [-1, 1].
 
     Scale: ONE corpus-scale dims shuffle for centroids (output
     buckets x dims), then the buckets-sized centroid-array relation is
@@ -1003,20 +892,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _persisted(_buckets(v))
     vb = _persisted(v.join(b, "vec_id"))
 
-    dims = vb.select("bucket", F.posexplode("e").alias("dim_idx", "x"))
-    cent_d = dims.groupBy("bucket", "dim_idx").agg(
-        pround(
-            F.sum(F.col("x").cast("decimal(28,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("m")
-    )
-    cent = cent_d.groupBy("bucket").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "m"))),
-            lambda s: s["m"],
-        ).alias("ce")
-    )
+    cent = _centroids(vb, "bucket", 6)
     # clamp: the 1e-6 quantization of the centroid means can push a
     # self-similar singleton's cosine an epsilon past 1.0.
     # persisted: THREE consumers (the dominance join's both sides and
@@ -1031,11 +907,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(-1.0),
                 F.least(
                     F.lit(1.0),
-                    pround(
-                        _dot(F.col("e"), F.col("ce"))
-                        / (_norm(F.col("e")) * _norm(F.col("ce"))),
-                        6,
-                    ),
+                    pround(cosine(F.col("e"), F.col("ce")), 6),
                 ),
             ).alias("cos_centroid"),
         )
@@ -1096,52 +968,22 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["semdedup_prune"] = semdedup_prune
 
-_SQL_EMB_PAIRS = f"""
-          SELECT a.vec_id AS a_id, c.vec_id AS b_id
-          FROM v a
-          JOIN b ab ON ab.vec_id = a.vec_id
-          JOIN b cb ON cb.bucket = ab.bucket
-          JOIN v c ON c.vec_id = cb.vec_id AND a.vec_id < c.vec_id
-          WHERE round(list_dot_product(a.e, c.e)
-                   / (sqrt(list_dot_product(a.e, a.e))
-                      * sqrt(list_dot_product(c.e, c.e))), 9)
-                >= {COSINE_TAU}
-"""
-
 ORACLES["semdedup_prune"] = f"""
     WITH v AS ({_SQL_V}),
     b AS (
 {_SQL_BUCKETS}
     ),
-    dims AS (
-      SELECT b.bucket,
-             unnest(range(0, len(v.e))) AS dim_idx,
-             unnest(v.e) AS x
-      FROM v JOIN b ON b.vec_id = v.vec_id
-    ),
-    cent AS (
-      SELECT bucket, dim_idx,
-             {sql_pround(
-                 "(sum((x)::DECIMAL(28,6)))::DOUBLE / count(*)", 6
-             )} AS m
-      FROM dims GROUP BY bucket, dim_idx
-    ),
-    centarr AS (
-      SELECT bucket, list(m ORDER BY dim_idx) AS ce
-      FROM cent GROUP BY bucket
-    ),
+    vb AS (SELECT b.bucket, v.e FROM v JOIN b ON b.vec_id = v.vec_id),
+    centarr AS ({_sql_centroids("vb", "bucket", 6)}),
     scored AS (
       SELECT v.vec_id, b.bucket,
              greatest(-1.0, least(1.0, {sql_pround(
-                 "list_dot_product(v.e, ca.ce)"
-                 " / (sqrt(list_dot_product(v.e, v.e))"
-                 "    * sqrt(list_dot_product(ca.ce, ca.ce)))", 6
-             )})) AS cos_centroid
+                 sql_cosine("v.e", "ca.ce"), 6)})) AS cos_centroid
       FROM v
       JOIN b ON b.vec_id = v.vec_id
       JOIN centarr ca ON ca.bucket = b.bucket
     ),
-    pairs AS ({_SQL_EMB_PAIRS}),
+    pairs AS ({_SQL_COSINE_PAIRS}),
     partners AS (
       SELECT a_id AS vec_id, b_id AS partner FROM pairs
       UNION ALL
@@ -1169,64 +1011,50 @@ ORACLES["semdedup_prune"] = f"""
 
 
 # --- distributed k-means oracles: the SAME unrolled Lloyd rounds as
-# _km_fit, CTE per step (c0 init, a{i} assign, m{i}/c{i} recompute,
-# afinal), so every iteration is inside the hash gate ------------------
+# _km_fit, CTE per step (c0 init, a{i} assign, c{i} recompute, afinal),
+# so every iteration is inside the hash gate ----------------------------
 
 
-def _sql_km_assign(name: str, cent_cte: str) -> str:
-    return f"""{name} AS (
+def _sql_nearest(cent_cte: str, n: int, where: str = "") -> str:
+    """(vec_id, e, cell, d2) of the n nearest cells of each vector of
+    ``v``, by (d2, cell): the Lloyd assignment at n = 1 and the IVF
+    probe at n = IVF_NPROBE (SQL twin of ``_cell_dists``)."""
+    return f"""
       SELECT vec_id, e, cell, d2 FROM (
         SELECT *, row_number() OVER (
                  PARTITION BY vec_id ORDER BY d2, cell) AS rn
         FROM (
           SELECT v.vec_id, v.e, c.cell,
-                 round(list_dot_product(v.e, v.e)
-                       - 2 * list_dot_product(v.e, c.ce)
-                       + list_dot_product(c.ce, c.ce), 9) AS d2
-          FROM v, {cent_cte} c
+                 round({sql_sq_dist("v.e", "c.ce")}, 9) AS d2
+          FROM v, {cent_cte} c {where}
         ) d
-      ) r WHERE rn = 1
-    )"""
+      ) r WHERE rn <= {n}"""
 
 
 def _sql_km_ctes() -> tuple[str, str]:
     """(CTE chain, final-centroid CTE name) for IVF_KM_ITERS rounds."""
-    mean = sql_pround("(sum((x)::DECIMAL(28,6)))::DOUBLE / count(*)", 6)
     parts = [
         f"c0 AS (SELECT vec_id::INT AS cell, e AS ce FROM v"
         f" WHERE vec_id < {IVF_CELLS})"
     ]
     prev = "c0"
     for i in range(1, IVF_KM_ITERS + 1):
-        parts.append(_sql_km_assign(f"a{i}", prev))
-        parts.append(
-            f"""m{i} AS (
-      SELECT cell, dim_idx, {mean} AS m
-      FROM (SELECT cell, unnest(range(0, len(e))) AS dim_idx,
-                   unnest(e) AS x
-            FROM a{i}) d
-      GROUP BY cell, dim_idx
-    )"""
-        )
-        parts.append(
-            f"c{i} AS (SELECT cell, list(m ORDER BY dim_idx) AS ce"
-            f" FROM m{i} GROUP BY cell)"
-        )
+        parts.append(f"a{i} AS ({_sql_nearest(prev, 1)})")
+        parts.append(f"c{i} AS ({_sql_centroids(f'a{i}', 'cell', 6)})")
         prev = f"c{i}"
-    parts.append(_sql_km_assign("afinal", prev))
+    parts.append(f"afinal AS ({_sql_nearest(prev, 1)})")
     return ",\n    ".join(parts), prev
 
 
 _KM_CTES, _KM_FINAL_CENT = _sql_km_ctes()
 
 QUERIES["ivf_kmeans_cells"] = ivf_kmeans_cells
-QUERIES["ann_ivf_kmeans_topk"] = ann_ivf_kmeans_topk
 
 ORACLES["ivf_kmeans_cells"] = f"""
     WITH v AS ({_SQL_V}),
     {_KM_CTES}
     SELECT s.cell, s.n_members, s.avg_dist2,
-           round(sqrt(list_dot_product(c.ce, c.ce)), 6) AS centroid_norm
+           round({sql_l2norm("c.ce")}, 6) AS centroid_norm
     FROM (
       SELECT cell, count(*)::BIGINT AS n_members,
              {sql_davg("d2", 6)} AS avg_dist2
@@ -1236,28 +1064,16 @@ ORACLES["ivf_kmeans_cells"] = f"""
     ORDER BY s.cell
 """
 
-ORACLES["ann_ivf_kmeans_topk"] = f"""
+ORACLES["ann_ivf_topk"] = ORACLES["ann_ivf_kmeans_topk"] = f"""
     WITH v AS ({_SQL_V}),
     {_KM_CTES},
     probes AS (
-      SELECT query_id, qe, cell FROM (
-        SELECT *, row_number() OVER (
-                 PARTITION BY query_id ORDER BY d2, cell) AS rn
-        FROM (
-          SELECT q.vec_id AS query_id, q.e AS qe, c.cell,
-                 round(list_dot_product(q.e, q.e)
-                       - 2 * list_dot_product(q.e, c.ce)
-                       + list_dot_product(c.ce, c.ce), 9) AS d2
-          FROM v q, {_KM_FINAL_CENT} c
-          WHERE q.vec_id < {N_QUERIES}
-        ) d
-      ) r WHERE rn <= {IVF_NPROBE}
+      SELECT vec_id AS query_id, e AS qe, cell FROM ({_sql_nearest(
+          _KM_FINAL_CENT, IVF_NPROBE, f"WHERE v.vec_id < {N_QUERIES}")})
     ),
     pairs AS (
       SELECT p.query_id, a.vec_id AS match_id,
-             list_dot_product(p.qe, a.e)
-               / (sqrt(list_dot_product(p.qe, p.qe))
-                  * sqrt(list_dot_product(a.e, a.e))) AS cos
+             {sql_cosine("p.qe", "a.e")} AS cos
       FROM probes p
       JOIN afinal a ON a.cell = p.cell AND a.vec_id <> p.query_id
     )
@@ -1284,8 +1100,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank for a per-cell hash threshold (keep iff md5 < cap/cell_size
     quantile) — same keep contract, no sort. The exact rank here keeps
     the operator oracle-checkable end to end."""
-    v = _km_vectors(spark, sf_dir)
-    _cent, assigned = _km_fit(v)
+    _cent, assigned = _km_fit_shared(spark, sf_dir)
     w = Window.partitionBy("cell").orderBy(
         F.md5(F.col("vec_id").cast("string")), "vec_id"
     )
@@ -1368,11 +1183,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = c.crossJoin(F.broadcast(q)).select(
         "query_id",
         "match_id",
-        F.round(
-            _dot(F.col("qe"), F.col("ce"))
-            / (_norm(F.col("qe")) * _norm(F.col("ce"))),
-            9,
-        ).alias("cos9"),
+        F.round(cosine(F.col("qe"), F.col("ce")), 9).alias("cos9"),
     )
     # all query_id-partitioned window work, THEN all match_id work:
     # same-partitioning windows stack on one Exchange each instead of
@@ -1440,9 +1251,7 @@ ORACLES["bitext_margin_mining"] = f"""
     WITH v AS ({_SQL_V}),
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-             round(list_dot_product(q.e, c.e)
-                   / (sqrt(list_dot_product(q.e, q.e))
-                      * sqrt(list_dot_product(c.e, c.e))), 9) AS cos9
+             round({sql_cosine("q.e", "c.e")}, 9) AS cos9
       FROM v q JOIN v c
         ON q.vec_id < {2 * BITEXT_Q} AND q.vec_id % 2 = 0
        AND c.vec_id % 2 = 1
@@ -1510,8 +1319,8 @@ def hybrid_prf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Alignment contract: one embedding per document (vec_id == doc_id,
     same as text_embedding_agreement).
 
-    Determinism: the centroid is a per-dim exact-decimal mean rounded
-    to 6dp (the _km_means contract), cosines are 9dp-quantized before
+    Determinism: the centroid is ``_centroids`` (per-dim exact-decimal
+    means rounded to 6dp), cosines are 9dp-quantized before
     ranking, RRF terms are fixed expression trees, and every ranking
     tie-breaks on doc_id.
 
@@ -1531,22 +1340,7 @@ def hybrid_prf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded = seed.join(
         v, seed["doc_id"] == v["vec_id"]
     ).select("query_id", "e")
-    dims = seeded.select(
-        "query_id", F.posexplode("e").alias("dim_idx", "x")
-    )
-    md = dims.groupBy("query_id", "dim_idx").agg(
-        pround(
-            F.sum(F.col("x").cast("decimal(28,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("m")
-    )
-    qv = md.groupBy("query_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "m"))),
-            lambda s: s["m"],
-        ).alias("qe")
-    )
+    qv = _centroids(seeded, "query_id", 6)
     doc_ids = _lt(spark, sf_dir, "documents").select("doc_id")
     dv = v.join(doc_ids, v["vec_id"] == doc_ids["doc_id"]).select(
         "doc_id", "e"
@@ -1554,11 +1348,7 @@ def hybrid_prf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dv.crossJoin(F.broadcast(qv)).select(
         "query_id",
         "doc_id",
-        F.round(
-            _dot(F.col("e"), F.col("qe"))
-            / (_norm(F.col("e")) * _norm(F.col("qe"))),
-            9,
-        ).alias("cos9"),
+        F.round(cosine(F.col("e"), F.col("ce")), 9).alias("cos9"),
     )
     w_d = Window.partitionBy("query_id").orderBy(
         F.col("cos9").desc(), F.col("doc_id").asc()
@@ -1571,28 +1361,7 @@ def hybrid_prf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = seed.select(
         "query_id", "doc_id", F.col("rank").alias("rank_bm25")
     )
-    j = lex.join(dense, ["query_id", "doc_id"], "full_outer")
-    score = F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_K) + F.col("rank_bm25")), F.lit(0.0)
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_K) + F.col("rank_dense")), F.lit(0.0)
-    )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.round(score, 9).desc(), F.col("doc_id").asc()
-    )
-    return (
-        j.withColumn("fused_rank", F.row_number().over(w_f))
-        .filter(F.col("fused_rank") <= PRF_TOP_K)
-        .select(
-            "query_id",
-            "doc_id",
-            "rank_bm25",
-            "rank_dense",
-            F.round(score, 6).alias("rrf_score"),
-            "fused_rank",
-        )
-        .orderBy("query_id", "fused_rank")
-    )
+    return _rrf(lex, dense, "doc_id", PRF_TOP_K)
 
 
 QUERIES["hybrid_prf_retrieval"] = hybrid_prf_retrieval
@@ -1607,28 +1376,13 @@ def _hybrid_prf_oracle() -> str:
     seeded AS (
       SELECT bm.query_id, v.e FROM bm JOIN v ON v.vec_id = bm.doc_id
     ),
-    dims AS (
-      SELECT query_id, unnest(range(len(e))) AS dim_idx, unnest(e) AS x
-      FROM seeded
-    ),
-    md AS (
-      SELECT query_id, dim_idx,
-             {sql_pround("(sum((x)::DECIMAL(28,6)))::DOUBLE / count(*)", 6)}
-               AS m
-      FROM dims GROUP BY query_id, dim_idx
-    ),
-    qv AS (
-      SELECT query_id, list(m ORDER BY dim_idx) AS qe
-      FROM md GROUP BY query_id
-    ),
+    qv AS ({_sql_centroids("seeded", "query_id", 6)}),
     dv AS (
       SELECT d.doc_id, v.e FROM documents d JOIN v ON v.vec_id = d.doc_id
     ),
     pairs AS (
       SELECT qv.query_id, dv.doc_id,
-             round(list_dot_product(dv.e, qv.qe)
-                   / (sqrt(list_dot_product(dv.e, dv.e))
-                      * sqrt(list_dot_product(qv.qe, qv.qe))), 9) AS cos9
+             round({sql_cosine("dv.e", "qv.ce")}, 9) AS cos9
       FROM dv CROSS JOIN qv
     ),
     dense AS (
@@ -1640,23 +1394,8 @@ def _hybrid_prf_oracle() -> str:
         FROM pairs
       ) r WHERE rank_dense <= {PRF_TOP_K}
     ),
-    lex AS (SELECT query_id, doc_id, rank AS rank_bm25 FROM bm),
-    j AS (
-      SELECT query_id, doc_id, rank_bm25, rank_dense,
-             coalesce(1.0 / ({RRF_K} + rank_bm25), 0.0)
-               + coalesce(1.0 / ({RRF_K} + rank_dense), 0.0) AS score
-      FROM lex FULL JOIN dense USING (query_id, doc_id)
-    )
-    SELECT query_id, doc_id, rank_bm25, rank_dense,
-           round(score, 6) AS rrf_score, fused_rank
-    FROM (
-      SELECT *, row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY round(score, 9) DESC, doc_id ASC) AS fused_rank
-      FROM j
-    ) f
-    WHERE fused_rank <= {PRF_TOP_K}
-    ORDER BY query_id, fused_rank
+    lex AS (SELECT query_id, doc_id, rank AS rank_bm25 FROM bm)
+    {_sql_rrf("lex", "rank_bm25", "dense", "rank_dense", "doc_id", PRF_TOP_K)}
 """
 
 
@@ -1674,14 +1413,13 @@ def cluster_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: majority ties break on the smaller label; purity is a
     6dp pround of exact integer counts.
 
-    Scale: reuses the persisted Lloyd fit; the label histogram is one
-    (cell, label) aggregate (cells x labels rows), everything after is
-    cells-sized."""
-    v = _km_vectors(spark, sf_dir)
+    Scale: reads the shared persisted Lloyd fit (``_km_fit_shared``);
+    the label histogram is one (cell, label) aggregate (cells x labels
+    rows), everything after is cells-sized."""
     labels = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label"
     )
-    _cent, assigned = _km_fit(v)
+    _cent, assigned = _km_fit_shared(spark, sf_dir)
     hist = (
         assigned.select("vec_id", "cell")
         .join(labels, "vec_id")
@@ -1797,11 +1535,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "doc_id",
         "ce",
-        pround(
-            _dot(F.col("qe"), F.col("ce"))
-            / (_norm(F.col("qe")) * _norm(F.col("ce"))),
-            9,
-        ).alias("cos_q"),
+        pround(cosine(F.col("qe"), F.col("ce")), 9).alias("cos_q"),
     )
     w_cand = Window.partitionBy("query_id").orderBy(
         F.col("cos_q").desc(), F.col("doc_id").asc()
@@ -1829,11 +1563,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("query_id").alias("qa"),
             "a_doc",
             "b_doc",
-            pround(
-                _dot(F.col("ae"), F.col("be"))
-                / (_norm(F.col("ae")) * _norm(F.col("be"))),
-                9,
-            ).alias("cos_ab"),
+            pround(cosine(F.col("ae"), F.col("be")), 9).alias("cos_ab"),
         )
     )
     lam, one_m = MMR_LAMBDA, 1.0 - MMR_LAMBDA
@@ -1902,19 +1632,16 @@ QUERIES["mmr_diversified_topk"] = mmr_diversified_topk
 
 def _sql_mmr_oracle() -> str:
     lam, one_m = MMR_LAMBDA, 1.0 - MMR_LAMBDA
-    cos = (
-        "list_dot_product({x}.e, {y}.e) / (sqrt(list_dot_product({x}.e,"
-        " {x}.e)) * sqrt(list_dot_product({y}.e, {y}.e)))"
-    )
+    cos_qc = sql_pround(sql_cosine("q.e", "c.e"), 9)
     parts = [
         f"v AS ({_SQL_V})",
         f"""cands AS (
       SELECT query_id, doc_id, cos_q FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-               {sql_pround(cos.format(x='q', y='c'), 9)} AS cos_q,
+               {cos_qc} AS cos_q,
                row_number() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {sql_pround(cos.format(x='q', y='c'), 9)} DESC,
+                 ORDER BY {cos_qc} DESC,
                           c.vec_id ASC) AS crank
         FROM v q JOIN v c ON q.vec_id < {N_QUERIES}
                          AND q.vec_id <> c.vec_id
@@ -1922,7 +1649,7 @@ def _sql_mmr_oracle() -> str:
     )""",
         f"""pairsim AS (
       SELECT a.query_id, a.doc_id AS a_doc, b.doc_id AS b_doc,
-             {sql_pround(cos.format(x='va', y='vb'), 9)} AS cos_ab
+             {sql_pround(sql_cosine("va.e", "vb.e"), 9)} AS cos_ab
       FROM cands a JOIN cands b
         ON a.query_id = b.query_id AND a.doc_id <> b.doc_id
       JOIN v va ON va.vec_id = a.doc_id

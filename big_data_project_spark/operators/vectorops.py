@@ -21,21 +21,23 @@ Scale design:
 Portability: quantization rounds with the floor(x + 0.5) form (Spark
 round() is HALF_UP, DuckDB's is half-to-even — they disagree exactly on
 the .5 grid a quantizer lands on); per-element double arithmetic and
-left-to-right array folds are bit-identical across engines (same
-precedent as similarity._dot).
+left-to-right array folds are bit-identical across engines (the
+``dot`` / ``l2norm`` folds of functions/portable.py).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import (
     davg,
+    dot,
     dsum_exact,
+    l2norm,
     pround,
     sql_davg,
     sql_pround,
@@ -43,10 +45,6 @@ from ..functions.portable import (
 
 QBITS_MAX = 127  # symmetric int8: q in [-127, 127]
 _EPS = 1e-12  # zero-vector guard: scale never divides by zero
-
-
-def _fold_sum(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,19 +85,11 @@ def embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     err2 = F.zip_with(
         F.col("e"), F.col("rec"), lambda a, b: (a - b) * (a - b)
     )
-    sq_err = _fold_sum(err2)
+    sq_err = F.aggregate(err2, F.lit(0.0), lambda acc, x: acc + x)
     max_err = F.array_max(
         F.zip_with(F.col("e"), F.col("rec"), lambda a, b: F.abs(a - b))
     )
-    dot = _fold_sum(
-        F.zip_with(F.col("e"), F.col("rec"), lambda a, b: a * b)
-    )
-    norm_e = F.sqrt(
-        _fold_sum(F.transform(F.col("e"), lambda x: x * x))
-    )
-    norm_r = F.sqrt(
-        _fold_sum(F.transform(F.col("rec"), lambda x: x * x))
-    )
+    norm_e, norm_r = l2norm(F.col("e")), l2norm(F.col("rec"))
     return (
         staged.select(
             "vec_id",
@@ -108,7 +98,9 @@ def embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.sqrt(sq_err / F.size("e")), 9).alias("rmse"),
             pround(max_err, 9).alias("max_abs_err"),
             pround(
-                dot / F.greatest(norm_e * norm_r, F.lit(_EPS)), 6
+                dot(F.col("e"), F.col("rec"))
+                / F.greatest(norm_e * norm_r, F.lit(_EPS)),
+                6,
             ).alias("cos_recon"),
         )
         .orderBy("vec_id")

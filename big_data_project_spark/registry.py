@@ -130,8 +130,8 @@ for _mod in _MODULES:
 # most keys. Whole list = 58 + new; if the driver truncates at ~50
 # the r04 tail rolls to round 10 (the driver-SF pytest gate —
 # tests/test_oracle_parity_driver_sf.py — covers the roll-over keys
-# meanwhile). Rows-only keys (sketches, ann_ivf_topk,
-# embedding_pca_variance, ml/demand RF keys) are deliberately NOT
+# meanwhile). Rows-only keys (sketches, embedding_pca_variance,
+# ml/demand RF keys) are deliberately NOT
 # promoted — a `no_oracle` row burns a driver slot reporting nothing;
 # their evidence is the bounded unit tests + the oracle-backed
 # companion keys.

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from big_data_project_spark.operators import dedup, multimodal, similarity
 from big_data_project_spark.functions.portable import hash60
 from big_data_project_spark.operators.dedup import _jaccard_pairs
+from big_data_project_spark.registry import QUERIES
 
 from tests.conftest import SF_DIR
 
@@ -160,8 +161,9 @@ def test_ivf_recall_vs_exact(spark):
 def test_kmeans_ivf_recall_and_partition(spark):
     """The distributed-Lloyd IVF: the final assignment must be a
     PARTITION of the corpus (every vector in exactly one cell), and
-    3/16-probe retrieval must recover most of the exact top-k — same
-    bar as the driver-side-fit ann_ivf_topk."""
+    3/16-probe retrieval under the ``ann_ivf_kmeans_topk`` key must
+    recover most of the exact top-k — the same bar as
+    test_ivf_recall_vs_exact."""
     from big_data_project_spark.catalog import load_table
 
     cells = similarity.ivf_kmeans_cells(spark, SF_DIR).collect()
@@ -176,7 +178,7 @@ def test_kmeans_ivf_recall_and_partition(spark):
     }
     km = {
         (r["query_id"], r["match_id"])
-        for r in similarity.ann_ivf_kmeans_topk(spark, SF_DIR).collect()
+        for r in QUERIES["ann_ivf_kmeans_topk"](spark, SF_DIR).collect()
     }
     recall = len(exact & km) / len(exact)
     assert recall >= 0.5, f"k-means IVF recall too low: {recall:.2f}"

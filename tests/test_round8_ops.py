@@ -53,14 +53,35 @@ def test_wrs_top_k_uses_take_ordered(spark):
     assert skeys == sorted(skeys, reverse=True)
 
 
-def test_km_fit_shared_is_memoized(spark):
-    """Both IVF consumers must get the SAME persisted fit objects."""
-    from big_data_project_spark.operators.similarity import (
-        _km_fit_shared,
-    )
+def test_km_fit_shared_is_memoized(spark, monkeypatch):
+    """Every consumer of the k-means cells reads ONE fit: from a
+    released memo tier, the five keys over the cells build the Lloyd
+    pipeline (``_km_fit``) exactly once, and later lookups get the
+    same persisted fit objects."""
+    from big_data_project_spark.caching import release_caches
+    from big_data_project_spark.operators import similarity
+    from big_data_project_spark.registry import QUERIES
 
-    c1, a1 = _km_fit_shared(spark, SF_DIR)
-    c2, a2 = _km_fit_shared(spark, SF_DIR)
+    fit = similarity._km_fit
+    calls = []
+
+    def counted(v):
+        calls.append(v)
+        return fit(v)
+
+    monkeypatch.setattr(similarity, "_km_fit", counted)
+    release_caches()
+    for name in (
+        "ann_ivf_topk",
+        "ann_ivf_kmeans_topk",
+        "ivf_kmeans_cells",
+        "cluster_balanced_sample",
+        "cluster_label_purity",
+    ):
+        QUERIES[name](spark, SF_DIR).collect()
+    assert len(calls) == 1
+    c1, a1 = similarity._km_fit_shared(spark, SF_DIR)
+    c2, a2 = similarity._km_fit_shared(spark, SF_DIR)
     assert c1 is c2 and a1 is a2
 
 
